@@ -198,7 +198,8 @@ object Clustering {
   }
 
   /** Durable alternating checkpoint, the reference's scheme (reference:
-    * chinese_label_propagation.py:189-197): write parquet, read back.
+    * chinese_label_propagation.py:189-197): write parquet, read back
+    * with the written schema (which skips Spark's schema-inference job).
     * A `LATEST_ITER` marker is committed AFTER the table is durable —
     * written to a temp name and RENAMED into place (atomic on
     * HDFS/posix), both through the Hadoop filesystem of `dir`, so the
@@ -219,7 +220,7 @@ object Clustering {
     finally out.close()
     fs.delete(marker, false)
     require(fs.rename(tmp, marker), s"could not commit checkpoint marker $marker")
-    spark.read.parquet(path)
+    spark.read.schema(df.schema).parquet(path)
   }
 
   /** Scan a [[parquetCheckpointer]] directory for the last completed

@@ -4,6 +4,7 @@ import java.net.URI
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Name → storage-path table registry with idempotent materialization.
   *
@@ -22,6 +23,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * holds on object stores (where rename is a non-atomic copy) exactly
   * as it does on HDFS, and a failed job never leaves a half-written
   * table registered.
+  *
+  * Layout of a versioned table `t` under the base directory:
+  * {{{
+  * t.versions/
+  *   vNNNNN.parquet/        one immutable directory per version
+  *     part-*.parquet
+  *     _SUCCESS             the committer's completeness marker
+  *     _graft_schema.json   the written DataFrame's schema, as JSON
+  *   _CURRENT               one-line pointer: the live version number
+  *   _DEPS                  AssetDag's dependency tokens (asset tables only)
+  * }}}
+  * The schema file is written after the data job and before the
+  * `_CURRENT` commit, so every committed version carries one. Reads pass
+  * it to `spark.read.schema`, which skips the job Spark otherwise
+  * submits to infer the schema from a footer. A missing or unparsable
+  * schema file (an un-versioned path, an external table, a crash between
+  * the data write and the schema write) means "infer". The file's leading
+  * `_` hides it from Spark's file index and from `*.parquet` globs.
   */
 final class Catalog(val spark: SparkSession, baseDir: String) {
 
@@ -51,9 +70,33 @@ final class Catalog(val spark: SparkSession, baseDir: String) {
 
   /** Read a materialized table and register it as a temp view. */
   def get(name: String): DataFrame = {
-    val df = spark.read.parquet(dataDir(name))
+    val df = read(dataDir(name))
     df.createOrReplaceTempView(name)
     df
+  }
+
+  /** Read a parquet directory with its schema file's schema, or by
+    * inference when the file is missing or unparsable. Spark applies
+    * `asNullable` to a given file schema, so both paths yield the same
+    * schema.
+    */
+  private def read(dir: String): DataFrame =
+    readSchema(dir).fold(spark.read)(s => spark.read.schema(s)).parquet(dir)
+
+  private def readSchema(dir: String): Option[StructType] =
+    scala.util.Try {
+      val in = fs(dir).open(new Path(dir, Catalog.SchemaFile))
+      try DataType.fromJson(new String(
+        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+        java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    }.toOption.collect { case s: StructType => s }
+
+  /** One small-file PUT, no rename: safe on object stores. */
+  private def writeSchema(dir: String, schema: StructType): Unit = {
+    val out = fs(dir).create(new Path(dir, Catalog.SchemaFile), true)
+    try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   /** Write `df` as parquet under `name` (overwrite), re-read + register.
@@ -93,15 +136,16 @@ final class Catalog(val spark: SparkSession, baseDir: String) {
     * drop a legacy un-versioned `<name>.parquet` directory once a
     * pointer-committed version supersedes it. Shared by
     * [[materializeAtomic]] and [[materializeAudited]] (which audits
-    * between the data write and the pointer commit).
+    * between the data write and the pointer commit). The written
+    * version is read back only when there is an audit.
     */
   private def publishVersion(name: String, df: DataFrame,
-      audit: DataFrame => Unit = _ => ()): Long = {
+      audit: Option[DataFrame => Unit] = None): Long = {
     val v = versions(name).lastOption.getOrElse(0L) + 1L
     val vp = versionPath(name, v)
     try {
-      df.write.mode("overwrite").parquet(vp)
-      audit(spark.read.parquet(vp))
+      writeVersion(vp, df)
+      audit.foreach(_(read(vp)))
     } catch {
       case e: Throwable => fs(vp).delete(new Path(vp), true); throw e
     }
@@ -128,6 +172,12 @@ final class Catalog(val spark: SparkSession, baseDir: String) {
   private def versionPath(name: String, v: Long): String =
     f"${versionsDir(name)}/v$v%05d.parquet"
   private def pointerPath(name: String): String = s"${versionsDir(name)}/_CURRENT"
+
+  /** The data job, then the schema file; the caller commits the pointer. */
+  private def writeVersion(vp: String, df: DataFrame): Unit = {
+    df.write.mode("overwrite").parquet(vp)
+    writeSchema(vp, df.schema)
+  }
 
   /** All COMPLETE versions of `name`, ascending — complete means the
     * directory carries the committer's `_SUCCESS` marker, so a version
@@ -188,7 +238,7 @@ final class Catalog(val spark: SparkSession, baseDir: String) {
   def getVersioned(name: String): DataFrame = {
     val v = currentVersion(name).getOrElse(
       throw new java.util.NoSuchElementException(s"$name has no versions"))
-    val df = spark.read.parquet(versionPath(name, v))
+    val df = read(versionPath(name, v))
     df.createOrReplaceTempView(name)
     df
   }
@@ -198,7 +248,7 @@ final class Catalog(val spark: SparkSession, baseDir: String) {
     */
   def materializeVersioned(name: String, df: DataFrame): (DataFrame, Long) = {
     val v = versions(name).lastOption.getOrElse(0L) + 1L
-    df.write.mode("overwrite").parquet(versionPath(name, v))
+    writeVersion(versionPath(name, v), df)
     writePointer(name, v)
     (getVersioned(name), v)
   }
@@ -208,7 +258,7 @@ final class Catalog(val spark: SparkSession, baseDir: String) {
     */
   def getVersion(name: String, v: Long): DataFrame = {
     require(versions(name).contains(v), s"$name has no version $v")
-    spark.read.parquet(versionPath(name, v))
+    read(versionPath(name, v))
   }
 
   /** Repoint `_CURRENT` at an existing version — no data movement; the
@@ -250,7 +300,7 @@ final class Catalog(val spark: SparkSession, baseDir: String) {
   def materializeAudited(name: String, df: DataFrame,
       audits: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
     require(audits.nonEmpty, "materializeAudited needs at least one audit")
-    publishVersion(name, df, audit = { written =>
+    publishVersion(name, df, audit = Some { written =>
       val row = written.agg(audits.head._2.as(audits.head._1),
         audits.tail.map { case (n, c) => c.as(n) }: _*).head()
       val failed = audits.indices.collect {
@@ -411,4 +461,9 @@ final class Catalog(val spark: SparkSession, baseDir: String) {
     spark.sql(s"CACHE TABLE $name AS TABLE ${name}_source")
     spark.table(name)
   }
+}
+
+object Catalog {
+  /** Per-version schema file; see the class doc for the layout. */
+  val SchemaFile = "_graft_schema.json"
 }

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.graftshim.CoreShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.core.Catalog
@@ -104,6 +107,61 @@ class CatalogSpec extends SparkTestBase {
       .getParent + "/ic.versions/_CURRENT").delete()
     assert(cat.currentVersion("ic") === Some(1L))
     assert(cat.get("ic").count() === 1L)
+  }
+
+  /** `body`'s result and the Spark jobs it submitted; the listener bus
+    * is drained before and after, so no job start is missed or leaked.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    CoreShim.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      CoreShim.drainListenerBus(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("get of a published table submits no Spark job and keeps the " +
+      "inferred schema") {
+    val dir = Files.createTempDirectory("graft-catalog").toString
+    import spark.implicits._
+    val df = Seq((1L, Map("a" -> Seq(1, 2)), ("x", 2.0)),
+      (2L, Map.empty[String, Seq[Int]], ("y", 3.0))).toDF("id", "m", "s")
+    new Catalog(spark, dir).materializeAtomic("sj", df)
+    // a fresh catalog over the same directory: nothing cached in-session
+    val cat = new Catalog(spark, dir)
+    val (got, jobs) = jobsOf(cat.get("sj"))
+    assert(jobs === 0, "the schema file replaces Spark's footer-inference job")
+    assert(got.schema === spark.read.parquet(cat.dataDir("sj")).schema)
+    assert(got.orderBy("id").collect().toSeq === df.collect().toSeq)
+  }
+
+  test("a version whose schema file is missing or truncated reads by inference") {
+    val cat = newCatalog()
+    import spark.implicits._
+    cat.materializeAtomic("sf", Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
+    val dir = cat.dataDir("sf")
+    val inferred = spark.read.parquet(dir).schema
+    val schemaFile = new Path(dir, Catalog.SchemaFile)
+    val fs = schemaFile.getFileSystem(sc.hadoopConfiguration)
+    val json = Files.readAllBytes(java.nio.file.Paths.get(dir, Catalog.SchemaFile))
+    // a crash mid-write of the schema file leaves a prefix of it
+    val out = fs.create(schemaFile, true)
+    try out.write(json.take(json.length / 2)) finally out.close()
+    val (truncated, truncatedJobs) = jobsOf(cat.get("sf"))
+    assert(truncatedJobs > 0, "an unparsable schema file falls back to inference")
+    assert(truncated.schema === inferred)
+    assert(truncated.count() === 2L)
+    assert(fs.delete(schemaFile, false))
+    val (missing, missingJobs) = jobsOf(cat.get("sf"))
+    assert(missingJobs > 0, "a missing schema file falls back to inference")
+    assert(missing.schema === inferred)
+    assert(missing.count() === 2L)
   }
 
   test("materialize + get round-trips and registers a view") {

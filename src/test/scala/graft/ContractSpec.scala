@@ -16,12 +16,9 @@ class ContractSpec extends AnyFunSuite {
     */
   private val rowsOnly = Set(
     "q_domain_cluster",          // Chinese Whispers (seeded iteration)
-    "q_domain_defrag_pieces",    // window-UDAF defrag (recursive-CTE dead end)
-    "q_domain_defrag_textreuses",
     // q_dedup_groups_conv and q_graph_cc are NOT here: converged
     // component labels are a fixpoint, re-derivable by a recursive-CTE
     // transitive closure — those two convergence loops ARE oracle-checked
-    "q_graph_pagerank_conv",     // observed-convergence PageRank
     // q_graph_kcore_conv is NOT here: the k-core fixpoint is unique and
     // schedule-independent, so a bounded unroll past convergence
     // re-derives it exactly (kcoreConvOracle)

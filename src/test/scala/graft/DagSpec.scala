@@ -315,4 +315,19 @@ class DagSpec extends SparkTestBase {
     // deterministic builders → the refreshed cone reproduces the data
     assert(cat.get("clustered_defrag_pieces").count() === nodes)
   }
+
+  test("every asset of the textreuse graph publishes a schema file that " +
+      "equals the inferred schema") {
+    val cat = newCatalog()
+    val dag = new AssetDag(cat)
+    val raw = rawHits()
+    dag.asset("raw_textreuses")(_ => raw)
+    TextReuseAssets.register(dag, clusterMaxIter = 2)
+    dag.materialize()
+    for (n <- dag.names) {
+      val dir = cat.dataDir(n)
+      assert(new java.io.File(dir, Catalog.SchemaFile).isFile, s"$n has no schema file")
+      assert(cat.get(n).schema === spark.read.parquet(dir).schema, n)
+    }
+  }
 }
