@@ -43,12 +43,15 @@ object Bench {
     // NonFatal only, and LOUD: a silently failed prebuild would revert
     // the first domain query to chain-build-inclusive timing with no
     // way to tell from the JSON
+    val warm0 = System.nanoTime()
     try graft.queries.QueryCaches.prebuildAll(spark, sfDir)
     catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] WARM-UP PREBUILD FAILED (timings for the " +
           s"first domain query will include the chain build): $e")
     }
+    System.err.println("[bench] warm-up prebuild %.1f s".formatLocal(
+      java.util.Locale.ROOT, (System.nanoTime() - warm0) / 1e9))
     SparkEntry.queries.headOption.foreach { case (_, fn) =>
       try run(fn) catch { case _: Throwable => }
     }

@@ -100,28 +100,21 @@ object ScaleSmoke10 {
     }
 
     // one scale in memory at a time (the ScaleSmoke measurement note);
-    // only the memo chains the smoke queries actually consume are
-    // prebuilt — the DECLARED upstream closure of: pieces (cluster),
-    // co-purchase edges (cc), co-supply edges (scc/dag_paths), dedup
-    // pairs (groups_cc), verified matches (entities). Prebuilding every
-    // module step was the r11 disk kill: the book reception chain —
-    // consumed by NO smoke query — alone spilled ~65 GB of shuffle at
-    // sf10 (clusters saturate mod 500 while pieces grow 100×, so its
-    // per-cluster expansion joins carry 120M-row sides)
+    // only the registry stages the smoke queries actually consume are
+    // warmed, each with the upstream stages its builder reads: pieces
+    // (cluster), co-purchase edges (cc), co-supply edges
+    // (scc/dag_paths), dedup pairs (groups_cc), verified matches
+    // (entities). Warming the whole list is a disk kill at sf10: the
+    // book reception chain — consumed by NO smoke query — alone spilled
+    // ~65 GB of shuffle (clusters saturate mod 500 while pieces grow
+    // 100×, so its per-cluster expansion joins carry 120M-row sides)
     def measure(dir: String): Map[String, Double] = {
       graft.queries.QueryCaches.clearAll()
       System.gc()
-      val steps = graft.queries.DomainQueries.prebuildSteps ++
-        graft.queries.GraphQueries.prebuildSteps ++
-        graft.queries.DedupQueries.prebuildSteps
-      val graph = steps.map(st => st.name -> st.deps)
-      val needed = Set("domain.pieces", "graph.co_supply_49",
-        "graph.co_purchase", "dedup.pairs", "dedup.verified_30")
-      val keep = graft.core.Dag.upstream(graph, needed) ++ needed
-      val byName = steps.map(st => st.name -> st).toMap
-      graft.core.Dag.topoSort(graph).filter(keep).foreach { n =>
+      Seq("domain.pieces", "graph.co_supply_49", "graph.co_purchase",
+          "dedup.pairs", "dedup.verified_30").foreach { n =>
         println(s"[scale10] prebuild $n @ $dir")
-        byName(n).run(spark, dir)
+        graft.queries.QueryCaches.prebuild(spark, dir, n)
         // GC after every prebuild step, not just between queries:
         // ContextCleaner reclaims superseded shuffle files only on a
         // JVM GC, and the sf10 chain builds over 60M-row inputs

@@ -1,7 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Gaps-and-islands interval union + pairwise coverage metrics.
@@ -40,23 +39,6 @@ import org.apache.spark.sql.functions._
   * reference hints BROADCAST at coverages.py:156).
   */
 object Coverages {
-
-  /** Assign island ids to intervals grouped by `keys`, ordered by
-    * (start, end). Output = input columns + `islandCol`. (Reference-
-    * shaped helper; the stats paths below use the telescoping
-    * formulation instead and never materialize ids.)
-    */
-  def withIslandIds(df: DataFrame, keys: Seq[String], startCol: String,
-      endCol: String, islandCol: String): DataFrame = {
-    val part = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(startCol), col(endCol))
-    val prevEnd = max(col(endCol)).over(part.rowsBetween(Window.unboundedPreceding, -1))
-    // default (RANGE) frame for the running sum: peers share the id
-    df.withColumn("_new_island",
-        when(prevEnd + 1 >= col(startCol), 0).otherwise(1))
-      .withColumn(islandCol, sum(col("_new_island")).over(part))
-      .drop("_new_island")
-  }
 
   /** Merged-interval (island) stats per key group: island count and
     * total covered length (sum over islands of max(end)−min(start)).

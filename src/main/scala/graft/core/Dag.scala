@@ -1,10 +1,9 @@
 package graft.core
 
-/** Pure dependency-graph machinery shared by [[AssetDag]] (the
-  * catalog-backed asset materializer) and the query modules' prebuild
-  * registry (graft.queries.QueryCaches): deterministic topological
-  * order with loud cycle/unknown-dep diagnostics, plus transitive
-  * closure in either direction.
+/** Pure dependency-graph machinery behind [[AssetDag]] (the
+  * catalog-backed asset materializer): deterministic topological order
+  * with loud cycle/unknown-dep diagnostics, plus transitive closure in
+  * either direction.
   *
   * All functions take the graph as `(name, deps)` pairs in REGISTRATION
   * order and are deterministic: among simultaneously-ready nodes the

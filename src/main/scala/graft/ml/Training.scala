@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.IntegralDivide
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
@@ -128,18 +128,6 @@ object Training {
       }
       w
     } finally { base.unpersist(); () }
-  }
-
-  /** The trained head as a table: (dim, w_s) — the persistable /
-    * oracle-checkable form of [[trainLogisticWeights]].
-    */
-  def logisticTrain(spark: SparkSession, vectors: DataFrame, labelCol: String,
-      iters: Int = 3, lrNum: Long = 1L, lrDen: Long = 2L): DataFrame = {
-    import spark.implicits._
-    trainLogisticWeights(vectors, labelCol, iters, lrNum, lrDen)
-      .toIndexedSeq.zipWithIndex
-      .map { case (wv, d) => (d.toLong, wv) }
-      .toDF("dim", "w_s")
   }
 
   /** Map-only corpus scoring with a trained head: (vec_id, p_s, pred)

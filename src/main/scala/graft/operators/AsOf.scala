@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -99,7 +99,4 @@ object AsOf {
     val rv = valueCols.map(resolve(rPlan.output, _, "right"))
     Shim.ofRows(spark, graft.plans.AsOfJoin(lPlan, rPlan, lk, rk, lt, rt, rv))
   }
-
-  /** Column helper: epoch seconds of a timestamp (both engines agree). */
-  def epochSeconds(c: Column): Column = c.cast("long")
 }

@@ -17,46 +17,31 @@ object BasketQueries {
 
   private val minSupport = 5L
 
-  // the prune/cap chain (frequentItems) is the shared expensive stage
-  // of all three faces — memoized persisted per (session, dir) like the
-  // graph family's edge bases
-  private val stageCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def fi(s: SparkSession, dir: String): DataFrame =
-    stageCache.computeIfAbsent((s, dir), _ => {
+  // the prune/cap chain (Basket.frequentItems) is the shared expensive stage
+  // of all three faces — a registry stage like the graph family's edge
+  // bases
+  private[queries] val frequentItems = QueryCaches.frame("basket.frequent_items") {
+    (s, dir) =>
       val items = Tables(s, dir, "lineitem")
         .join(Tables(s, dir, "part"),
           col("l_partkey") === col("p_partkey"))
         .select(col("l_orderkey").as("bk"),
           concat(col("p_brand"), lit("/"), col("p_size").cast("string")).as("item"))
       Basket.frequentItems(items, "bk", "item", minSupport, maxBasketItems = 10000)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-
-  /** Release the memoized stage (see QueryCaches.clearAll). */
-  def clearCache(): Unit = {
-    stageCache.values().forEach(QueryCaches.safeUnpersist)
-    stageCache.clear()
   }
-
-  /** Declared warm-up step (see DomainQueries.prebuildSteps). */
-  def prebuildSteps: Seq[QueryCaches.PrebuildStep] = Seq(
-    QueryCaches.PrebuildStep("basket.frequent_items", Nil, (s, dir) =>
-      fi(s, dir).write.format("noop").mode("overwrite").save()))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // frequent co-occurring item pairs with support (Apriori-pruned,
     // hot-basket-capped — see Basket Scaladoc for the 100 TB posture)
     "q_basket_pairs" -> ((s, dir) =>
-      Basket.frequentPairs(fi(s, dir), minSupport)),
+      Basket.frequentPairs(frequentItems(s, dir), minSupport)),
 
     // association rules a→b: confidence / lift in floor-scaled ppm,
     // DECIMAL(38,0) intermediates (lift's pair·N·1e6 wraps a silent
     // long past ~3e6 baskets)
     "q_basket_rules" -> ((s, dir) =>
-      Basket.associationRules(fi(s, dir), minSupport)),
+      Basket.associationRules(frequentItems(s, dir), minSupport)),
 
     // "customers who bought X also bought" — top-3 partners per item by
     // (lift, confidence, id) with a fully deterministic tie-break; the
@@ -66,7 +51,7 @@ object BasketQueries {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("antecedent"))
         .orderBy(col("lift_ppm").desc, col("conf_ppm").desc, col("consequent"))
-      Basket.associationRules(fi(s, dir), minSupport)
+      Basket.associationRules(frequentItems(s, dir), minSupport)
         .withColumn("rk", row_number().over(w).cast("long"))
         .where(col("rk") <= 3)
         .select("antecedent", "consequent", "conf_ppm", "lift_ppm", "rk")

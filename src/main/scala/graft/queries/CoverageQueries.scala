@@ -12,30 +12,13 @@ import graft.analytics.Coverages
   */
 object CoverageQueries {
 
-  /** The synthesized interval table feeds four branches of the coverage
-    * plan (two island sides, two length builds) — persist it per
-    * (session, dir) so the distinct-shuffle runs once, the same role the
-    * reference's CACHE TABLE plays (spark_utils.py:57-65).
+  /** Deterministic textreuses-shaped intervals from lineitem. The
+    * table feeds four branches of the coverage plan (two island sides,
+    * two length builds), so it is a registry stage: the distinct-shuffle
+    * runs once per (session, dir).
     */
-  private val trCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Deterministic textreuses-shaped intervals from lineitem. */
-  def synthTextreuses(s: SparkSession, dir: String): DataFrame =
-    trCache.computeIfAbsent((s, dir), _ =>
-      buildSynthTextreuses(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Release every memoized entry (see QueryCaches.clearAll). */
-  def clearCache(): Unit = {
-    trCache.values().forEach(QueryCaches.safeUnpersist)
-    trCache.clear()
-  }
-
-  /** Declared warm-up step (see DomainQueries.prebuildSteps). */
-  def prebuildSteps: Seq[QueryCaches.PrebuildStep] = Seq(
-    QueryCaches.PrebuildStep("coverage.synth_textreuses", Nil, (s, dir) =>
-      synthTextreuses(s, dir).write.format("noop").mode("overwrite").save()))
+  private[queries] val synthTextreuses =
+    QueryCaches.frame("coverage.synth_textreuses")(buildSynthTextreuses)
 
   private def buildSynthTextreuses(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "lineitem")

@@ -129,86 +129,53 @@ object DedupQueries {
        |    i -> (((th[i+1] * 131 + th[i+2]) % $P) * 131 + th[i+3]) % $P)
        |  ELSE [] END""".stripMargin
 
-  /** Memoized near-dup pair graph (doc_id window candidates → exact
-    * 3-gram Jaccard ≥ 0.2) — the shared input of all three dedup-groups
-    * faces (fixed-round, converged, star-contraction), which would
-    * otherwise each recompute the shingle + verify pipeline. Same
-    * per-(session, dir) pattern as GraphQueries' edge bases.
+  /** Near-dup pair graph (doc_id window candidates → exact 3-gram
+    * Jaccard ≥ 0.2) — the shared input of all three dedup-groups faces
+    * (fixed-round, converged, star-contraction), which would otherwise
+    * each recompute the shingle + verify pipeline.
     */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private[queries] val dedupPairs = QueryCaches.frame("dedup.pairs") { (s, dir) =>
+    val docs = Tables(s, dir, "documents")
+    val ids = docs.select(col("doc_id"))
+    val cands = ids.select(col("doc_id").as("doc_id_a"),
+        explode(sequence(col("doc_id") + 1, col("doc_id") + 25)).as("doc_id_b"))
+      .join(ids.select(col("doc_id").as("doc_id_b")), Seq("doc_id_b"), "left_semi")
+    Dedup.ngramJaccard(docs, cands).where(col("jaccard") >= 0.2)
+      .select("doc_id_a", "doc_id_b")
+  }
 
-  private def dedupPairs(s: SparkSession, dir: String): DataFrame =
-    pairCache.computeIfAbsent((s, dir), _ => {
-      val docs = Tables(s, dir, "documents")
-      val ids = docs.select(col("doc_id"))
-      val cands = ids.select(col("doc_id").as("doc_id_a"),
-          explode(sequence(col("doc_id") + 1, col("doc_id") + 25)).as("doc_id_b"))
-        .join(ids.select(col("doc_id").as("doc_id_b")), Seq("doc_id_b"), "left_semi")
-      Dedup.ngramJaccard(docs, cands).where(col("jaccard") >= 0.2)
-        .select("doc_id_a", "doc_id_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-
-  /** Memoized HISTORY band table for the incremental minhash face —
-    * the persisted artifact the operator's contract is built around:
-    * in production, yesterday's bands are a materialized table and only
+  /** HISTORY band table for the incremental minhash face — the
+    * persisted artifact the operator's contract is built around: in
+    * production, yesterday's bands are a materialized table and only
     * the new batch is shingled/minhashed on the clock. Recomputing the
     * history bands from raw text inside the query face would charge
     * the incremental operator the full-corpus cost it exists to avoid.
     */
-  private val historyBandCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private[queries] val historyBands = QueryCaches.frame("dedup.history_bands")((s, dir) =>
+    Dedup.minhashBands(Tables(s, dir, "documents").where(col("doc_id") < 250)))
 
-  private[queries] def historyBands(s: SparkSession, dir: String): DataFrame =
-    historyBandCache.computeIfAbsent((s, dir), _ =>
-      Dedup.minhashBands(Tables(s, dir, "documents").where(col("doc_id") < 250))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Memoized sorted-neighborhood verified matches — the shared verify
-    * stage of the whole entity-resolution family (flagship, incremental,
-    * golden record, dedup weights, dendrogram levels, and the
+  /** Sorted-neighborhood verified matches — the shared verify stage of
+    * the whole entity-resolution family (flagship, incremental, golden
+    * record, dedup weights, dendrogram levels, and the
     * sorted-neighborhood face itself). The banded levenshtein is the
     * expensive stage; recomputing it per face charged the family ~8
     * verify passes (the dendrogram face alone paid 3× — measured 48 s
-    * at sf0.1, 8.6 s memoized). In production the verified match table
-    * IS a persisted artifact (the historyBands convention). Keyed by
-    * maxDist: the dendrogram ladder verifies a 90-wide band, the match
-    * faces the standard 30.
+    * at sf0.1, 8.6 s shared). In production the verified match table
+    * IS a persisted artifact (the historyBands convention). One stage
+    * per maxDist: the dendrogram ladder verifies a 90-wide band, the
+    * match faces the standard 30.
     */
-  private val verifiedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
-
-  private def verifiedMatches(s: SparkSession, dir: String,
-      maxDist: Int = 30): DataFrame =
-    verifiedCache.computeIfAbsent((s, dir, maxDist), _ => {
-      val docs = Tables(s, dir, "documents")
-      Dedup.editDistanceVerify(docs,
-          Dedup.sortedNeighborhoodCandidates(docs, window = 10),
-          prefixLen = 120, maxDist = maxDist)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-
-  def clearCache(): Unit = {
-    pairCache.values().forEach(QueryCaches.safeUnpersist)
-    pairCache.clear()
-    historyBandCache.values().forEach(QueryCaches.safeUnpersist)
-    historyBandCache.clear()
-    verifiedCache.values().forEach(QueryCaches.safeUnpersist)
-    verifiedCache.clear()
+  private def verifiedMatches(s: SparkSession, dir: String, maxDist: Int): DataFrame = {
+    val docs = Tables(s, dir, "documents")
+    Dedup.editDistanceVerify(docs,
+      Dedup.sortedNeighborhoodCandidates(docs, window = 10),
+      prefixLen = 120, maxDist = maxDist)
   }
 
-  /** Declared warm-up steps (see DomainQueries.prebuildSteps). */
-  def prebuildSteps: Seq[QueryCaches.PrebuildStep] = Seq(
-    QueryCaches.PrebuildStep("dedup.pairs", Nil, (s, dir) =>
-      dedupPairs(s, dir).write.format("noop").mode("overwrite").save()),
-    QueryCaches.PrebuildStep("dedup.history_bands", Nil, (s, dir) =>
-      historyBands(s, dir).write.format("noop").mode("overwrite").save()),
-    QueryCaches.PrebuildStep("dedup.verified_30", Nil, (s, dir) =>
-      verifiedMatches(s, dir).write.format("noop").mode("overwrite").save()),
-    QueryCaches.PrebuildStep("dedup.verified_90", Nil, (s, dir) =>
-      verifiedMatches(s, dir, maxDist = 90)
-        .write.format("noop").mode("overwrite").save()))
+  private[queries] val verified30 =
+    QueryCaches.frame("dedup.verified_30")(verifiedMatches(_, _, 30))
+  private[queries] val verified90 =
+    QueryCaches.frame("dedup.verified_90")(verifiedMatches(_, _, 90))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -246,7 +213,7 @@ object DedupQueries {
     // third candidate family (prefix-locality) composed with the
     // confirmation pass
     "q_dedup_sorted_neighborhood" -> ((s, dir) =>
-      verifiedMatches(s, dir)),
+      verified30(s, dir)),
 
     // single-link dendrogram levels: exact connected components of the
     // verified match graph at a similarity-threshold ladder — the
@@ -265,7 +232,7 @@ object DedupQueries {
     // the verify stage itself is memoized across the family
     "q_dedup_single_link_levels" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
-      val verified = verifiedMatches(s, dir, maxDist = 90)
+      val verified = verified90(s, dir)
       val nodes = docs.select(col("doc_id").as("node"))
       // CONCURRENT levels (r13, re-confirmed by measurement in r14):
       // the r14 lock-step alternative — one batched star contraction
@@ -311,7 +278,7 @@ object DedupQueries {
     // dedup (keeps all copies for robustness, un-biases the mixture)
     "q_pipeline_dedup_weights" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
-      val edges = verifiedMatches(s, dir).where(col("sim_s") >= 500000L)
+      val edges = verified30(s, dir).where(col("sim_s") >= 500000L)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       val ent = graft.graph.ConnectedComponents.largeStarSmallStar(
           edges, nodes = Some(docs.select(col("doc_id").as("node"))))
@@ -331,7 +298,7 @@ object DedupQueries {
     // max/min-struct aggregates — no per-entity sort of the corpus
     "q_pipeline_golden_record" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
-      val edges = verifiedMatches(s, dir).where(col("sim_s") >= 500000L)
+      val edges = verified30(s, dir).where(col("sim_s") >= 500000L)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       val ent = graft.graph.ConnectedComponents.largeStarSmallStar(
           edges, nodes = Some(docs.select(col("doc_id").as("node"))))
@@ -365,7 +332,7 @@ object DedupQueries {
       // historyBands convention): yesterday's old-old matches are
       // already on disk, today only new-touching pairs verify —
       // compute-wise both read the memoized table here
-      val v = verifiedMatches(s, dir).where(col("sim_s") >= 500000L)
+      val v = verified30(s, dir).where(col("sim_s") >= 500000L)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       val oldEdges = v.where(col("src") < 400 && col("dst") < 400)
       val newEdges = v.where(col("src") >= 400 || col("dst") >= 400)
@@ -391,7 +358,7 @@ object DedupQueries {
     // (id pairs shuffle, the text stays in its scan + verify join)
     "q_pipeline_entities" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
-      val edges = verifiedMatches(s, dir).where(col("sim_s") >= 500000L)
+      val edges = verified30(s, dir).where(col("sim_s") >= 500000L)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       val ent = graft.graph.ConnectedComponents.largeStarSmallStar(
         edges, nodes = Some(docs.select(col("doc_id").as("node"))))

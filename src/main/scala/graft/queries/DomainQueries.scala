@@ -148,84 +148,25 @@ object DomainQueries {
   private def spEarliest2(clustered: DataFrame): DataFrame =
     graft.analytics.Reception.earliestPieces(clustered)
 
-  /** Shared upstream stages, memoized per (session, dir) and persisted:
-    * eight domain queries start from the same chain, and within one
-    * query it feeds multiple branches — the same role the reference's
-    * CACHE TABLE plays for shared upstream assets (spark_utils.py:57-65).
-    */
-  private val stageCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  // Shared upstream stages, persisted once per (session, dir) in the
+  // QueryCaches registry: eight domain queries start from the same
+  // chain, and within one query it feeds multiple branches.
 
-  private def memo(s: SparkSession, dir: String, stage: String)(
-      build: => DataFrame): DataFrame =
-    stageCache.computeIfAbsent((s, dir, stage), _ =>
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  private[queries] val trsIds = QueryCaches.frame("domain.trs_ids")((s, dir) =>
+    TextReuse.textreuseIds(synthRaw(s, dir)))
 
-  /** Release every memoized stage (see QueryCaches.clearAll): without
-    * this, re-dumping parquet under a live dir would serve stale cached
-    * stages, and dead-session entries would pin DataFrames JVM-long.
-    */
-  def clearCache(): Unit = {
-    stageCache.values().forEach(QueryCaches.safeUnpersist)
-    stageCache.clear()
-  }
+  private[queries] val textreuses = QueryCaches.frame("domain.textreuses")((s, dir) =>
+    TextReuse.textreuses(synthRaw(s, dir), trsIds(s, dir)))
 
-  /** Each memoized upstream stage as a DECLARED warm-up step (noop
-    * write — runs the full plan and populates the persisted cache).
-    * Bench runs these during warm-up so per-query timings measure the
-    * operator under test, not the one-time shared-chain construction
-    * that the alphabetically first domain query would otherwise absorb.
-    * The deps mirror the memo call graph; QueryCaches.prebuildAll
-    * topologically orders the union of all modules' steps, so each
-    * stage's noop write pays only its own work.
-    */
-  def prebuildSteps: Seq[QueryCaches.PrebuildStep] = {
-    def step(name: String, deps: String*)(
-        f: (SparkSession, String) => DataFrame) =
-      QueryCaches.PrebuildStep(name, deps,
-        (s, dir) => f(s, dir).write.format("noop").mode("overwrite").save())
-    Seq(
-      step("domain.textreuses")(textreuses),
-      step("domain.trs_ids")(trsIds),
-      step("domain.pieces", "domain.textreuses")(pieces),
-      step("domain.defrag_mappings", "domain.pieces")(defragMappings),
-      step("domain.mids", "domain.trs_ids")(spMids),
-      step("domain.edition_ids", "domain.mids")(spEditionIds),
-      step("domain.edition_authors", "domain.edition_ids")(spEditionAuthors),
-      step("domain.tem", "domain.trs_ids", "domain.mids", "domain.edition_ids")(spTem),
-      step("domain.twm", "domain.trs_ids", "domain.mids", "domain.edition_ids")(spTwm),
-      step("domain.epd", "domain.mids", "domain.edition_ids")(spEpd),
-      step("domain.mpd2", "domain.mids", "domain.edition_ids")(spMpd2),
-      step("domain.book_earliest", "domain.trs_ids", "domain.mids",
-        "domain.pieces")(spBookEarliest),
-      step("domain.book_denorm", "domain.book_earliest", "domain.pieces")(spBookDenorm))
-  }
-
-  private def textreuses(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "textreuses") {
-      val raw = synthRaw(s, dir)
-      TextReuse.textreuses(raw, TextReuse.textreuseIds(raw))
-    }
-
-  private def pieces(s: SparkSession, dir: String): DataFrame = {
-    // resolve the upstream memo BEFORE entering this key's computeIfAbsent
-    // — nested computeIfAbsent on one ConcurrentHashMap throws
-    // "Recursive update"
-    val tr = textreuses(s, dir)
-    memo(s, dir, "pieces")(TextReuse.origPieces(tr))
-  }
-
-  private def trsIds(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "trs_ids")(TextReuse.textreuseIds(synthRaw(s, dir)))
+  private[queries] val pieces = QueryCaches.frame("domain.pieces")((s, dir) =>
+    TextReuse.origPieces(textreuses(s, dir)))
 
   /** defrag piece mappings — the UDAF scan output, shared by
     * defrag_pieces and defrag_textreuses (the reference materializes
     * piece_id_mappings once for the same reason, notebook cells 5-6).
     */
-  private def defragMappings(s: SparkSession, dir: String): DataFrame = {
-    val p = pieces(s, dir)
-    memo(s, dir, "defrag_mappings")(Defrag.pieceIdMappings(p))
-  }
+  private[queries] val defragMappings = QueryCaches.frame("domain.defrag_mappings")(
+    (s, dir) => Defrag.pieceIdMappings(pieces(s, dir)))
 
   // ---- synthetic book-corpus metadata (reference upstream assets
   // manifestation_ids / manifestation_publication_date / ecco_core /
@@ -236,11 +177,8 @@ object DomainQueries {
   private def mnum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     substring(c, 2, 10).cast("int")
 
-  private def spMids(s: SparkSession, dir: String): DataFrame = {
-    val ids = trsIds(s, dir)
-    memo(s, dir, "mids")(
-      Ids.dictionary(ids, "manifestation_id", "manifestation_id_i"))
-  }
+  private[queries] val spMids = QueryCaches.frame("domain.mids")((s, dir) =>
+    Ids.dictionary(trsIds(s, dir), "manifestation_id", "manifestation_id_i"))
 
   /** ECCO corpus: manifestations with numeric part ≡ 0 (mod 3). */
   private def spEcco(mids: DataFrame): DataFrame =
@@ -318,12 +256,9 @@ object DomainQueries {
         concat(lit("phw_"), col("edition_label"))).as("work_label"))
 
   /** (edition_id_i, edition_label) dictionary. */
-  private def spEditionIds(s: SparkSession, dir: String): DataFrame = {
-    val mids = spMids(s, dir)
-    memo(s, dir, "edition_ids")(
-      Ids.dictionary(spEditionLabels(mids.select("manifestation_id")),
-        "edition_label", "edition_id_i"))
-  }
+  private[queries] val spEditionIds = QueryCaches.frame("domain.edition_ids")((s, dir) =>
+    Ids.dictionary(spEditionLabels(spMids(s, dir).select("manifestation_id")),
+      "edition_label", "edition_id_i"))
 
   /** Synthetic actor links: every edition gets a primary link whose
     * author-role flag depends on the edition number (≡1 mod 3 → the
@@ -342,46 +277,33 @@ object DomainQueries {
           lit(1).as("actor_role_author")))
   }
 
-  private def spEditionAuthors(s: SparkSession, dir: String): DataFrame = {
-    val editionIds = spEditionIds(s, dir)
-    memo(s, dir, "edition_authors") {
+  private[queries] val spEditionAuthors = QueryCaches.frame("domain.edition_authors") {
+    (s, dir) =>
+      val editionIds = spEditionIds(s, dir)
       val links = spActorLinks(editionIds)
       graft.analytics.Metadata.editionAuthors(
         editionIds.select(col("edition_label").as("edition_id"), col("edition_id_i")),
         links, Ids.dictionary(links, "actor_id", "actor_id_i"))
-    }
   }
 
-  /** textreuse_edition_mapping: trs → edition_id_i. (Upstream memos are
-    * resolved before entering this key's memo — see `pieces`.)
-    */
-  private def spTem(s: SparkSession, dir: String): DataFrame = {
-    val ids = trsIds(s, dir)
-    val mids = spMids(s, dir)
-    val editionIds = spEditionIds(s, dir)
-    memo(s, dir, "tem")(
-      ids.select("trs_id", "manifestation_id")
-        .join(spEditionLabels(mids.select("manifestation_id")),
-          Seq("manifestation_id"))
-        .join(editionIds, Seq("edition_label"))
-        .select("trs_id", "edition_id_i"))
-  }
+  /** textreuse_edition_mapping: trs → edition_id_i. */
+  private[queries] val spTem = QueryCaches.frame("domain.tem")((s, dir) =>
+    trsIds(s, dir).select("trs_id", "manifestation_id")
+      .join(spEditionLabels(spMids(s, dir).select("manifestation_id")),
+        Seq("manifestation_id"))
+      .join(spEditionIds(s, dir), Seq("edition_label"))
+      .select("trs_id", "edition_id_i"))
 
   /** textreuse_work_mapping: trs → work_id_i (via edition → work). */
-  private def spTwm(s: SparkSession, dir: String): DataFrame = {
-    val ids = trsIds(s, dir)
-    val mids = spMids(s, dir)
-    val editionIds = spEditionIds(s, dir)
-    memo(s, dir, "twm") {
-      val works = spWorkLabels(editionIds)
-      val workDict = Ids.dictionary(works, "work_label", "work_id_i")
-      ids.select("trs_id", "manifestation_id")
-        .join(spEditionLabels(mids.select("manifestation_id")),
-          Seq("manifestation_id"))
-        .join(works, Seq("edition_label"))
-        .join(workDict, Seq("work_label"))
-        .select("trs_id", "work_id_i")
-    }
+  private[queries] val spTwm = QueryCaches.frame("domain.twm") { (s, dir) =>
+    val works = spWorkLabels(spEditionIds(s, dir))
+    val workDict = Ids.dictionary(works, "work_label", "work_id_i")
+    trsIds(s, dir).select("trs_id", "manifestation_id")
+      .join(spEditionLabels(spMids(s, dir).select("manifestation_id")),
+        Seq("manifestation_id"))
+      .join(works, Seq("edition_label"))
+      .join(workDict, Seq("work_label"))
+      .select("trs_id", "work_id_i")
   }
 
   // ---- synthetic raw corpus core tables (reference upstream assets
@@ -465,45 +387,39 @@ object DomainQueries {
       .select("manifestation_id_i", "work_id_i")
   }
 
-  private def spEpd(s: SparkSession, dir: String): DataFrame = {
+  private[queries] val spEpd = QueryCaches.frame("domain.epd") { (s, dir) =>
     val mids = spMids(s, dir)
     val editionIds = spEditionIds(s, dir)
-    val emap = spEditionMapping(s, dir)
-    memo(s, dir, "epd")(
-      graft.analytics.Metadata.editionPublicationDate(
-        mids, emap,
-        editionIds.select(col("edition_id_i"), col("edition_label").as("edition_id")),
-        spEstcCore(editionIds),
-        spEeboCore(mids), spEccoCore(mids), spNewsCore(mids)))
+    graft.analytics.Metadata.editionPublicationDate(
+      mids, spEditionMapping(s, dir),
+      editionIds.select(col("edition_id_i"), col("edition_label").as("edition_id")),
+      spEstcCore(editionIds),
+      spEeboCore(mids), spEccoCore(mids), spNewsCore(mids))
   }
 
   /** The full manifestation_publication_date asset over the synthetic
     * cores (distinct from spMpd, the simplified date used by the book
     * chain).
     */
-  private def spMpd2(s: SparkSession, dir: String): DataFrame = {
+  private[queries] val spMpd2 = QueryCaches.frame("domain.mpd2") { (s, dir) =>
     val mids = spMids(s, dir)
     val editionIds = spEditionIds(s, dir)
-    val emap = spEditionMapping(s, dir)
-    memo(s, dir, "mpd2")(
-      graft.analytics.Metadata.manifestationPublicationDate(
-        mids, emap,
-        editionIds.select(col("edition_id_i"), col("edition_label").as("edition_id")),
-        spEstcCore(editionIds),
-        spEeboCore(mids), spEccoCore(mids), spNewsCore(mids)))
+    graft.analytics.Metadata.manifestationPublicationDate(
+      mids, spEditionMapping(s, dir),
+      editionIds.select(col("edition_id_i"), col("edition_label").as("edition_id")),
+      spEstcCore(editionIds),
+      spEeboCore(mids), spEccoCore(mids), spNewsCore(mids))
   }
 
-  private def spBookEarliest(s: SparkSession, dir: String): DataFrame = {
-    val ids = trsIds(s, dir)
-    val mids = spMids(s, dir)
-    val mpd = spMpd(s, dir)
-    val clustered = spClustered(pieces(s, dir)).select("cluster_id", "piece_id", "trs_id")
-    memo(s, dir, "book_earliest")(
+  private[queries] val spBookEarliest = QueryCaches.frame("domain.book_earliest") {
+    (s, dir) =>
+      val mids = spMids(s, dir)
       graft.analytics.BookBased.earliestBookAndPiecesByCluster(
-        clustered,
-        ids.join(mids, Seq("manifestation_id")).select("trs_id", "manifestation_id_i"),
+        spClustered(pieces(s, dir)).select("cluster_id", "piece_id", "trs_id"),
+        trsIds(s, dir).join(mids, Seq("manifestation_id"))
+          .select("trs_id", "manifestation_id_i"),
         mids.select("manifestation_id_i", "manifestation_id"),
-        mpd, spEcco(mids), spEebo(mids)))
+        spMpd(s, dir), spEcco(mids), spEebo(mids))
   }
 
   private def spBookEdges(s: SparkSession, dir: String): DataFrame = {
@@ -516,12 +432,9 @@ object DomainQueries {
       spEcco(mids), spEebo(mids))
   }
 
-  private def spBookDenorm(s: SparkSession, dir: String): DataFrame = {
-    val edges = spBookEdges(s, dir)
-    val p = pieces(s, dir)
-    memo(s, dir, "book_denorm")(
-      graft.analytics.BookBased.receptionEdgesBetweenBooksDenorm(edges, p))
-  }
+  private[queries] val spBookDenorm = QueryCaches.frame("domain.book_denorm")((s, dir) =>
+    graft.analytics.BookBased.receptionEdgesBetweenBooksDenorm(
+      spBookEdges(s, dir), pieces(s, dir)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

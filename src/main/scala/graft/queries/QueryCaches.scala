@@ -1,73 +1,101 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** Central release hook for the per-(session, dir) stage memos the query
-  * modules keep (the in-session analogue of the reference's CACHE TABLE,
-  * spark_utils.py:57-65). Harness mains (Verify/Bench) call this in
-  * teardown so cached DataFrames never outlive the run: entries keyed by
-  * a stopped session would otherwise pin their plans for the JVM
-  * lifetime, and a parquet dir re-dumped under the same path in a live
-  * session would be served stale from the memo.
+/** The query layer's one stage registry: every shared upstream stage a
+  * query module builds once per (session, dir) — the in-session
+  * analogue of the reference's CACHE TABLE (spark_utils.py:57-65).
+  *
+  * A stage is declared once, with its name, as a [[Stage]] value; its
+  * builder simply calls the upstream stages it reads. Builds run inside
+  * the registry's reentrant monitor, so a nested stage call resolves
+  * (or builds) its upstream first. Harness mains call [[clearAll]] in
+  * teardown: entries keyed by a stopped session would otherwise pin
+  * their plans for the JVM lifetime, and a parquet dir re-dumped under
+  * the same path in a live session would be served stale.
   */
 object QueryCaches {
 
-  /** One declared warm-up unit: a named builder for a memoized shared
-    * stage plus the stage names it consumes. The modules publish their
-    * stages as steps and [[prebuildAll]] orders them by the DECLARED
-    * graph (graft.core.Dag) instead of a hardcoded call chain — the
-    * same deps-driven control surface the asset materializer
-    * (graft.core.AssetDag) gives persisted tables, applied to the
-    * in-session caches. Adding a stage means declaring its deps, not
-    * finding the right line in a fragile ordered list; a cycle or a
-    * misspelled dep fails loudly at warm-up, not as a mysteriously cold
-    * first query.
-    */
-  final case class PrebuildStep(name: String, deps: Seq[String],
-    run: (SparkSession, String) => Unit)
+  private val stages =
+    scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String, String), Any]
 
-  /** Unpersist a memoized stage unless its owning SparkContext is
-    * already stopped. The memos are keyed by session; if a harness or
-    * spec stopped that session, the cached blocks died with its
-    * BlockManager and `unpersist()` NPEs on the null driver endpoint —
-    * there is nothing left to free, so dead-session entries are simply
-    * dropped from the map.
+  /** A named stage: `apply` returns the (session, dir) instance,
+    * building it on first use; `warm` also materializes a frame stage.
     */
-  def safeUnpersist(df: org.apache.spark.sql.DataFrame): Unit =
+  final class Stage[A] private[QueryCaches] (val name: String,
+      build: (SparkSession, String) => A, force: A => Unit) {
+    def apply(s: SparkSession, dir: String): A = QueryCaches.synchronized {
+      val key = (s, dir, name)
+      stages.get(key) match {
+        case Some(v) => v.asInstanceOf[A]
+        case None =>
+          val v = build(s, dir)
+          stages(key) = v
+          v
+      }
+    }
+    def warm(s: SparkSession, dir: String): Unit = force(apply(s, dir))
+  }
+
+  /** A persisted DataFrame stage; warming runs its full plan through
+    * the noop sink, which populates the cache.
+    */
+  def frame(name: String)(build: (SparkSession, String) => DataFrame): Stage[DataFrame] =
+    new Stage[DataFrame](name,
+      (s, dir) => build(s, dir).persist(StorageLevel.MEMORY_AND_DISK),
+      _.write.format("noop").mode("overwrite").save())
+
+  /** A driver-side value stage (trained weights, a checkpointed frame):
+    * building it is all the warming there is.
+    */
+  def value[A](name: String)(build: (SparkSession, String) => A): Stage[A] =
+    new Stage[A](name, build, _ => ())
+
+  /** Every warm-up stage, upstream first, so each stage's warm-up pays
+    * only its own work. `graph.scc_labels` is left out on purpose: the
+    * SCC faces price that labelling on the clock. Bench warms the whole
+    * list before timing, so the first face over each chain measures its
+    * own operator, not the shared-chain build.
+    */
+  private def warmList: Seq[Stage[_]] = {
+    import DomainQueries._, GraphQueries._, DedupQueries._, TextQueries._
+    Seq(trsIds, textreuses, pieces, defragMappings, spMids, spEditionIds,
+      spEditionAuthors, spTem, spTwm, spEpd, spMpd2, spBookEarliest, spBookDenorm,
+      CoverageQueries.synthTextreuses,
+      coSupply40, coSupply49, coPurchase, sccLabelsBatch1,
+      trainedBpe, trainedTextHead, noveltyHistory, winnowHistory,
+      dedupPairs, historyBands, verified30, verified90,
+      SimilarityQueries.trainedHead, SimilarityQueries.ncmProtos,
+      BasketQueries.frequentItems)
+  }
+
+  def prebuildAll(s: SparkSession, dir: String): Unit =
+    warmList.foreach(_.warm(s, dir))
+
+  /** Warm one named warm-list stage (and, through its builder, its
+    * upstreams) — for a harness that needs only part of the list.
+    */
+  def prebuild(s: SparkSession, dir: String, name: String): Unit =
+    warmList.find(_.name == name)
+      .getOrElse(throw new IllegalArgumentException(s"not a warm-up stage: $name"))
+      .warm(s, dir)
+
+  /** The registry's current entries, keyed by (session, dir, stage). */
+  private[graft] def held: Map[(SparkSession, String, String), Any] =
+    synchronized(stages.toMap)
+
+  /** Unpersist a held frame unless its owning SparkContext is already
+    * stopped: the cached blocks died with that session's BlockManager
+    * and `unpersist()` NPEs on the null driver endpoint, so there is
+    * nothing left to free.
+    */
+  private def safeUnpersist(df: Dataset[_]): Unit =
     try { if (!df.sparkSession.sparkContext.isStopped) df.unpersist() }
     catch { case scala.util.control.NonFatal(_) => () }
 
-  def clearAll(): Unit = {
-    DomainQueries.clearCache()
-    CoverageQueries.clearCache()
-    GraphQueries.clearCache()
-    TextQueries.clearCache()
-    DedupQueries.clearCache()
-    SimilarityQueries.clearCache()
-    BasketQueries.clearCache()
-  }
-
-  /** Every module's declared warm-up steps, in registration order. */
-  def prebuildSteps: Seq[PrebuildStep] =
-    DomainQueries.prebuildSteps ++
-      CoverageQueries.prebuildSteps ++
-      GraphQueries.prebuildSteps ++
-      TextQueries.prebuildSteps ++
-      DedupQueries.prebuildSteps ++
-      SimilarityQueries.prebuildSteps ++
-      BasketQueries.prebuildSteps
-
-  /** Build + materialize every memoized shared stage (Bench warm-up):
-    * the shared-chain construction cost is paid before timing starts,
-    * so the first query over each chain measures its operator only.
-    * Order comes from the steps' declared dependency graph — each
-    * stage's noop write therefore pays only its OWN work, with its
-    * upstream memos already hot.
-    */
-  def prebuildAll(s: SparkSession, dir: String): Unit = {
-    val steps = prebuildSteps
-    val byName = steps.map(st => st.name -> st).toMap
-    graft.core.Dag.topoSort(steps.map(st => st.name -> st.deps))
-      .foreach(n => byName(n).run(s, dir))
+  def clearAll(): Unit = synchronized {
+    stages.values.foreach { case df: Dataset[_] => safeUnpersist(df); case _ => }
+    stages.clear()
   }
 }

@@ -335,31 +335,22 @@ object SimilarityQueries {
        |      0), 1000000) AS ps
        |  FROM fz)""".stripMargin
 
-  /** Memoized trained head for the ml eval family (train / eval / auc /
-    * sweep share one 3-iteration GD fit — the pipeline shape: fit once,
-    * measure and threshold the same head). Weights are a dims-length
-    * driver array; Bench's prebuild pays the training jobs off the
-    * clock, clearCache drops the memo between runs.
-    */
-  private val headCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Long]]()
-
   private def labeledEmb(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings").withColumn("y", pmod(col("label"), lit(2)))
 
-  private def trainedHead(s: SparkSession, dir: String): Array[Long] =
-    headCache.computeIfAbsent((s, dir), _ =>
-      graft.ml.Training.trainLogisticWeights(labeledEmb(s, dir), "y", iters = 3))
-
-  /** Memoized NCM prototype table — one centroid pass shared by the
-    * train and eval faces (the headCache pattern).
+  /** Trained head for the ml eval family (train / eval / auc / sweep
+    * share one 3-iteration GD fit — the pipeline shape: fit once,
+    * measure and threshold the same head). Weights are a dims-length
+    * driver array; Bench's warm-up pays the training jobs off the clock.
     */
-  private val ncmCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(Long, Array[Long])]]()
+  private[queries] val trainedHead = QueryCaches.value("similarity.trained_head")(
+    (s, dir) => graft.ml.Training.trainLogisticWeights(labeledEmb(s, dir), "y", iters = 3))
 
-  private def ncmProtos(s: SparkSession, dir: String): Seq[(Long, Array[Long])] =
-    ncmCache.computeIfAbsent((s, dir), _ =>
-      graft.ml.Training.centroidWeights(Tables(s, dir, "embeddings"), "label"))
+  /** NCM prototype table — one centroid pass shared by the train and
+    * eval faces (the trainedHead pattern).
+    */
+  private[queries] val ncmProtos = QueryCaches.value("similarity.ncm_protos")((s, dir) =>
+    graft.ml.Training.centroidWeights(Tables(s, dir, "embeddings"), "label"))
 
   /** Scored corpus (y, p_s) under the memoized head — the shared input
     * of the AUC and threshold-sweep faces.
@@ -373,18 +364,6 @@ object SimilarityQueries {
 
   /** ONE Scala value feeds the sweep face and its oracle's unnest list. */
   private val sweepThresholds: Seq[Long] = (0 to 10).map(_ * 100000L)
-
-  def clearCache(): Unit = { headCache.clear(); ncmCache.clear() }
-
-  /** Declared warm-up steps (see DomainQueries.prebuildSteps): the
-    * shared GD fits — weights are driver-side, so there is nothing to
-    * materialize beyond the fit itself.
-    */
-  def prebuildSteps: Seq[QueryCaches.PrebuildStep] = Seq(
-    QueryCaches.PrebuildStep("similarity.trained_head", Nil,
-      (s, dir) => { trainedHead(s, dir); () }),
-    QueryCaches.PrebuildStep("similarity.ncm_protos", Nil,
-      (s, dir) => { ncmProtos(s, dir); () }))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -343,26 +343,12 @@ object TextQueries {
       s"array_to_string(regexp_extract_all($e, " +
         """'(?is)<a(\s[^>]*)?>(.*?)</a\s*>', 2), '')""")
 
-  /** Memoized 3-round BPE training per (session, dir): the trained
-    * tokenizer is one shared artifact read by three query faces. The
-    * final state is localCheckpointed by the trainer (no unpersist
-    * needed); clearCache drops the references.
+  /** 3-round BPE training per (session, dir): the trained tokenizer is
+    * one shared artifact read by three query faces. The final state is
+    * localCheckpointed by the trainer, so there is nothing to unpersist.
     */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[graft.text.Bpe.Merge], DataFrame)]()
-
-  private def trainedBpe(s: SparkSession, dir: String): (Seq[graft.text.Bpe.Merge], DataFrame) =
-    bpeCache.computeIfAbsent((s, dir),
-      _ => graft.text.Bpe.train(Tables(s, dir, "documents"), rounds = 3))
-
-  /** Memoized fastText-style TEXT head: hashing-trick token-count
-    * features (graft.ml.Features) labeled lang=='en', fit with the
-    * 3-iteration fixed-point GD of graft.ml.Training — ONE shared fit
-    * behind the q_ml_text_train/_eval faces (fit once, measure the same
-    * head, the SimilarityQueries.headCache pattern).
-    */
-  private val textHeadCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Array[Long]]()
+  private[queries] val trainedBpe = QueryCaches.value("text.bpe")((s, dir) =>
+    graft.text.Bpe.train(Tables(s, dir, "documents"), rounds = 3))
 
   /** ONE Scala value feeds the Spark featurizer and the oracle's mod.
     * 64 buckets: measured on the fixture, 16 buckets collision-wash the
@@ -379,36 +365,30 @@ object TextQueries {
         (col("lang") === "en").cast("long").as("y")), "vec_id")
   }
 
-  private def trainedTextHead(s: SparkSession, dir: String): Array[Long] =
-    textHeadCache.computeIfAbsent((s, dir), _ =>
-      graft.ml.Training.trainLogisticWeights(
-        labeledTextFeatures(s, dir), "y", iters = 3))
-
-  /** Memoized first-seen shingle history (doc_id < 250) — the carried
-    * artifact of the incremental novelty face, the historyBands
-    * pattern: in production yesterday's first-seen table is persisted
-    * and only the new drop is shingled on the clock.
+  /** fastText-style TEXT head: hashing-trick token-count features
+    * (graft.ml.Features) labeled lang=='en', fit with the 3-iteration
+    * fixed-point GD of graft.ml.Training — ONE shared fit behind the
+    * q_ml_text_train/_eval faces (fit once, measure the same head, the
+    * SimilarityQueries.trainedHead pattern).
     */
-  private val noveltyHistoryCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private[queries] val trainedTextHead = QueryCaches.value("text.text_head")((s, dir) =>
+    graft.ml.Training.trainLogisticWeights(labeledTextFeatures(s, dir), "y", iters = 3))
 
-  private def noveltyHistory(s: SparkSession, dir: String): DataFrame =
-    noveltyHistoryCache.computeIfAbsent((s, dir), _ =>
-      TextAnalysis.firstSeenShingles(
-        Tables(s, dir, "documents").where(col("doc_id") < 250))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Memoized winnow-fingerprint history (doc_id < 250) — the carried
-    * artifact of the incremental winnow face.
+  /** First-seen shingle history (doc_id < 250) — the carried artifact
+    * of the incremental novelty face, the historyBands pattern: in
+    * production yesterday's first-seen table is persisted and only the
+    * new drop is shingled on the clock.
     */
-  private val winnowHistoryCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private[queries] val noveltyHistory = QueryCaches.frame("text.novelty_history")(
+    (s, dir) => TextAnalysis.firstSeenShingles(
+      Tables(s, dir, "documents").where(col("doc_id") < 250)))
 
-  private def winnowHistory(s: SparkSession, dir: String): DataFrame =
-    winnowHistoryCache.computeIfAbsent((s, dir), _ =>
-      TextAnalysis.winnowFingerprints(
-        Tables(s, dir, "documents").where(col("doc_id") < 250))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  /** Winnow-fingerprint history (doc_id < 250) — the carried artifact
+    * of the incremental winnow face.
+    */
+  private[queries] val winnowHistory = QueryCaches.frame("text.winnow_history")(
+    (s, dir) => TextAnalysis.winnowFingerprints(
+      Tables(s, dir, "documents").where(col("doc_id") < 250)))
 
   /** Scored corpus (vec_id, p_s, pred, y) under the memoized text head
     * — the shared input of the eval/AUC/sweep text faces.
@@ -427,28 +407,6 @@ object TextQueries {
 
   /** ONE Scala value feeds the stump face and its oracle. */
   private val stumpThresholds: Seq[Long] = Seq(1L, 2L, 4L, 8L)
-
-  def clearCache(): Unit = {
-    bpeCache.clear()
-    textHeadCache.clear()
-    noveltyHistoryCache.values().forEach(QueryCaches.safeUnpersist)
-    noveltyHistoryCache.clear()
-    winnowHistoryCache.values().forEach(QueryCaches.safeUnpersist)
-    winnowHistoryCache.clear()
-  }
-
-  /** Declared warm-up steps (see DomainQueries.prebuildSteps): the
-    * memoized trainings, paid off the bench clock.
-    */
-  def prebuildSteps: Seq[QueryCaches.PrebuildStep] = Seq(
-    QueryCaches.PrebuildStep("text.bpe", Nil,
-      (s, dir) => { trainedBpe(s, dir); () }),
-    QueryCaches.PrebuildStep("text.text_head", Nil,
-      (s, dir) => { trainedTextHead(s, dir); () }),
-    QueryCaches.PrebuildStep("text.novelty_history", Nil, (s, dir) =>
-      noveltyHistory(s, dir).write.format("noop").mode("overwrite").save()),
-    QueryCaches.PrebuildStep("text.winnow_history", Nil, (s, dir) =>
-      winnowHistory(s, dir).write.format("noop").mode("overwrite").save()))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -239,12 +239,6 @@ object Bpe {
     state.select(col("doc_id"), posexplode(col("syms")).as(Seq("pos", "sym")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("sym"))
 
-  /** The learned merge table: (round, sym_a, sym_b, pair_count, new_sym). */
-  def bpeMerges(docs: DataFrame, rounds: Int): DataFrame = {
-    val (merges, _) = train(docs, rounds)
-    mergesToDf(docs.sparkSession, merges)
-  }
-
   /** The segmented corpus after `rounds` merges, exploded for exact
     * comparison: (doc_id, pos, sym) with pos dense from 0 in order.
     */

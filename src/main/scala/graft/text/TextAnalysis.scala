@@ -184,17 +184,6 @@ object TextAnalysis {
       :+ pred.as("pred_lang")): _*)
   }
 
-  /** Unicode-normalize the text column (NFC/NFD/NFKC/NFKD) via the
-    * native codegen'd expression (graft.expressions.UnicodeNormalize).
-    * The FIRST transform of a curation pipeline: every byte-keyed
-    * operator downstream (exact-dedup canon hashes, shingles, token
-    * counts) silently fragments on encoding variants of the same
-    * visible string unless the corpus is normalized first. Map-only.
-    */
-  def normalizeText(docs: DataFrame, form: String = "NFC"): DataFrame =
-    docs.select(col("doc_id"),
-      graft.expressions.UnicodeNormalize(col("text"), form).as("text"))
-
   /** Rolling-hash document fingerprint plus a position-weighted token
     * fingerprint (order-sensitive, whitespace-insensitive).
     */
@@ -212,9 +201,6 @@ object TextAnalysis {
       rollingHash(col("text")).as("char_fingerprint"),
       when(nToks > 0, posWeighted).otherwise(lit(0L)).as("token_fingerprint"))
   }
-
-  private def rollingHashInline(s: Column): Column =
-    graft.expressions.RollingHash(s)
 
   /** Winnowing fingerprint selection (the MOSS algorithm): from each
     * document's token k-gram hash stream, slide a window of `w`

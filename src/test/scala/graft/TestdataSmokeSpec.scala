@@ -14,11 +14,25 @@ package graft
   *
   * Skips (not fails) when the harness testdata directory is absent, so
   * the build stays green on machines without /root/testdata.
+  *
+  * The faces run over a registry warmed the way Bench warms it, so the
+  * last test can check the warm list's coverage.
   */
-class TestdataSmokeSpec extends SparkTestBase {
+class TestdataSmokeSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
   private def have: Boolean = new java.io.File(s"$dir/events.parquet").exists
+
+  private def stageNames: Set[String] = graft.queries.QueryCaches.held.keySet
+    .collect { case (s, d, n) if (s eq spark) && d == dir => n }
+
+  private var warmed = Set.empty[String]
+
+  override def beforeAll(): Unit = if (have) {
+    graft.queries.QueryCaches.clearAll()
+    graft.queries.QueryCaches.prebuildAll(spark, dir)
+    warmed = stageNames
+  }
 
   test("events.ts normalizes to a session-zone TIMESTAMP for every generation") {
     assume(have, s"$dir not present on this machine")
@@ -65,5 +79,12 @@ class TestdataSmokeSpec extends SparkTestBase {
           s"sort/hash — flatten them in the query face: $nested")
       df.write.format("noop").mode("overwrite").save()
     }
+  }
+
+  test("after every face has run, the registry gained only the stages faces pay on the clock") {
+    assume(have, s"$dir not present on this machine")
+    // a stage missing from the warm list would show up here, its build
+    // charged to the first face that reads it
+    assert(stageNames -- warmed === Set("graph.scc_labels"))
   }
 }
