@@ -2,7 +2,6 @@ package graft.cluster
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Chinese Whispers label propagation over the defragmented piece graph
   * (SURVEY.md §2.10; reference: chinese_label_propagation.py:58-200,
@@ -27,18 +26,23 @@ import org.apache.spark.storage.StorageLevel
   *    before round 9). A per-node hash is partition-layout-independent:
   *    same seed → same clustering, on any cluster, after any retry.
   *    Pass a different seed per run for production parity.
-  *  - lineage truncation is pluggable (`checkpoint`): parquet round-trip
-  *    in production (equivalent to the reference's alternating Hive
-  *    checkpoint tables), `localCheckpoint` by default for tests.
+  *  - lineage truncation is pluggable (`checkpoint`): a parquet round-trip
+  *    by default (equivalent to the reference's alternating Hive
+  *    checkpoint tables).
   *  - vote deltas are built with explode + sum instead of a nested
   *    map_concat fold — same result, but the aggregation stays in
   *    whole-stage codegen instead of a per-row O(k²) map rebuild.
   *
-  * Scale notes: the static adjacency side should be bucketed by piece_id
-  * (reference: bucketBy(256), S5) so the per-iteration join does not
-  * reshuffle it; pass `adjacency` read from a bucketed table to get that
-  * for free. State joins hash-partition on piece_id every iteration —
-  * with AQE on, partition counts adapt to the shrinking active set.
+  * Round invariant: one message exchange per round. The state row
+  * carries its node's adjacency (`other_piece_ids`, so the checkpoint
+  * carries it too), the pick is a projection over that row, the changed
+  * rows' ±1 vote deltas are repartitioned once on the receiving
+  * piece_id and both aggregations run on that exchange, and one left
+  * join folds the deltas back into the picked state. The exchange is
+  * AQE-planned, so its partition count follows the round's actual
+  * message volume as the active frontier shrinks (the dynamic form of
+  * the reference's hand switch of shuffle width at 512M active rows,
+  * chinese_label_propagation.py:140-143).
   */
 object Clustering {
 
@@ -60,7 +64,9 @@ object Clustering {
       .agg(collect_list("other_piece_id").as("other_piece_ids"))
 
   /** Iteration-0 state: every node votes its neighbours, clusters itself
-    * (reference: chinese_label_propagation.py:81-87).
+    * (reference: chinese_label_propagation.py:81-87). The row keeps its
+    * adjacency, so a round needs no join to find its messages' targets.
+    * Columns: [[graft.core.Schemas.clusterState]].
     */
   def initialState(adjacency: DataFrame): DataFrame =
     adjacency.select(
@@ -68,6 +74,7 @@ object Clustering {
       col("piece_id").as("cluster_id"),
       map_from_entries(transform(col("other_piece_ids"),
         n => struct(n.as("key"), lit(1L).as("value")))).as("cluster_counts"),
+      col("other_piece_ids"),
       lit(true).as("active"))
 
   /** Argmax vote with HASH-MIN uniform tie-break: fold over the vote
@@ -82,7 +89,7 @@ object Clustering {
     * entries in that order and re-clustered differently run to run.
     * Returns struct(cluster_id, tied) — `tied` keeps the node active.
     */
-  private def pickCluster(votes: Column, salt: Column): Column =
+  private[graft] def pickCluster(votes: Column, salt: Column): Column =
     aggregate(
       map_entries(votes),
       struct(lit(-1L).as("c"), lit(-1L).as("n"), lit(0L).as("ties"),
@@ -106,15 +113,12 @@ object Clustering {
       acc => struct(acc.getField("c").as("cluster_id"),
         (acc.getField("ties") > 1L).as("tied")))
 
-  /** One propagation step: (state, adjacency, iteration) → (new state,
-    * persisted intermediate). The intermediate (`picked`) is persisted
-    * MEMORY_AND_DISK because the new state references it twice; the
-    * caller MUST unpersist it once the new state has been checkpointed
-    * (the reference unpersists per-iteration,
-    * chinese_label_propagation.py:193).
+  /** One propagation round: state at `iteration` → state at
+    * `iteration + 1`, through one exchange (see the round invariant in
+    * the object doc).
     */
-  def step(state: DataFrame, adjacency: DataFrame, seed: Long, iteration: Int,
-      updateProbability: Double = 0.9): (DataFrame, DataFrame) = {
+  def step(state: DataFrame, seed: Long, iteration: Int,
+      updateProbability: Double = 0.9): DataFrame = {
     // the update coin is a per-node uniform hashed from (piece_id,
     // round): partition-layout-independent (see the header note —
     // seeded rand() still draws from the partition index); the
@@ -123,51 +127,48 @@ object Clustering {
     val updateCoin =
       pmod(xxhash64(col("piece_id"), lit(seed + iteration), lit(1)),
         lit(1000000000L)).cast("double") / 1e9
+    // narrow pick: only active rows vote; inactive ones keep their
+    // cluster and neither update nor stay tied
     val picked = state
-      .filter(col("active"))
+      .select(col("*"), when(col("active"), pickCluster(col("cluster_counts"),
+        xxhash64(col("piece_id"), lit(seed + iteration)))).as("pick"))
       .select(col("piece_id"), col("cluster_id").as("old_cluster_id"),
-        pickCluster(col("cluster_counts"),
-          xxhash64(col("piece_id"), lit(seed + iteration))).as("pick"))
-      .select(col("piece_id"), col("old_cluster_id"),
-        col("pick.cluster_id").as("new_cluster_id"), col("pick.tied").as("tied"))
-      .withColumn("do_update",
-        (col("old_cluster_id") =!= col("new_cluster_id")) &&
-          (updateCoin <= updateProbability))
-      .filter(col("tied") || col("do_update"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        col("cluster_counts"), col("other_piece_ids"),
+        col("pick.cluster_id").as("new_cluster_id"),
+        coalesce(col("pick.tied"), lit(false)).as("tied"),
+        coalesce(col("active") && (col("pick.cluster_id") =!= col("cluster_id")) &&
+          (updateCoin <= updateProbability), lit(false)).as("do_update"))
 
     // Vote deltas at each neighbour of a changed node: -1 for the old
-    // cluster, +1 for the new, summed over all changed neighbours.
+    // cluster, +1 for the new, summed over all changed neighbours. The
+    // one repartition on the receiving piece_id serves both aggregations.
     val deltas = picked
       .filter(col("do_update"))
-      .join(adjacency, "piece_id")
       .select(explode(col("other_piece_ids")).as("piece_id"),
         col("old_cluster_id"), col("new_cluster_id"))
       .select(col("piece_id"), explode(array(
         struct(col("old_cluster_id").as("cluster"), lit(-1L).as("d")),
         struct(col("new_cluster_id").as("cluster"), lit(1L).as("d")))).as("e"))
+      .repartition(col("piece_id"))
       .groupBy(col("piece_id"), col("e.cluster").as("cluster"))
       .agg(sum("e.d").as("d"))
       .groupBy("piece_id")
       .agg(map_from_entries(collect_list(struct(col("cluster"), col("d"))))
         .as("count_updates"))
 
-    val changed = picked.select("piece_id", "do_update", "new_cluster_id", "tied")
-    val next = state
-      .join(changed, Seq("piece_id"), "left")
+    picked
       .join(deltas, Seq("piece_id"), "left")
       .select(
         col("piece_id"),
-        when(coalesce(col("do_update"), lit(false)), col("new_cluster_id"))
-          .otherwise(col("cluster_id")).as("cluster_id"),
+        when(col("do_update"), col("new_cluster_id"))
+          .otherwise(col("old_cluster_id")).as("cluster_id"),
         when(col("count_updates").isNull, col("cluster_counts"))
           .otherwise(map_filter(
             map_zip_with(col("cluster_counts"), col("count_updates"),
               (_, v1, v2) => coalesce(v1, lit(0L)) + coalesce(v2, lit(0L))),
             (_, v) => v =!= 0L)).as("cluster_counts"),
-        (coalesce(col("tied"), lit(false)) || col("count_updates").isNotNull)
-          .as("active"))
-    (next, picked)
+        col("other_piece_ids"),
+        (col("tied") || col("count_updates").isNotNull).as("active"))
   }
 
   /** Pluggable lineage truncation between iterations. */
@@ -230,7 +231,9 @@ object Clustering {
     * stopped instead of from iteration 0 — the reference does the same
     * manually by re-pointing its `iter` variable at the alternating
     * checkpoint tables (chinese_label_propagation.py:75-77; restart
-    * guidance assets/README.md:250-251).
+    * guidance assets/README.md:250-251). The table's schema is inferred
+    * from its files, once per resume, so a file of an older state shape
+    * shows its real columns and `propagate` can refuse it.
     */
   def latestCheckpoint(spark: SparkSession, dir: String): Option[(DataFrame, Int)] = {
     val marker = new org.apache.hadoop.fs.Path(s"$dir/LATEST_ITER")
@@ -257,7 +260,9 @@ object Clustering {
     * seeded run produces the same result as an unbroken one
     * (ClusteringSpec) — exactly, on any partition layout. A
     * multi-day production run that dies at iteration 60 of 100 resumes
-    * from 60 instead of starting over.
+    * from 60 instead of starting over. The resumed state must have every
+    * column of [[graft.core.Schemas.clusterState]]; a missing one throws
+    * IllegalArgumentException naming it.
     */
   def propagate(adjacency: DataFrame, seed: Long = 42L, maxIter: Int = 100,
       updateProbability: Double = 0.9,
@@ -272,29 +277,6 @@ object Clustering {
     val tmpDir = if (checkpointer.isEmpty)
       Some(java.nio.file.Files.createTempDirectory("graft-cluster-ckpt")) else None
     val checkpoint = checkpointer.getOrElse(parquetCheckpointer(tmpDir.get.toString))
-    // the static adjacency side is joined every iteration: pre-partition
-    // on the join key and persist so iterations reuse both the
-    // computation and the partitioning (the in-session equivalent of the
-    // reference's bucketBy(256,"piece_id") table, S5). Callers passing a
-    // bucketed-table read get the same effect without this persist.
-    //
-    // ACTIVE-SIZE PARTITIONING CONTRACT (VERDICT r12 item 7): the
-    // reference hand-switches its per-iteration shuffle width 256→4096
-    // when the active count crosses 512M rows
-    // (chinese_label_propagation.py:140-143) — a static stand-in for
-    // "shuffle partitions should track live volume as the frontier
-    // shrinks". This port deliberately does NOT replicate the switch:
-    // every per-iteration exchange here is an AQE-planned shuffle, and
-    // AQE coalesces/splits post-shuffle partitions from the ACTUAL map
-    // output size each round — the dynamic version of the same rule,
-    // without a hand-tuned threshold that silently mis-sizes at a new
-    // scale. Measured: the sf1→sf10 decade rides at 4.82 on 10×
-    // adjacency with 10 fixed rounds (SCALE.md) — data-bound, no
-    // partition-starvation knee; at 100 TB the operative knob is the
-    // cluster-level spark.sql.shuffle.partitions ceiling AQE coalesces
-    // down from, not a per-operator override.
-    val adj = adjacency.repartition(col("piece_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // The convergence count piggybacks on the checkpoint write via the
     // Observation API: the active-row count is collected DURING the
     // materializing action, so each iteration runs exactly one job
@@ -309,24 +291,26 @@ object Clustering {
     }
     var (state, active, iter) = resumeFrom match {
       case Some((st, k)) =>
+        // a checkpoint written before the state carried its adjacency
+        // would resume with no messages to send: refuse it by name
+        for (f <- graft.core.Schemas.clusterState.fieldNames)
+          require(st.columns.contains(f),
+            s"resume state lacks column `$f` (has ${st.columns.mkString(", ")})")
         // one count over the already-durable checkpoint — once per
         // resume, not per iteration (the loop's own counts stay on the
         // Observation API)
         (st, st.filter(col("active")).count(), k)
       case None =>
-        val (st, act) = checkpointCounting(initialState(adj), 0)
+        val (st, act) = checkpointCounting(initialState(adjacency), 0)
         (st, act, 0)
     }
     while (active > 0 && iter < maxIter) {
-      val (next, persisted) = step(state, adj, seed, iter, updateProbability)
+      val next = step(state, seed, iter, updateProbability)
       iter += 1
       val (st, act) = checkpointCounting(next, iter)
       state = st
       active = act
-      // state is now durably materialized; release the per-iteration cache
-      persisted.unpersist()
     }
-    adj.unpersist()
     val out = state.select("piece_id", "cluster_id")
     tmpDir match {
       case Some(dir) =>

@@ -93,13 +93,15 @@ object Schemas {
     StructField("other_piece_ids", ArrayType(LongType))
   ))
 
-  /** Clustering iteration state
+  /** Clustering iteration state, one row per node, and so the row of
+    * its checkpoint; the row carries the node's adjacency
     * (reference: chinese_label_propagation.py:81-87).
     */
   val clusterState: StructType = StructType(Seq(
     StructField("piece_id", LongType),
     StructField("cluster_id", LongType),
     StructField("cluster_counts", MapType(LongType, LongType)),
+    StructField("other_piece_ids", ArrayType(LongType)),
     StructField("active", BooleanType)
   ))
 

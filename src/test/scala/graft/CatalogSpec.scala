@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.graftshim.CoreShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.core.Catalog
@@ -107,23 +105,6 @@ class CatalogSpec extends SparkTestBase {
       .getParent + "/ic.versions/_CURRENT").delete()
     assert(cat.currentVersion("ic") === Some(1L))
     assert(cat.get("ic").count() === 1L)
-  }
-
-  /** `body`'s result and the Spark jobs it submitted; the listener bus
-    * is drained before and after, so no job start is missed or leaked.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    CoreShim.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      CoreShim.drainListenerBus(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("get of a published table submits no Spark job and keeps the " +
