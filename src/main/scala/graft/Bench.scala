@@ -1,161 +1,124 @@
 package graft
 
+import java.util.Locale
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.core.GraftSession
+import graft.queries.QueryCaches
 
-/** Benchmark main — runs every registered query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line (driver contract). local[32] / 32 shuffle
-  * partitions per the harness sizing; override with SPARK_GRAFT_CPUS.
+/** Benchmark main: times every registered face on SPARK_GRAFT_SF_DIR
+  * (local[SPARK_GRAFT_CPUS], default 32, with as many shuffle partitions)
+  * through [[Profile.measure]] and prints the JSON lines of the driver
+  * contract.
   */
 object Bench {
+
+  /** Back-to-back passes per face; a face's time is their minimum. A pass
+    * on a CPU-stolen stretch inflates, and the minimum inflates only when
+    * every pass was stolen. The extra pass stays honest: the noop sink
+    * re-executes the whole plan, nothing is result-cached.
+    */
+  val Passes = 2
+
+  /** Seconds and scheduled jobs of each face's fastest pass, in name
+    * order (the jobs belong to the pass whose seconds are kept), and the
+    * faces that threw, which have no timing.
+    */
+  final case class Result(timings: Seq[(String, (Double, Int))], failed: Seq[String])
+
+  private def attempt[T](name: String)(body: => T): Option[T] =
+    try Some(body)
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+    }
+
+  def passes(spark: SparkSession, dir: String, faces: Map[String, Profile.Face]): Result = {
+    def once(face: Profile.Face): (Double, Int) = {
+      val (_, s) = Profile.measure(spark)(Profile.runFace(spark, dir, face))
+      (s.wallS, s.jobs)
+    }
+    // passes that disagree by more than 2x mark a stolen stretch: one
+    // arbitration pass runs at once, so a phantom reading needs three
+    // stolen passes in a row
+    def timed(face: Profile.Face, n: Int): (Double, Int) = {
+      val ts = (1 to n).map(_ => once(face))
+      val all = if (n >= 2 && ts.map(_._1).max > 2 * ts.map(_._1).min + 0.05)
+        ts :+ once(face) else ts
+      all.minBy(_._1)
+    }
+    // ContextCleaner releases dead broadcasts and shuffles only on a JVM
+    // GC; a long single-JVM sweep otherwise accumulates them, evicts the
+    // registry's persisted chains and inflates later faces 3-5x. The GC
+    // between faces runs outside the timed region and keeps a face's time
+    // independent of its position in the sweep.
+    val sorted = faces.toSeq.sortBy(_._1)
+    val first = sorted.zipWithIndex.flatMap { case ((name, face), i) =>
+      if (i % 8 == 0) System.gc()
+      attempt(name)(timed(face, Passes)).map(name -> _)
+    }
+    // one more pass for the slowest decile: those are the faces compared
+    // run over run, and a double-stolen reading then needs three
+    val slow = first.sortBy(-_._2._1).take(math.max(1, first.size / 10)).map(_._1).toSet
+    val timings = first.flatMap { case (name, best) =>
+      if (!slow(name)) Some(name -> best)
+      else {
+        System.gc()
+        attempt(name)(timed(faces(name), 1)).map(t => name -> Seq(best, t).minBy(_._1))
+      }
+    }
+    val done = timings.map(_._1).toSet
+    Result(timings, sorted.map(_._1).filterNot(done))
+  }
+
+  /** The short line (total and the 10 slowest faces) and the full line
+    * (every face's seconds and jobs); both list the failed faces.
+    */
+  def lines(r: Result, jobFloorMs: Double, sfDir: String): (String, String) = {
+    // 3 decimals: ms precision is already below run-to-run noise
+    def fmt(v: Double): String = "%.3f".formatLocal(Locale.ROOT, v)
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val total = fmt(r.timings.map(_._2._1).sum)
+    val qs = obj(r.timings.map { case (k, (v, _)) => k -> fmt(v) })
+    val js = obj(r.timings.map { case (k, (_, j)) => k -> j.toString })
+    val slowest = obj(r.timings.sortBy(-_._2._1).take(10).map { case (k, (v, _)) => k -> fmt(v) })
+    val failed = r.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val floor = "%.1f".formatLocal(Locale.ROOT, jobFloorMs)
+    (s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${r.timings.size},"job_floor_ms":$floor,"slowest":$slowest,"failed":$failed,"sf":"$sfDir"}""",
+      s"""{"metric":"total","value":$total,"unit":"sec","job_floor_ms":$floor,"queries":$qs,"jobs":$js,"failed":$failed,"sf":"$sfDir"}""")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.local(cores = cpus, shufflePartitions = cpus, appName = "graft-bench")
-    // noop sink: forces every projection to actually execute — a count()
-    // would let Catalyst prune unreferenced expressions and under-measure
-    // map-only queries
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    // per-query SCHEDULED-job counter (VERDICT r12 item 2): the artifact
-    // records each query's job count next to its seconds, so the
-    // round-latency-bound iterative tail is floor-correctable
-    // mechanically — bench_guard compares (t − jobs × job_floor_ms)
-    // instead of re-adjudicating host epochs by hand. Counts are read as
-    // deltas around each timed pass with the listener bus DRAINED on
-    // both sides (events post asynchronously; an undrained read leaks
-    // this query's late starts into the next query's delta). The drain
-    // runs OUTSIDE the timed region.
-    val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCount.incrementAndGet()
-    })
-    def drain(): Unit =
-      try org.apache.spark.graftshim.CoreShim.drainListenerBus(spark.sparkContext)
-      catch { case scala.util.control.NonFatal(_) => Thread.sleep(50) }
-    // warm-up, untimed: (1) materialize the memoized shared chains so
-    // the alphabetically first domain query measures its operator, not
-    // the one-time chain build (SCALE.md bench notes); (2) run one query
-    // so JVM/codegen first-call classloading is off the clock too
-    // NonFatal only, and LOUD: a silently failed prebuild would revert
-    // the first domain query to chain-build-inclusive timing with no
-    // way to tell from the JSON
+    // untimed warm-up: build the registry's shared chains, so the first
+    // domain face measures its operator and not the chain build (a failed
+    // prebuild is loud for that reason), then run one face so JVM class
+    // loading and first-call codegen are off the clock too
     val warm0 = System.nanoTime()
-    try graft.queries.QueryCaches.prebuildAll(spark, sfDir)
+    try QueryCaches.prebuildAll(spark, sfDir)
     catch {
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] WARM-UP PREBUILD FAILED (timings for the " +
           s"first domain query will include the chain build): $e")
     }
     System.err.println("[bench] warm-up prebuild %.1f s".formatLocal(
-      java.util.Locale.ROOT, (System.nanoTime() - warm0) / 1e9))
-    SparkEntry.queries.headOption.foreach { case (_, fn) =>
-      try run(fn) catch { case _: Throwable => }
+      Locale.ROOT, (System.nanoTime() - warm0) / 1e9))
+    SparkEntry.queries.headOption.foreach { case (name, face) =>
+      attempt(name)(Profile.runFace(spark, sfDir, face))
     }
-    // Host-epoch marker: the per-job floor of 50 trivial one-stage jobs.
-    // Round-latency-bound iterative faces (graph fixpoints, temporal
-    // reach) cost ≈ jobs × this floor at sf0.1, and the floor swings
-    // 5×+ between host epochs (measured 15-20 ms/job in the r10-quiet
-    // artifact's era vs 95.6 ms/job at r12) while volume-bound faces
-    // stay flat — recording it makes every artifact's round-latency
-    // tail interpretable without re-running anything.
-    val jobFloorMs = {
-      (1 to 5).foreach(_ => spark.range(1000).count())
-      val t0 = System.nanoTime()
-      (1 to 50).foreach(_ => spark.range(1000).count())
-      (System.nanoTime() - t0) / 1e6 / 50
-    }
-    // Spark's ContextCleaner is weak-reference driven: dead broadcasts
-    // and shuffle registrations are only released when a JVM GC runs.
-    // A 160-query single-JVM sweep accumulates gigabytes of dead
-    // broadcast hash-relations before the first full GC, evicting the
-    // memoized domain chains and inflating later queries 3-5× (measured:
-    // q_domain_book_coverage 21.7 s mid-sweep vs 3.7 s isolated). An
-    // explicit GC between timings keeps each query's measurement
-    // independent of its alphabetical position — the GC itself runs
-    // OUTSIDE the timed region.
-    // Per-query MIN over `passes` back-to-back runs (default 2): the
-    // boundary machine has been contended two rounds running (r6 420 s,
-    // r7 277 s vs 189 s quiet — uniformly 2-7× on CPU-bound queries).
-    // A CPU-stolen pass inflates; the min of two passes only inflates
-    // if BOTH passes were stolen, so a loaded machine moves totals by
-    // ≪2× instead. The second pass is cheap (parquet footers, codegen
-    // classes and the memoized chains are warm) and stays honest: the
-    // noop sink re-executes the full plan — nothing is result-cached.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    // returns (seconds, scheduled jobs) of the best (fastest) pass —
-    // the job count belongs to the pass whose seconds are recorded
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        n: Int): (Double, Int) = {
-      def once(): (Double, Int) = {
-        drain()
-        val j0 = jobCount.get
-        val t0 = System.nanoTime()
-        try run(fn) catch { case _: Throwable => }
-        val dt = (System.nanoTime() - t0) / 1e9
-        drain()
-        (dt, jobCount.get - j0)
-      }
-      val ts = (1 to n).map(_ => once())
-      // pass DISAGREEMENT marks a stolen stretch (VERDICT r10 item 9:
-      // phantom swings like pagerank_warm +1.3 s driver / −1.1 s quiet
-      // cost attention every round): when the two passes differ >2×,
-      // one arbitration pass runs immediately — a phantom reading now
-      // needs three stolen passes in a row, on every face, not just
-      // the slowest decile
-      val all = if (n >= 2 && ts.map(_._1).max > 2 * ts.map(_._1).min + 0.05)
-        ts :+ once() else ts
-      all.minBy(_._1)
-    }
-    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.map {
-      case ((name, fn), i) =>
-        if (i % 8 == 0) System.gc()
-        name -> timed(fn, passes)
-    }
-    // Extra pass for the slowest decile only: min-of-2 bounds the TOTAL
-    // under contention, but an individual CPU-bound query still reads
-    // 4-5× high when both of its passes land on a stolen stretch —
-    // and the slowest-10 list is exactly what gets compared
-    // round-over-round. One more pass on ~10% of queries (~30 s quiet)
-    // makes a double-stolen reading need THREE stolen passes instead.
-    val deciles = math.max(1, firstPass.size / 10)
-    val slowNames = firstPass.sortBy(-_._2._1).take(deciles).map(_._1).toSet
-    val byName = SparkEntry.queries
-    val results = firstPass.map { case (name, best) =>
-      if (!slowNames.contains(name)) name -> best
-      else {
-        System.gc()
-        name -> Seq(best, timed(byName(name), 1)).minBy(_._1)
-      }
-    }
-    // 3-decimal values keep the per-query line as small as possible;
-    // ms precision is below this bench's run-to-run noise floor anyway
-    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, (v, _)) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val js = results.map { case (k, (_, j)) => "\"" + k + "\":" + j }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2._1).sum else 0.0
-    // the short line still carries the hotspot list (10 slowest): that
-    // is what gets compared round-over-round — totals fluctuate ±10 s
-    val slowest = results.sortBy(-_._2._1).take(10)
-      .map { case (k, (v, _)) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val floor = "%.1f".formatLocal(java.util.Locale.ROOT, jobFloorMs)
-    val totalLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"job_floor_ms":$floor,"slowest":$slowest,"sf":"$sfDir"}"""
-    val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","job_floor_ms":$floor,"queries":$qs,"jobs":$js,"sf":"$sfDir"}"""
-    // The harness stores a bounded slice of stdout: with 85 queries the
-    // single contract line outgrows that window and arrives cut at both
-    // ends (unparseable). Bracket the full line with a short totals-only
-    // line on EACH side — whichever end of the window survives
-    // truncation contains a complete, parseable JSON record — and write
-    // the full JSON to a file (SPARK_GRAFT_BENCH_OUT, default
-    // bench_full.json in the working dir) so complete per-query timings
-    // are always readable without re-running the bench.
+    val floor = Profile.jobFloorMs(spark)
+    val (totalLine, fullLine) = lines(passes(spark, sfDir, SparkEntry.queries), floor, sfDir)
+    // stdout may be kept only as a bounded slice, which cuts a long line
+    // at both ends: the short line on each side of the full one leaves a
+    // complete record at whichever end survives, and the full line also
+    // goes to SPARK_GRAFT_BENCH_OUT (default bench_full.json)
     println(totalLine)
     println(fullLine)
     println(totalLine)
@@ -163,10 +126,9 @@ object Bench {
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] could not write $outPath: $e")
+      case NonFatal(e) => System.err.println(s"[bench] could not write $outPath: $e")
     }
-    graft.queries.QueryCaches.clearAll()
+    QueryCaches.clearAll()
     spark.stop()
   }
 }

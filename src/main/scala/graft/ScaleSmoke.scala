@@ -207,73 +207,94 @@ object ScaleSmoke {
       .reduce(_ unionAll _), "embeddings")
   }
 
+  /** Generates `replicas`x of `base` at `out` unless `out` already holds
+    * a dataset with the same stamp; returns whether it generated. The
+    * stamp records the generation inputs and the generator version
+    * (gen=2: per-replica event-time shift), so a dataset derived from
+    * another base, replica count or an older generator is regenerated,
+    * never silently compared against.
+    */
+  def ensure(spark: SparkSession, base: String, out: String, replicas: Int,
+      tag: String): Boolean = {
+    val stamp = s"base=$base replicas=$replicas gen=2"
+    val marker = java.nio.file.Paths.get(out, "_GENERATED")
+    val reuse = java.nio.file.Files.exists(marker) &&
+      java.nio.file.Files.readString(marker).trim == stamp
+    if (reuse) println(s"[$tag] reusing $out ($stamp)")
+    else {
+      println(s"[$tag] generating ${replicas}x at $out from $base")
+      generate(spark, base, out, replicas)
+      java.nio.file.Files.writeString(marker, stamp)
+    }
+    !reuse
+  }
+
+  // locale-pinned: default-locale %f renders comma decimals on e.g. a
+  // de_DE JVM and corrupts the JSON lines
+  private def fmt(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** One scale of a decade: its data dir, its label in the PASS/FAIL
+    * lines and its key in the JSON summary.
+    */
+  final case class Scale(dir: String, label: String, key: String)
+
+  /** Times `faces` at `small`, then at `big`, and prints one PASS/FAIL
+    * line per face (bound: big <= 10x small + 2 s, a noise floor for
+    * faces that jitter by seconds) and the JSON summary `metric`; returns
+    * whether any face failed. `warm` builds the registry stages a scale's
+    * faces read, off the clock.
+    *
+    * One scale is in memory at a time: interleaving the scales per face
+    * held both scales' persisted chains in one heap, and the eviction and
+    * GC pressure inflated the first big sf1 face about 2.4x (a
+    * measurement artifact, not a scale property). A GC before each timed
+    * face releases dead broadcasts (ContextCleaner is GC-driven, as in
+    * Bench).
+    */
+  def decade(spark: SparkSession, tag: String, metric: String, faces: Seq[String],
+      small: Scale, big: Scale, warm: String => Unit): Boolean = {
+    def time(q: String, dir: String): Double = {
+      // progress before each face: a smoke that dies mid-run (disk-full
+      // spill, OOM) names its killer in the log
+      println(s"[$tag] running $q @ $dir")
+      val s = Profile.measure(spark)(Profile.runFace(spark, dir, SparkEntry.queries(q)))._2
+      println(s"[$tag] done    $q @ $dir ${fmt(s.wallS)} s")
+      s.wallS
+    }
+    def measureAt(dir: String): Map[String, Double] = {
+      graft.queries.QueryCaches.clearAll()
+      System.gc()
+      warm(dir)
+      time(faces.head, dir) // untimed JVM/codegen warm-up
+      faces.map { q => System.gc(); q -> time(q, dir) }.toMap
+    }
+    val smallT = measureAt(small.dir)
+    val bigT = measureAt(big.dir)
+    val results = faces.map { q =>
+      val (a, b) = (smallT(q), bigT(q))
+      val ratio = b / math.max(a, 1e-9)
+      val ok = b <= a * 10.0 + 2.0
+      println(s"[$tag] ${q.padTo(32, ' ')} ${small.label}=${fmt(a)}s  ${big.label}=${fmt(b)}s  " +
+        s"ratio=${fmt(ratio)}  ${if (ok) "PASS" else "FAIL"}")
+      (q, a, b, ratio, ok)
+    }
+    val failed = results.exists(!_._5)
+    val qs = results.map { case (q, a, b, r, _) =>
+      s""""$q":{"${small.key}":${fmt(a)},"${big.key}":${fmt(b)},"ratio":${fmt(r)}}"""
+    }.mkString("{", ",", "}")
+    println(s"""{"metric":"$metric","bound":"10x+2s","queries":$qs,"failed":$failed}""")
+    failed
+  }
+
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val spark = GraftSession.local(cores = 32, shufflePartitions = 32,
       appName = "graft-scale-smoke")
-
-    // the marker records the generation INPUTS: a rerun with a
-    // different base (or replica count) must regenerate, not silently
-    // compare against a dataset derived from some other base
-    val replicas = 10
-    // gen=2: per-replica event-time shift (round 9) — a stamp mismatch
-    // forces regeneration so old datasets never silently compare
-    val stamp = s"base=$base replicas=$replicas gen=2"
-    val marker = new java.io.File(s"$out/_GENERATED")
-    val fresh = !marker.exists() ||
-      new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim != stamp
-    if (fresh) {
-      println(s"[scale] generating sf1 at $out from $base")
-      generate(spark, base, out, replicas)
-      java.nio.file.Files.write(marker.toPath,
-        stamp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } else println(s"[scale] reusing sf1 at $out ($stamp)")
-
-    def run(q: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // ONE scale in memory at a time: interleaving base/out per query
-    // held BOTH scales' persisted chains plus prebuild broadcast debris
-    // in one heap, and the resulting eviction/GC pressure inflated the
-    // first big sf1 query ~2.4x (q_domain_cluster 66.7 s interleaved vs
-    // 27.8 s measured this way) — a measurement artifact, not a scale
-    // property. Chains prebuild off the clock per scale; an explicit GC
-    // before each timed query releases dead broadcasts (ContextCleaner
-    // is GC-driven — the same fix as Bench).
-    def measure(dir: String): Map[String, Double] = {
-      graft.queries.QueryCaches.clearAll()
-      System.gc()
-      graft.queries.QueryCaches.prebuildAll(spark, dir)
-      run(smokeQueries.head, dir) // untimed JVM/codegen warm-up
-      smokeQueries.map { q => System.gc(); q -> run(q, dir) }.toMap
-    }
-    val baseT = measure(base)
-    val bigT = measure(out)
-
-    // locale-pinned formatting (like Bench): default-locale %f renders
-    // comma decimals on e.g. a de_DE JVM and corrupts the JSON line
-    def fmt(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    var failed = false
-    val results = smokeQueries.map { q =>
-      val tBase = baseT(q)
-      val tBig = bigT(q)
-      val ratio = tBig / math.max(tBase, 1e-9)
-      // noise floor: small queries jitter by seconds at local[32]
-      val ok = tBig <= tBase * 10.0 + 2.0
-      if (!ok) failed = true
-      println(s"[scale] ${q.padTo(32, ' ')} sf0.1=${fmt(tBase)}s  sf1=${fmt(tBig)}s  " +
-        s"ratio=${fmt(ratio)}  ${if (ok) "PASS" else "FAIL"}")
-      (q, tBase, tBig, ratio)
-    }
-    val qs = results.map { case (q, a, b, r) =>
-      s""""$q":{"sf01":${fmt(a)},"sf1":${fmt(b)},"ratio":${fmt(r)}}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"scale_smoke","bound":"10x+2s","queries":$qs,"failed":$failed}""")
+    ensure(spark, base, out, replicas = 10, "scale")
+    var failed = decade(spark, "scale", "scale_smoke", smokeQueries,
+      Scale(base, "sf0.1", "sf01"), Scale(out, "sf1", "sf1"),
+      graft.queries.QueryCaches.prebuildAll(spark, _))
 
     // ------------------------------------------------------------------
     // Asset-DAG control surface, end-to-end on REAL fixture data

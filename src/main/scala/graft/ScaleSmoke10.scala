@@ -63,86 +63,35 @@ object ScaleSmoke10 {
     // canonical key
     "q_text_html_extract", "q_text_html_block_density", "q_dedup_url")
 
+  /** The registry stages the smoke faces consume, each warmed with the
+    * upstream stages its builder reads: pieces (cluster), co-supply edges
+    * (scc/dag_paths), co-purchase edges (cc), dedup pairs (groups_cc),
+    * verified matches (entities). Warming the whole list is a disk kill
+    * at sf10: the book reception chain, consumed by no smoke face, alone
+    * spilled ~65 GB of shuffle (clusters saturate mod 500 while pieces
+    * grow 100x, so its per-cluster expansion joins carry 120M-row sides).
+    */
+  private val warmStages: Seq[String] = Seq("domain.pieces", "graph.co_supply_49",
+    "graph.co_purchase", "dedup.pairs", "dedup.verified_30")
+
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mid = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val big = if (args.length > 2) args(2) else "/tmp/graft_sf10"
     val spark = GraftSession.local(cores = 32, shufflePartitions = 32,
       appName = "graft-scale-smoke-10")
-
-    def ensure(out: String, replicas: Int): Unit = {
-      val stamp = s"base=$base replicas=$replicas"
-      val marker = new java.io.File(s"$out/_GENERATED")
-      val fresh = !marker.exists() ||
-        new String(java.nio.file.Files.readAllBytes(marker.toPath),
-          java.nio.charset.StandardCharsets.UTF_8).trim != stamp
-      if (fresh) {
-        println(s"[scale10] generating ${replicas}x at $out from $base")
-        ScaleSmoke.generate(spark, base, out, replicas)
-        java.nio.file.Files.write(marker.toPath,
-          stamp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } else println(s"[scale10] reusing $out ($stamp)")
-    }
-    ensure(mid, 10)
-    ensure(big, 100)
-
-    def run(q: String, dir: String): Double = {
-      // progress line BEFORE each query: a smoke that dies mid-run
-      // (disk-full spill, OOM) must name its killer in the log, not
-      // leave a 20-minute silence between prebuild and the stack trace
-      println(s"[scale10] running $q @ $dir")
-      val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"[scale10] done    $q @ $dir ${dt}%.2f s")
-      dt
-    }
-
-    // one scale in memory at a time (the ScaleSmoke measurement note);
-    // only the registry stages the smoke queries actually consume are
-    // warmed, each with the upstream stages its builder reads: pieces
-    // (cluster), co-purchase edges (cc), co-supply edges
-    // (scc/dag_paths), dedup pairs (groups_cc), verified matches
-    // (entities). Warming the whole list is a disk kill at sf10: the
-    // book reception chain — consumed by NO smoke query — alone spilled
-    // ~65 GB of shuffle (clusters saturate mod 500 while pieces grow
-    // 100×, so its per-cluster expansion joins carry 120M-row sides)
-    def measure(dir: String): Map[String, Double] = {
-      graft.queries.QueryCaches.clearAll()
-      System.gc()
-      Seq("domain.pieces", "graph.co_supply_49", "graph.co_purchase",
-          "dedup.pairs", "dedup.verified_30").foreach { n =>
+    ScaleSmoke.ensure(spark, base, mid, replicas = 10, "scale10")
+    ScaleSmoke.ensure(spark, base, big, replicas = 100, "scale10")
+    val failed = ScaleSmoke.decade(spark, "scale10", "scale_smoke_10", smokeQueries,
+      ScaleSmoke.Scale(mid, "sf1", "sf1"), ScaleSmoke.Scale(big, "sf10", "sf10"),
+      dir => warmStages.foreach { n =>
         println(s"[scale10] prebuild $n @ $dir")
         graft.queries.QueryCaches.prebuild(spark, dir, n)
-        // GC after every prebuild step, not just between queries:
-        // ContextCleaner reclaims superseded shuffle files only on a
-        // JVM GC, and the sf10 chain builds over 60M-row inputs
-        // otherwise accumulate dead spill across steps
+        // ContextCleaner reclaims superseded shuffle files only on a JVM
+        // GC, and the sf10 chain builds over 60M-row inputs otherwise
+        // accumulate dead spill across steps
         System.gc()
-      }
-      run(smokeQueries.head, dir) // untimed JVM/codegen warm-up
-      smokeQueries.map { q => System.gc(); q -> run(q, dir) }.toMap
-    }
-    val midT = measure(mid)
-    val bigT = measure(big)
-
-    def fmt(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    var failed = false
-    val results = smokeQueries.map { q =>
-      val a = midT(q)
-      val b = bigT(q)
-      val ratio = b / math.max(a, 1e-9)
-      val ok = b <= a * 10.0 + 2.0
-      if (!ok) failed = true
-      println(s"[scale10] ${q.padTo(32, ' ')} sf1=${fmt(a)}s  sf10=${fmt(b)}s  " +
-        s"ratio=${fmt(ratio)}  ${if (ok) "PASS" else "FAIL"}")
-      (q, a, b, ratio)
-    }
-    val qs = results.map { case (q, a, b, r) =>
-      s""""$q":{"sf1":${fmt(a)},"sf10":${fmt(b)},"ratio":${fmt(r)}}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"scale_smoke_10","bound":"10x+2s","queries":$qs,"failed":$failed}""")
+      })
     graft.queries.QueryCaches.clearAll()
     spark.stop()
     if (failed) sys.exit(1)

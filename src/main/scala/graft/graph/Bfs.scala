@@ -269,8 +269,8 @@ object Bfs {
         // at local round-latency-bound scale was the whole
         // q_events_temporal_reach regression (VERDICT r10).
         //
-        // Measured floor (graft.TemporalProfile, r12, closing VERDICT
-        // r11 item 3): the sf0.1 face schedules 54 jobs total — the
+        // Measured floor (r12; `graft.Profile` prints the job floor and
+        // per-face job counts): the sf0.1 face schedules 54 jobs total — the
         // fused ≈2.2 jobs/round over ~24 live rounds — and its wall
         // time is jobs × the HOST's per-job latency (62 ms mean in-job
         // + gaps on an epoch whose trivial-job floor measured

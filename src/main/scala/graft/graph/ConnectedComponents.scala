@@ -45,17 +45,13 @@ import org.apache.spark.storage.StorageLevel
   * (stride-2) and pays one checkpoint + one convergence test where it
   * paid two. The first two rounds stay stride-1 so shallow graphs
   * (contracted addEdges batches, small components) never buy a wasted
-  * alternation. All grouping/join/test keys take an optional prefix of
-  * batch columns, which is what [[largeStarSmallStarLevels]] rides.
+  * alternation.
   */
 object ConnectedComponents {
 
   /** One large-star round: every node connects its LARGER neighbours to
     * the minimum of its closed neighbourhood. Emitted edges satisfy
-    * src > dst (child points to a smaller parent candidate). `k` is an
-    * optional prefix of batch key columns — independent edge sets
-    * advancing in the same scheduled rounds (empty = the classic single
-    * graph; plans are identical to the unprefixed form).
+    * src > dst (child points to a smaller parent candidate).
     *
     * r14 shape (guide §2.4): the neighbourhood minimum is a whole-
     * partition window min over ONE exchange of the symmetric edge set —
@@ -69,55 +65,48 @@ object ConnectedComponents {
     * emission per symmetric edge row — one distinct exchange per
     * ALTERNATION instead of two.
     */
-  private[graph] def largeStar(edges: DataFrame, k: Seq[String] = Nil): DataFrame = {
-    val kc = k.map(col)
-    val sym = edges.select(kc :+ col("src") :+ col("dst"): _*)
-      .unionAll(edges.select(kc :+ col("dst").as("src") :+ col("src").as("dst"): _*))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy((k :+ "src").map(col): _*)
+  private[graph] def largeStar(edges: DataFrame): DataFrame = {
+    val sym = edges.select(col("src"), col("dst"))
+      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
     sym.withColumn("m", least(col("src"), min(col("dst")).over(w)))
       .where(col("dst") > col("src"))
-      .select(kc :+ col("dst").as("src") :+ col("m").as("dst"): _*)
+      .select(col("dst").as("src"), col("m").as("dst"))
   }
 
   /** One small-star round: every node connects its smaller neighbours
     * (and itself) to its minimum neighbour. Requires and preserves the
     * src > dst orientation (duplicate input rows allowed — see
-    * [[largeStar]]). Same optional batch prefix, same single-exchange
-    * window-min shape; both emitted row families (smaller neighbours →
+    * [[largeStar]]). Same single-exchange window-min shape; both emitted row families (smaller neighbours →
     * min, node → min) come off ONE window pass via a generator, and the
     * closing distinct both dedupes them and restores set semantics for
     * the alternation.
     */
-  private[graph] def smallStar(edges: DataFrame, k: Seq[String] = Nil): DataFrame = {
-    val kc = k.map(col)
+  private[graph] def smallStar(edges: DataFrame): DataFrame = {
     val oriented = edges
-      .select(kc :+ greatest(col("src"), col("dst")).as("src") :+
-        least(col("src"), col("dst")).as("dst"): _*)
+      .select(greatest(col("src"), col("dst")).as("src"),
+        least(col("src"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy((k :+ "src").map(col): _*)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
     oriented.withColumn("m", min(col("dst")).over(w))
-      .select(kc :+ explode(array(
+      .select(explode(array(
         when(col("dst") =!= col("m"),
           struct(col("dst").as("s"), col("m").as("d"))),
-        struct(col("src").as("s"), col("m").as("d")))).as("e"): _*)
+        struct(col("src").as("s"), col("m").as("d")))).as("e"))
       .where(col("e").isNotNull)
-      .select(kc :+ col("e.s").as("src") :+ col("e.d").as("dst"): _*)
+      .select(col("e.s").as("src"), col("e.d").as("dst"))
       .distinct()
   }
 
   /** The shared contraction loop: alternate stars until the edge set is
-    * a star forest (per batch key when `k` is non-empty). Returns the
+    * a star forest. Returns the
     * converged, checkpointed edge set. Stride-2 after the first two
     * rounds — see the object doc; `r` counts ALTERNATIONS, so maxRounds
     * bounds the same quantity it always did.
     */
-  private def contract(edges: DataFrame, k: Seq[String], maxRounds: Int): DataFrame = {
-    val kc = k.map(col)
+  private def contract(edges: DataFrame, maxRounds: Int): DataFrame = {
     var e = edges.where(col("src") =!= col("dst"))
-      .select(kc :+ col("src").cast("long").as("src") :+
-        col("dst").cast("long").as("dst"): _*)
+      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     var converged = false
@@ -138,7 +127,7 @@ object ConnectedComponents {
       // without the intermediate barrier ADDED jobs, 158 → 161 on the
       // single-link face). Lazy = no scheduled job of its own; the
       // partitions cache inside the convergence test's job.
-      for (_ <- 1 to stride) n = smallStar(largeStar(n, k), k).localCheckpoint(false)
+      for (_ <- 1 to stride) n = smallStar(largeStar(n)).localCheckpoint(false)
       r += stride
       // n is already lazily checkpointed (per-alternation, above): the
       // star-forest test below shuffles, so its map side computes —
@@ -156,11 +145,9 @@ object ConnectedComponents {
       // parents means two stars that a further round will merge —
       // either way, not converged. One fused action (see Scaladoc):
       // per-node (child rows, parent rows) over the distinct edge set
-      converged = e.select(kc :+ col("src").as("n") :+ lit(1L).as("c") :+
-          lit(0L).as("p"): _*)
-        .unionAll(e.select(kc :+ col("dst").as("n") :+ lit(0L).as("c") :+
-          lit(1L).as("p"): _*))
-        .groupBy((k :+ "n").map(col): _*)
+      converged = e.select(col("src").as("n"), lit(1L).as("c"), lit(0L).as("p"))
+        .unionAll(e.select(col("dst").as("n"), lit(0L).as("c"), lit(1L).as("p")))
+        .groupBy(col("n"))
         .agg(sum(col("c")).as("nc"), sum(col("p")).as("np"))
         .where((col("nc") > 0 && col("np") > 0) || col("nc") > 1)
         .isEmpty
@@ -174,19 +161,16 @@ object ConnectedComponents {
   /** Labels from a converged star forest: roots label themselves,
     * children take their parent, isolated `nodes` self-label.
     */
-  private def labelsOf(e: DataFrame, k: Seq[String],
-      nodes: Option[DataFrame]): DataFrame = {
-    val kc = k.map(col)
-    val roots = e.select(kc :+ col("dst").as("node"): _*).distinct()
-      .select(kc :+ col("node") :+ col("node").as("component"): _*)
-    val children =
-      e.select(kc :+ col("src").as("node") :+ col("dst").as("component"): _*)
+  private def labelsOf(e: DataFrame, nodes: Option[DataFrame]): DataFrame = {
+    val roots = e.select(col("dst").as("node")).distinct()
+      .select(col("node"), col("node").as("component"))
+    val children = e.select(col("src").as("node"), col("dst").as("component"))
     val labelled = children.unionAll(roots)
     nodes match {
       case Some(n) =>
-        val iso = n.select(kc :+ col("node").cast("long").as("node"): _*)
-          .join(labelled.select((k :+ "node").map(col): _*), k :+ "node", "left_anti")
-          .select(kc :+ col("node") :+ col("node").as("component"): _*)
+        val iso = n.select(col("node").cast("long").as("node"))
+          .join(labelled.select(col("node")), Seq("node"), "left_anti")
+          .select(col("node"), col("node").as("component"))
         labelled.unionAll(iso)
       case None => labelled
     }
@@ -223,40 +207,13 @@ object ConnectedComponents {
     */
   def largeStarSmallStar(edges: DataFrame, nodes: Option[DataFrame] = None,
       maxRounds: Int = 50): DataFrame = {
-    val e = contract(edges, Nil, maxRounds)
+    val e = contract(edges, maxRounds)
     // LAZY final checkpoint: the label union is consumed at least once
     // by every caller (often twice — a join plus a size aggregate), so
     // the first consumer's job materializes it off the converged edge
     // checkpoint; an eager checkpoint here paid one extra scheduled job
     // per call for the same truncation
-    val result = labelsOf(e, Nil, nodes).localCheckpoint(false)
-    e.unpersist()
-    result
-  }
-
-  /** [[largeStarSmallStar]] over SEVERAL independent edge sets at once,
-    * keyed by a batch column `g` (edges: `(g, src, dst)`, nodes:
-    * `(g, node)`): every batch advances through the SAME scheduled
-    * rounds — one checkpoint + one star-forest test per round covers
-    * all of them — instead of each fixpoint paying its own driver loop.
-    * A batch that converges early is carried by idempotence (both stars
-    * are no-ops on its star forest, and it is forest-sized by then);
-    * the loop ends when every batch is a forest, so the round count is
-    * the DEEPEST batch's — exactly the critical path the separate loops
-    * already paid, at one loop's scheduling cost.
-    *
-    * Labels per batch are identical to running [[largeStarSmallStar]]
-    * on that batch alone: every groupBy/join/test key is prefixed by
-    * `g`, so no information crosses batches (ConnectedComponentsSpec
-    * pins the agreement). The single-link dendrogram face is the
-    * consumer: one threshold ladder = one batched call.
-    *
-    * @return (g, node, component)
-    */
-  def largeStarSmallStarLevels(edges: DataFrame, nodes: Option[DataFrame] = None,
-      maxRounds: Int = 50): DataFrame = {
-    val e = contract(edges, Seq("g"), maxRounds)
-    val result = labelsOf(e, Seq("g"), nodes).localCheckpoint(false)
+    val result = labelsOf(e, nodes).localCheckpoint(false)
     e.unpersist()
     result
   }

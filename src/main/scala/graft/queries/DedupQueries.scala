@@ -234,21 +234,11 @@ object DedupQueries {
       val docs = Tables(s, dir, "documents")
       val verified = verified90(s, dir)
       val nodes = docs.select(col("doc_id").as("node"))
-      // CONCURRENT levels (r13, re-confirmed by measurement in r14):
-      // the r14 lock-step alternative — one batched star contraction
-      // keyed by the threshold (ConnectedComponents.
-      // largeStarSmallStarLevels, kept as API with its agreement spec)
-      // — was built and benchmarked: scheduled jobs fell 158 → 102,
-      // but wall clock ROSE 10.8 → 12.1 s at a matched floor, because
-      // the batched loop is one serial job chain while the concurrent
-      // futures overlap the two cheap levels' rounds inside the 0.30
-      // level's scheduler stalls (guide §2.6) — locally the overlap is
-      // worth more than the saved convergence tests. At cluster scale
-      // the same overlap argument holds (three independent DAGs, one
-      // pool), so the concurrent shape stays. The levels DO inherit
-      // the r14 contraction stride (two alternations per checkpoint +
-      // star-forest test after round 2), which is what the jobs map
-      // shows as the per-level round-economy delta.
+      // CONCURRENT levels: the futures overlap the two cheap levels'
+      // rounds inside the 0.30 level's scheduler stalls. One batched star
+      // contraction keyed by the threshold scheduled fewer jobs but was
+      // measured slower (one serial job chain); at cluster scale the
+      // overlap argument holds too (three independent DAGs, one pool).
       def statsOf(labels: org.apache.spark.sql.DataFrame, thr: Long) =
         labels.groupBy("component").agg(count(lit(1)).as("n"))
           .agg(count(lit(1)).as("n_clusters"), max(col("n")).as("max_cluster"),

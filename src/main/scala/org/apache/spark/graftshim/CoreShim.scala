@@ -12,8 +12,8 @@ object CoreShim {
     * Listener events are posted asynchronously; a job-count listener
     * read immediately after an action returns can miss starts still in
     * the bus queue (and then leak them into the NEXT measurement's
-    * delta). Bench drains the bus outside its timed region so per-query
-    * scheduled-job counts are exact.
+    * delta). `graft.Profile.measure` drains the bus outside its timed
+    * region so per-face scheduled-job counts are exact.
     */
   def drainListenerBus(sc: SparkContext, timeoutMs: Long = 10000L): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)

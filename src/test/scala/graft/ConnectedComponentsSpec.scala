@@ -130,38 +130,6 @@ class ConnectedComponentsSpec extends SparkTestBase {
       50L -> 50L, 51L -> 50L))
   }
 
-  test("largeStarSmallStarLevels: each batch's labels equal its standalone run") {
-    val rnd = new scala.util.Random(23)
-    val n = 120
-    // three nested edge sets (the threshold-ladder shape) plus one
-    // batch that is already a star forest at entry and one that is
-    // empty — early-converged batches must ride the deep batch's
-    // rounds unchanged
-    val base = Seq.fill(130)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      .filter(e => e._1 != e._2)
-    val sets: Map[Long, Seq[(Long, Long)]] = Map(
-      1L -> base,
-      2L -> base.take(40),
-      3L -> Seq((100L, 7L), (101L, 7L), (102L, 9L)),
-      4L -> Seq.empty)
-    val nodes = (0L until n.toLong)
-    val batchedEdges = sets.toSeq.flatMap { case (g, es) =>
-      es.map { case (s, d) => (g, s, d) } }.toDF("g", "src", "dst")
-    val batchedNodes = sets.keys.toSeq.flatMap(g => nodes.map(v => (g, v)))
-      .toDF("g", "node")
-    val batched = ConnectedComponents
-      .largeStarSmallStarLevels(batchedEdges, Some(batchedNodes))
-      .as[(Long, Long, Long)].collect()
-      .groupBy(_._1).map { case (g, rows) =>
-        g -> rows.map(r => r._2 -> r._3).toMap }
-    for ((g, es) <- sets) {
-      val alone = ConnectedComponents.largeStarSmallStar(
-        es.toDF("src", "dst"), nodes = Some(nodes.toDF("node")))
-        .as[(Long, Long)].collect().toMap
-      assert(batched(g) === alone, s"batch $g")
-    }
-  }
-
   test("empty edge list labels every node as itself") {
     val labels = ConnectedComponents.largeStarSmallStar(
       spark.emptyDataset[(Long, Long)].toDF("src", "dst"),

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Plan-REGRESSION gates for the load-bearing physical plans (VERDICT r3
-  * item 4): PlanAudit prints shuffle/broadcast counts for humans; this
+  * item 4): graft.Profile prints a plan fingerprint for humans; this
   * spec FAILS the build if a future change silently adds an exchange,
   * drops a broadcast, or reintroduces a whole-partition Window on a
   * dedup hot key. Assertions run on `queryExecution.sparkPlan` — the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.graftshim.CoreShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,20 +20,9 @@ trait SparkTestBase extends AnyFunSuite {
 
   def sc = spark.sparkContext
 
-  /** `body`'s result and the Spark jobs it submitted; the listener bus
-    * is drained before and after, so no job start is missed or leaked.
-    */
+  /** `body`'s result and the Spark jobs it submitted (see [[Profile.measure]]). */
   def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    CoreShim.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      CoreShim.drainListenerBus(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (out, s) = Profile.measure(spark)(body)
+    (out, s.jobs)
   }
 }
