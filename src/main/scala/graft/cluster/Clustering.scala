@@ -1,7 +1,9 @@
 package graft.cluster
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.core.{Fixpoint, Schemas}
 
 /** Chinese Whispers label propagation over the defragmented piece graph
   * (SURVEY.md §2.10; reference: chinese_label_propagation.py:58-200,
@@ -26,9 +28,9 @@ import org.apache.spark.sql.functions._
   *    before round 9). A per-node hash is partition-layout-independent:
   *    same seed → same clustering, on any cluster, after any retry.
   *    Pass a different seed per run for production parity.
-  *  - lineage truncation is pluggable (`checkpoint`): a parquet round-trip
-  *    by default (equivalent to the reference's alternating Hive
-  *    checkpoint tables).
+  *  - lineage truncation is a [[graft.core.Fixpoint.Checkpointer]]: the
+  *    durable parquet round-trip by default (the reference's alternating
+  *    Hive checkpoint tables).
   *  - vote deltas are built with explode + sum instead of a nested
   *    map_concat fold — same result, but the aggregation stays in
   *    whole-stage codegen instead of a per-row O(k²) map rebuild.
@@ -171,90 +173,13 @@ object Clustering {
         (col("tied") || col("count_updates").isNotNull).as("active"))
   }
 
-  /** Pluggable lineage truncation between iterations. */
-  type Checkpointer = (DataFrame, Int) => DataFrame
-
-  /** localCheckpoint-based truncation. CAUTION: localCheckpoint cuts the
-    * execution lineage but the resulting LogicalRDD carries the ORIGIN
-    * plan's statistics forward, so sizeInBytes estimates compound
-    * multiplicatively across iterations — enough iterations overflow
-    * Catalyst's BigInt stats ("BigInteger would overflow supported
-    * range"). Prefer the parquet round-trip (the reference's scheme),
-    * which resets stats to real file sizes every iteration.
-    */
-  val localCheckpointer: Checkpointer = (df, _) => df.localCheckpoint()
-
-  /** Hybrid truncation: localCheckpoint through round `localRounds`,
-    * durable parquet after. The stats-compounding hazard
-    * localCheckpointer documents is multiplicative in ROUND COUNT, so
-    * a bounded prefix of local rounds is safe — and for loops that
-    * usually converge within the prefix (k-core peels: a handful of
-    * rounds unless the graph is one long tendril) it removes the
-    * common case's per-round parquet write+read while keeping the
-    * durable scheme exactly where the unbounded tail begins.
-    */
-  def hybridCheckpointer(dir: String, localRounds: Int = 8): Checkpointer = {
-    val durable = parquetCheckpointer(dir)
-    (df, i) => if (i <= localRounds) df.localCheckpoint() else durable(df, i)
-  }
-
-  /** Durable alternating checkpoint, the reference's scheme (reference:
-    * chinese_label_propagation.py:189-197): write parquet, read back
-    * with the written schema (which skips Spark's schema-inference job).
-    * A `LATEST_ITER` marker is committed AFTER the table is durable —
-    * written to a temp name and RENAMED into place (atomic on
-    * HDFS/posix), both through the Hadoop filesystem of `dir`, so the
-    * scheme works on hdfs:// and s3a:// checkpoint dirs and a crash at
-    * any point leaves either the previous marker or the new one, never
-    * a partial file. The alternating two-table layout guarantees the
-    * marked table is never the one a crashed write half-overwrote.
-    */
-  def parquetCheckpointer(dir: String): Checkpointer = (df, i) => {
-    val path = s"$dir/clusters_counts_${i % 2}"
-    df.write.mode("overwrite").parquet(path)
-    val spark = df.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/LATEST_ITER")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/.LATEST_ITER.tmp")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(i.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(marker, false)
-    require(fs.rename(tmp, marker), s"could not commit checkpoint marker $marker")
-    spark.read.schema(df.schema).parquet(path)
-  }
-
-  /** Scan a [[parquetCheckpointer]] directory for the last completed
-    * iteration: (state at that iteration, iteration number), or None if
-    * no iteration ever completed. Feed the result to
-    * `propagate(resumeFrom = ...)` to restart a dead run where it
-    * stopped instead of from iteration 0 — the reference does the same
-    * manually by re-pointing its `iter` variable at the alternating
-    * checkpoint tables (chinese_label_propagation.py:75-77; restart
-    * guidance assets/README.md:250-251). The table's schema is inferred
-    * from its files, once per resume, so a file of an older state shape
-    * shows its real columns and `propagate` can refuse it.
-    */
-  def latestCheckpoint(spark: SparkSession, dir: String): Option[(DataFrame, Int)] = {
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/LATEST_ITER")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val text = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-      val i = text.toInt
-      Some((spark.read.parquet(s"$dir/clusters_counts_${i % 2}"), i))
-    }
-  }
-
   /** Run label propagation to convergence (no active nodes) or maxIter.
     * Returns clustered_defrag_pieces(piece_id, cluster_id) (reference:
     * downstream_clusters.py:13-29).
     *
     * `resumeFrom = Some((state, k))` restarts a dead run from the
-    * checkpointed state of iteration k (see [[latestCheckpoint]]): the
+    * checkpointed state of iteration k (see
+    * [[graft.core.Fixpoint.latestCheckpoint]]): the
     * loop continues at iteration k with the SAME per-node
     * hash(piece_id, seed + iteration) draws, so a killed-then-resumed
     * seeded run produces the same result as an unbroken one
@@ -266,63 +191,40 @@ object Clustering {
     */
   def propagate(adjacency: DataFrame, seed: Long = 42L, maxIter: Int = 100,
       updateProbability: Double = 0.9,
-      checkpointer: Option[Checkpointer] = None,
+      checkpointer: Option[Fixpoint.Checkpointer] = None,
       resumeFrom: Option[(DataFrame, Int)] = None): DataFrame = {
-    // default: durable alternating parquet checkpoint in a temp dir —
-    // resets both lineage AND plan statistics each iteration (see
-    // localCheckpointer caution). The temp dir is owned by THIS call
-    // and deleted on return (the result is pulled off it first);
-    // crash-resume needs a caller-supplied checkpointer with a caller-
-    // owned dir, which is also the only case latestCheckpoint can find.
-    val tmpDir = if (checkpointer.isEmpty)
-      Some(java.nio.file.Files.createTempDirectory("graft-cluster-ckpt")) else None
-    val checkpoint = checkpointer.getOrElse(parquetCheckpointer(tmpDir.get.toString))
-    // The convergence count piggybacks on the checkpoint write via the
-    // Observation API: the active-row count is collected DURING the
-    // materializing action, so each iteration runs exactly one job
-    // instead of write + a second count scan over the fresh checkpoint.
-    // (Requires the checkpointer to run an action on the df it is given —
-    // both built-in checkpointers do: parquet write / eager localCheckpoint.)
-    def checkpointCounting(df: DataFrame, i: Int): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(s"graft_cw_active_$i")
-      val out = checkpoint(
-        df.observe(obs, sum(when(col("active"), 1L).otherwise(0L)).as("active")), i)
-      (out, Option(obs.get("active")).map(_.asInstanceOf[Long]).getOrElse(0L))
+    def run(checkpoint: Fixpoint.Checkpointer): DataFrame = {
+      def round(df: DataFrame, i: Int): (DataFrame, Long) =
+        Fixpoint.observedRound(checkpoint, "graft_cw_active", i, df,
+          sum(when(col("active"), 1L).otherwise(0L)))
+      var (state, active, iter) = resumeFrom match {
+        case Some((st, k)) =>
+          // a checkpoint written before the state carried its adjacency
+          // would resume with no messages to send: refuse it by name
+          for (f <- Schemas.clusterState.fieldNames)
+            require(st.columns.contains(f),
+              s"resume state lacks column `$f` (has ${st.columns.mkString(", ")})")
+          // one count over the already-durable checkpoint, once per resume
+          (st, st.filter(col("active")).count(), k)
+        case None =>
+          val (st, act) = round(initialState(adjacency), 0)
+          (st, act, 0)
+      }
+      while (active > 0 && iter < maxIter) {
+        val next = step(state, seed, iter, updateProbability)
+        iter += 1
+        val (st, act) = round(next, iter)
+        state = st
+        active = act
+      }
+      state.select("piece_id", "cluster_id")
     }
-    var (state, active, iter) = resumeFrom match {
-      case Some((st, k)) =>
-        // a checkpoint written before the state carried its adjacency
-        // would resume with no messages to send: refuse it by name
-        for (f <- graft.core.Schemas.clusterState.fieldNames)
-          require(st.columns.contains(f),
-            s"resume state lacks column `$f` (has ${st.columns.mkString(", ")})")
-        // one count over the already-durable checkpoint — once per
-        // resume, not per iteration (the loop's own counts stay on the
-        // Observation API)
-        (st, st.filter(col("active")).count(), k)
-      case None =>
-        val (st, act) = checkpointCounting(initialState(adjacency), 0)
-        (st, act, 0)
-    }
-    while (active > 0 && iter < maxIter) {
-      val next = step(state, seed, iter, updateProbability)
-      iter += 1
-      val (st, act) = checkpointCounting(next, iter)
-      state = st
-      active = act
-    }
-    val out = state.select("piece_id", "cluster_id")
-    tmpDir match {
-      case Some(dir) =>
-        // materialize off the checkpoint files, then delete them — the
-        // default-dir path would otherwise leak two full label tables
-        // in /tmp per call (every bench run, every spec)
-        val materialized = out.localCheckpoint()
-        val fs = new org.apache.hadoop.fs.Path(dir.toString)
-          .getFileSystem(adjacency.sparkSession.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(dir.toString), true)
-        materialized
-      case None => out
+    // a caller-supplied checkpointer owns its directory, the only one
+    // latestCheckpoint can find; otherwise this call owns a scratch one
+    checkpointer match {
+      case Some(c) => run(c)
+      case None => Fixpoint.scratch(adjacency.sparkSession, "graft-cluster-ckpt",
+        Fixpoint.parquetCheckpointer)(run)
     }
   }
 }

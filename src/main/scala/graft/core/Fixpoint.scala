@@ -1,0 +1,127 @@
+package graft.core
+
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+
+/** What the converged DataFrame loops (`Clustering.propagate`,
+  * `KCore.peelConverged`, `PageRank.runConverged`,
+  * `Dedup.dedupGroupsConverged`) share: how a round cuts its lineage,
+  * how it reads its convergence value, and who owns the directory its
+  * checkpoints go to. Each loop keeps its own step, `while` and stop
+  * test.
+  *
+  * Invariants:
+  *  - a [[Checkpointer]] runs an action on the frame it is given, and
+  *    [[observedRound]] collects the round's value during that action:
+  *    one job per round, never a write plus a second count scan;
+  *  - `localCheckpoint` carries the origin plan's statistics forward, so
+  *    size estimates compound multiplicatively with the round count
+  *    until Catalyst's BigInt stats overflow ("BigInteger would overflow
+  *    supported range"); the parquet round-trip resets them to real file
+  *    sizes. A bounded prefix of local rounds is safe
+  *    ([[hybridCheckpointer]]), an unbounded run of them is not;
+  *  - the durable layout is the reference's alternating two-table scheme
+  *    (chinese_label_propagation.py:189-197): round i writes
+  *    `clusters_counts_{i % 2}` and then commits `LATEST_ITER` = i by
+  *    rename, so a crash leaves the previous marker or the new one, and
+  *    the marked table is never the one a crashed write half-overwrote;
+  *  - a [[scratch]] directory belongs to one call: the result is
+  *    materialized off its files before it is deleted, and it is deleted
+  *    on every exit, a throw or a loud cap included;
+  *  - the checkpoint scheme never changes a loop's result: the loops are
+  *    deterministic in their inputs (Chinese Whispers' draws are hashes
+  *    of (piece_id, seed + iteration)), so only cost and crash tolerance
+  *    depend on it.
+  */
+object Fixpoint {
+
+  /** Cuts the lineage of round `i`'s frame; returns the frame to read on. */
+  type Checkpointer = (DataFrame, Int) => DataFrame
+
+  /** Rounds a [[hybridCheckpointer]] cuts locally before it turns durable. */
+  val LocalRounds = 8
+
+  /** `localCheckpoint` every round: no files, no crash tolerance, and only
+    * for a bounded round count (see the statistics invariant above).
+    */
+  val localCheckpointer: Checkpointer = (df, _) => df.localCheckpoint()
+
+  /** The durable alternating checkpoint. The table is read back with the
+    * schema just written (no schema-inference job), and the marker is
+    * written to a temp name and renamed into place through the Hadoop
+    * filesystem of `dir`, so the scheme works on hdfs:// and s3a:// too.
+    */
+  def parquetCheckpointer(dir: String): Checkpointer = (df, i) => {
+    val path = s"$dir/clusters_counts_${i % 2}"
+    df.write.mode("overwrite").parquet(path)
+    val spark = df.sparkSession
+    val marker = new Path(s"$dir/LATEST_ITER")
+    val tmp = new Path(s"$dir/.LATEST_ITER.tmp")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(tmp, true)
+    try out.write(i.toString.getBytes(UTF_8))
+    finally out.close()
+    fs.delete(marker, false)
+    require(fs.rename(tmp, marker), s"could not commit checkpoint marker $marker")
+    spark.read.schema(df.schema).parquet(path)
+  }
+
+  /** Local truncation through round [[LocalRounds]], durable parquet
+    * after: loops that usually converge within the prefix skip the
+    * per-round parquet write and read, and the durable scheme starts
+    * where an unbounded tail would compound local statistics.
+    */
+  def hybridCheckpointer(dir: String): Checkpointer = {
+    val durable = parquetCheckpointer(dir)
+    (df, i) => if (i <= LocalRounds) df.localCheckpoint() else durable(df, i)
+  }
+
+  /** The last round a [[parquetCheckpointer]] committed in `dir`: (its
+    * frame, its round number), or None if no round completed. A loop that
+    * resumes from it continues where a dead run stopped, as the reference
+    * does by re-pointing its `iter` at the alternating tables
+    * (chinese_label_propagation.py:75-77). The schema is inferred from
+    * the files, once per resume, so a file of an older row shape shows
+    * its real columns and the loop can refuse it.
+    */
+  def latestCheckpoint(spark: SparkSession, dir: String): Option[(DataFrame, Int)] = {
+    val marker = new Path(s"$dir/LATEST_ITER")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(marker)) None
+    else {
+      val in = fs.open(marker)
+      val i = try new String(in.readAllBytes(), UTF_8).trim.toInt
+      finally in.close()
+      Some((spark.read.parquet(s"$dir/clusters_counts_${i % 2}"), i))
+    }
+  }
+
+  /** Round `i` of a loop: observes the aggregate `value` on `df` as the
+    * Observation `<name>_<i>`, keeps the columns `keep` (all of them when
+    * empty), checkpoints, and returns (checkpointed frame, value). An
+    * aggregate over zero rows is null and reads as 0: an empty frame has
+    * nothing left to change.
+    */
+  def observedRound(checkpoint: Checkpointer, name: String, i: Int,
+      df: DataFrame, value: Column, keep: Column*): (DataFrame, Long) = {
+    val obs = Observation(s"${name}_$i")
+    val observed = df.observe(obs, value.as("value"))
+    val out = checkpoint(if (keep.isEmpty) observed else observed.select(keep: _*), i)
+    (out, Option(obs.get("value")).fold(0L)(_.asInstanceOf[Long]))
+  }
+
+  /** Runs `body` with a checkpointer over a fresh per-call directory
+    * under `java.io.tmpdir`, materializes its result off the checkpoint
+    * files with `localCheckpoint`, and deletes the directory, also when
+    * `body` throws. Callers release their own caches in a `finally`
+    * around this call.
+    */
+  def scratch(spark: SparkSession, prefix: String, checkpointer: String => Checkpointer)(
+      body: Checkpointer => DataFrame): DataFrame = {
+    val dir = new Path(java.nio.file.Files.createTempDirectory(prefix).toString)
+    try body(checkpointer(dir.toString)).localCheckpoint()
+    finally dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+  }
+}

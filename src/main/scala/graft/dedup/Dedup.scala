@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixpoint
 import graft.text.TextAnalysis
 
 /** Deduplication operators for training-data pipelines over
@@ -476,12 +477,11 @@ object Dedup {
     * `rounds` is a FIXED count, not a convergence loop, deliberately:
     * the result after exactly k rounds is deterministic and therefore
     * re-derivable by the DuckDB oracle as k unrolled CTE blocks
-    * (convergence would need a driver-side loop probe per iteration —
-    * see Clustering for the observed-convergence pattern when you need
-    * it). Near-dup graphs are dense inside a group (LSH links most pair
-    * combinations), so small k covers real components; DedupSpec
-    * asserts exact components on chains longer than k as a reminder of
-    * the contract.
+    * (convergence needs a driver-side probe per round — that is
+    * [[dedupGroupsConverged]]). Near-dup graphs are dense inside a
+    * group (LSH links most pair combinations), so small k covers real
+    * components; DedupSpec asserts exact components on chains longer
+    * than k as a reminder of the contract.
     *
     * Scale shape: each round is one self-contained
     * join-on-edges + groupBy(doc_id).min — shuffles (doc, label) pairs
@@ -545,88 +545,51 @@ object Dedup {
     * changes ZERO labels, so connected components of ANY diameter fully
     * merge — the fixed-k variant stays the oracle-checkable face (its
     * k-round result is re-derivable as unrolled CTEs), this one is the
-    * convergence face (rows-only checkable, like Clustering.propagate).
-    *
-    * The changed-label count piggybacks on each round's checkpoint
-    * action via the Observation API — one job per round, not
-    * write + a second count scan (same pattern as Clustering.propagate).
-    * Lineage/stat truncation is the pluggable
-    * [[graft.cluster.Clustering.Checkpointer]]; the default is the
-    * HYBRID scheme (r13): local truncation for the first 8 rounds,
-    * the durable parquet round-trip after — where `localCheckpoint`'s
-    * origin-plan statistics compounding would start to matter (see
-    * Clustering.localCheckpointer's caution).
+    * convergence face. The changed-label count is an observed round
+    * with hybrid checkpointing ([[graft.core.Fixpoint]]). Throws when
+    * `maxRounds` rounds still change labels.
     *
     * Scale shape per round is identical to [[dedupGroups]]: one
     * edges-join + partial-aggregated groupBy(doc_id).min shuffling
     * (doc, label) pairs only; the edge list is persisted once.
     */
   def dedupGroupsConverged(docs: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 100,
-      checkpointer: Option[graft.cluster.Clustering.Checkpointer] = None): DataFrame = {
-    // the default checkpoint dir is owned by THIS call and deleted on
-    // return (the result is localCheckpoint-materialized off it first);
-    // a caller-supplied checkpointer owns its own lifecycle
-    val tmpDir = if (checkpointer.isEmpty)
-      Some(java.nio.file.Files.createTempDirectory("graft-dedup-conv")) else None
-    // r13: HYBRID default (the KCore.peelConverged rationale) — local
-    // truncation while the round count is small, the durable parquet
-    // round-trip from round 9 where localCheckpoint's origin-plan stats
-    // compounding would start to matter. Checkpointing never changes
-    // the labels (deterministic min-label rounds).
-    val checkpoint = checkpointer.getOrElse(
-      graft.cluster.Clustering.hybridCheckpointer(tmpDir.get.toString))
-    // pre-partitioned on the round join key — the dedupGroups r14 note
+      maxRounds: Int = 100): DataFrame = {
+    // pre-partitioned on the round join key, as in dedupGroups
     val edges = pairs.select(col("doc_id_a").as("doc_id"), col("doc_id_b").as("nbr"))
       .unionAll(pairs.select(col("doc_id_b").as("doc_id"), col("doc_id_a").as("nbr")))
       .repartition(col("nbr"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = docs.select(col("doc_id"), col("doc_id").as("group_id"))
-    var changed = 1L
-    var r = 0
-    while (changed > 0L && r < maxRounds) {
-      r += 1
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("nbr"), col("group_id").as("nbr_group")),
-          Seq("nbr"))
-        .groupBy("doc_id")
-        .agg(min("nbr_group").as("nbr_min"))
-      val next = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("group_id"),
-          least(col("group_id"), coalesce(col("nbr_min"), col("group_id")))
-            .as("new_group"))
-      val obs = org.apache.spark.sql.Observation(s"graft_dedup_conv_$r")
-      val observed = next
-        .observe(obs, sum(when(col("new_group") =!= col("group_id"), 1L)
-          .otherwise(0L)).as("changed"))
-        .select(col("doc_id"), col("new_group").as("group_id"))
-      labels = checkpoint(observed, r)
-      // sum over zero rows is null — an empty corpus is converged
-      changed = Option(obs.get("changed")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    }
-    // fall through while still changing = the contract ("components of
-    // any diameter fully merge") is NOT met, and a partially-merged
-    // result is indistinguishable from a converged one downstream —
-    // fail loudly; the caller raises maxRounds
-    require(changed == 0L,
-      s"dedupGroupsConverged did not converge within $maxRounds rounds " +
-        s"($changed labels still changing); raise maxRounds")
-    // the returned frame reads from the final checkpoint, not the edge
-    // cache, so the per-call cache can be released immediately
-    val out = labels.select(col("doc_id"), col("group_id"),
-      (col("doc_id") === col("group_id")).as("is_canonical"))
-    edges.unpersist()
-    tmpDir match {
-      case Some(dir) =>
-        // pull the result off the checkpoint files, then delete them —
-        // otherwise every call leaks two full label tables in /tmp
-        val materialized = out.localCheckpoint()
-        val fs = new org.apache.hadoop.fs.Path(dir.toString)
-          .getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(dir.toString), true)
-        materialized
-      case None => out
-    }
+    try Fixpoint.scratch(docs.sparkSession, "graft-dedup-conv",
+        Fixpoint.hybridCheckpointer) { checkpoint =>
+      var labels = docs.select(col("doc_id"), col("doc_id").as("group_id"))
+      var changed = 1L
+      var r = 0
+      while (changed > 0L && r < maxRounds) {
+        r += 1
+        val nbrMin = edges
+          .join(labels.select(col("doc_id").as("nbr"), col("group_id").as("nbr_group")),
+            Seq("nbr"))
+          .groupBy("doc_id")
+          .agg(min("nbr_group").as("nbr_min"))
+        val next = labels.join(nbrMin, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("group_id"),
+            least(col("group_id"), coalesce(col("nbr_min"), col("group_id")))
+              .as("new_group"))
+        val (l, c) = Fixpoint.observedRound(checkpoint, "graft_dedup_conv", r, next,
+          sum(when(col("new_group") =!= col("group_id"), 1L).otherwise(0L)),
+          col("doc_id"), col("new_group").as("group_id"))
+        labels = l
+        changed = c
+      }
+      // stopping while labels still change would return a partially
+      // merged result, indistinguishable from a converged one downstream
+      require(changed == 0L,
+        s"dedupGroupsConverged did not converge within $maxRounds rounds " +
+          s"($changed labels still changing); raise maxRounds")
+      labels.select(col("doc_id"), col("group_id"),
+        (col("doc_id") === col("group_id")).as("is_canonical"))
+    } finally edges.unpersist()
   }
 
   /** Semi-supervised label propagation over the near-dup pair graph —

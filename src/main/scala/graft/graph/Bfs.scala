@@ -41,41 +41,49 @@ object Bfs {
     * IS the result; callers wanting nulls left-join it back.
     */
   def hopDistance(edges: DataFrame, seeds: DataFrame,
-      maxHops: Int = 30): DataFrame = {
+      maxHops: Int = 30): DataFrame =
+    hopWave(edges, seeds.select(col("node").cast("long").as("node")), maxHops)
+
+  /** The stride-2 hop wave behind [[hopDistance]] and
+    * `Centrality.perSourceHopDistance`: `start` holds the key columns,
+    * `node` last; a key's row at hops h is reached from a key at h-1
+    * that differs only in `node`. Returns (key..., hops), every key
+    * first reached within `maxHops`.
+    */
+  private[graph] def hopWave(edges: DataFrame, start: DataFrame,
+      maxHops: Int): DataFrame = {
+    val key = start.columns.toSeq
+    val carried = key.init.map(col)
     val sym = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
-    // distinct leaves the cache partitioned on (src, dst); one more
-    // src-only repartition makes the cached layout satisfy every
-    // round's join distribution, so only the frontier side reshuffles
+    // src-partitioned BEFORE the distinct: the dedup runs on that one
+    // exchange (hash(src) satisfies its (src, dst) grouping) and the
+    // cached layout satisfies every round's join distribution, so only
+    // the frontier side reshuffles
     val adj = sym.unionAll(sym.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
       .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = seeds.select(col("node").cast("long").as("node"))
       .distinct()
-      .withColumn("hops", lit(0L))
-      .localCheckpoint()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var labels = start.distinct().withColumn("hops", lit(0L)).localCheckpoint()
     var frontier = labels
-    var frontierRows = frontier.count()
+    // STRIDE-2 rounds: a node's hop label is its shortest-path length
+    // however the wave is scheduled, so expanding TWO levels inside one
+    // scheduled round (level hop+1, then level hop+2 excluding both the
+    // labels and the first expansion) assigns the same hops and halves
+    // the per-round fixed cost (gating count, merge, driver round-trip);
+    // the per-level exchanges are the algorithm and stay. The odd tail
+    // under the maxHops cap falls back to a single-level round, so the
+    // capped output equals the one-level loop's (the oracle caps at the
+    // same hop count).
+    var frontierRows = 1L
     var hop = 0L
-    // STRIDE-2 rounds (r13): BFS levels are schedule-independent — the
-    // hop label of a node is its shortest-path length however the wave
-    // is scheduled — so expanding TWO levels inside one scheduled round
-    // (level hop+1, then level hop+2 excluding both the labels and the
-    // first expansion) assigns exactly the same hop to every node and
-    // halves the driver round count. The per-level exchanges are
-    // unchanged (that is the algorithm); what halves is the per-round
-    // fixed cost — gating count, merge, driver round-trip. The odd tail
-    // under the maxHops cap falls back to a single-level round so the
-    // capped output set is IDENTICAL to the one-level loop (the oracle
-    // caps at the same hop count).
     while (hop < maxHops && frontierRows > 0) {
       def level(f: DataFrame, seen: Seq[DataFrame], h: Long): DataFrame = {
         val nbrs = f.join(adj, col("node") === col("src"))
-          .select(col("dst").as("node"))
+          .select(carried :+ col("dst").as("node"): _*)
           .distinct()
-        seen.foldLeft(nbrs)((d, s) => d.join(s, Seq("node"), "left_anti"))
+        seen.foldLeft(nbrs)((d, s) => d.join(s, key, "left_anti"))
           .withColumn("hops", lit(h))
           .localCheckpoint(false)
       }
@@ -166,7 +174,7 @@ object Bfs {
           .select(col("cand").as("node"), col("cand_dist").as("dist"))
           .localCheckpoint(false)
         frontierRows = improved.count()
-        // lazy merge (r13, the hopDistance note): the next round's
+        // lazy merge (the hopWave note): the next round's
         // gating count materializes it — one fewer job per round
         if (frontierRows > 0) {
           dist = dist.join(improved.select(col("node")), Seq("node"), "left_anti")
@@ -287,7 +295,7 @@ object Bfs {
           .select(col("cand").as("node"), col("cand_arr").as("arrival_s"))
           .localCheckpoint(false)
         frontierRows = improved.count()
-        // lazy merge (r13, the hopDistance note): the next round's
+        // lazy merge (the hopWave note): the next round's
         // gating count materializes it — one fewer job per round
         if (frontierRows > 0) {
           arrival = arrival.join(improved.select(col("node")), Seq("node"), "left_anti")

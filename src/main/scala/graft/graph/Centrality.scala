@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Node-centrality measures beyond rank propagation: local clustering
   * coefficients (how clique-like is each node's neighbourhood) and
@@ -57,69 +56,13 @@ object Centrality {
     * the all-pairs-from-landmarks primitive; callers bound the seed
     * set, exactly like the reference bounds its cluster samples).
     *
-    * Same loop discipline as [[Bfs.hopDistance]]: monotone-shrinking
-    * frontier via anti-join on visited (seed, node) pairs, persisted
-    * symmetric adjacency reshuffled only on the frontier side, per-round
-    * localCheckpoint to truncate the union lineage, exact termination on
-    * the empty frontier below the `maxHops` cap (hop distances are
-    * schedule-independent, so the capped recursive-CTE twin re-derives
-    * them exactly).
-    *
     * @return (seed, node, hops) — pairs beyond `maxHops` absent
     */
   def perSourceHopDistance(edges: DataFrame, seeds: DataFrame,
-      maxHops: Int = 30): DataFrame = {
-    val sym = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .where(col("src") =!= col("dst"))
-    val adj = sym.unionAll(sym.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = seeds.select(col("node").cast("long").as("seed"))
-      .distinct()
-      .select(col("seed"), col("seed").as("node"), lit(0L).as("hops"))
-      .localCheckpoint()
-    var frontier = labels
-    // counted lazy drain + lazy merge (r13, the Bfs.hopDistance round
-    // shape): the wave checkpoint writes inside its own gating count,
-    // and the label merge — an exchange-free read of two cached sides —
-    // materializes inside the NEXT round's count. One scheduled job per
-    // round where the eager shape paid three (checkpoint, merge,
-    // isEmpty probe).
-    // STRIDE-2 rounds (r13, the Bfs.hopDistance shape): two BFS levels
-    // per scheduled round — hop labels are schedule-independent, the
-    // odd tail under the cap falls back to one level, so the capped
-    // output is identical to the one-level loop
-    var frontierRows = 1L
-    var hop = 0L
-    while (hop < maxHops && frontierRows > 0) {
-      def level(f: DataFrame, seen: Seq[DataFrame], h: Long): DataFrame = {
-        val nbrs = f.join(adj, col("node") === col("src"))
-          .select(col("seed"), col("dst").as("node"))
-          .distinct()
-        seen.foldLeft(nbrs)((d, s) => d.join(s, Seq("seed", "node"), "left_anti"))
-          .withColumn("hops", lit(h))
-          .localCheckpoint(false)
-      }
-      if (hop + 2 <= maxHops) {
-        val h1 = level(frontier, Seq(labels), hop + 1)
-        val h2 = level(h1, Seq(labels, h1), hop + 2)
-        frontierRows = h2.count()
-        labels = labels.unionAll(h1).unionAll(h2).localCheckpoint(false)
-        frontier = h2
-        hop += 2
-      } else {
-        val next = level(frontier, Seq(labels), hop + 1)
-        frontierRows = next.count()
-        if (frontierRows > 0)
-          labels = labels.unionAll(next).localCheckpoint(false)
-        frontier = next
-        hop += 1
-      }
-    }
-    adj.unpersist()
-    labels
-  }
+      maxHops: Int = 30): DataFrame =
+    Bfs.hopWave(edges,
+      seeds.select(col("node").cast("long").as("seed"), col("node").cast("long").as("node")),
+      maxHops)
 
   /** Closeness centrality for a bounded seed set (Wasserman–Faust
     * normalization, so scores are comparable across components of

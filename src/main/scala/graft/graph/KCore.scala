@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixpoint
+
 /** k-core decomposition by iterative peeling — the standard graph
   * denoising pass before community/authority analysis (nodes outside
   * the k-core are tendrils that distort clustering and rank): drop
@@ -54,64 +56,48 @@ object KCore {
   }
 
   /** Converged peel: rounds run until one removes zero nodes, counted
-    * via the Observation API on each round's checkpoint. Checkpointing
-    * is the pluggable Clustering.Checkpointer, defaulting to the
-    * HYBRID scheme: local truncation for the first 8 rounds — real
-    * graphs peel to their core in a handful, and a parquet write+read
-    * per round would dominate the whole operator — then the durable
-    * parquet round-trip exactly where the unbounded deep-tendril tail
-    * begins (one node per round, where localCheckpoint's origin-plan
-    * statistics would compound — the dedupGroupsConverged /
-    * PageRank.runConverged rationale).
+    * by an observed round ([[graft.core.Fixpoint]], hybrid
+    * checkpointing: real graphs peel to their core in a handful of
+    * rounds, a long tendril peels one node per round). Throws when
+    * `maxRounds` rounds still remove nodes.
     */
-  def peelConverged(edges: DataFrame, k: Int, maxRounds: Int = 1000,
-      checkpointer: Option[graft.cluster.Clustering.Checkpointer] = None): DataFrame = {
+  def peelConverged(edges: DataFrame, k: Int, maxRounds: Int = 1000): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val tmpDir = if (checkpointer.isEmpty)
-      Some(java.nio.file.Files.createTempDirectory("graft-kcore")) else None
-    val checkpoint = checkpointer.getOrElse(
-      graft.cluster.Clustering.hybridCheckpointer(tmpDir.get.toString))
     val e = edges.select(col("src"), col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = e.select(col("src").as("node")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var alive = nodes
-    // previous round's survivor count; each later round's count rides
-    // that round's Observation, so only this bootstrap count is a
-    // dedicated job (bounded metadata over the persisted node set)
-    var lastAlive = nodes.count()
-    var removed = 1L
-    var r = 0
-    while (removed > 0L && r < maxRounds) {
-      r += 1
-      val induced = e
-        .join(alive.select(col("node").as("src")), Seq("src"))
-        .join(alive.select(col("node").as("dst")), Seq("dst"))
-      val next = induced.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k)
-        .select(col("node"))
-      val obs = org.apache.spark.sql.Observation(s"graft_kcore_$r")
-      val observed = next.observe(obs, count(lit(1)).as("n_alive"))
-      alive = checkpoint(observed, r)
-      val nAlive = Option(obs.get("n_alive")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      removed = lastAlive - nAlive
-      lastAlive = nAlive
+    try Fixpoint.scratch(edges.sparkSession, "graft-kcore",
+        Fixpoint.hybridCheckpointer) { checkpoint =>
+      var alive = nodes
+      // previous round's survivor count; each later round's count rides
+      // that round's Observation, so only this bootstrap count is a
+      // dedicated job (bounded metadata over the persisted node set)
+      var lastAlive = nodes.count()
+      var removed = 1L
+      var r = 0
+      while (removed > 0L && r < maxRounds) {
+        r += 1
+        val induced = e
+          .join(alive.select(col("node").as("src")), Seq("src"))
+          .join(alive.select(col("node").as("dst")), Seq("dst"))
+        val next = induced.groupBy(col("src").as("node"))
+          .agg(count(lit(1)).as("deg"))
+          .where(col("deg") >= k)
+          .select(col("node"))
+        val (a, nAlive) =
+          Fixpoint.observedRound(checkpoint, "graft_kcore", r, next, count(lit(1)))
+        alive = a
+        removed = lastAlive - nAlive
+        lastAlive = nAlive
+      }
+      require(removed == 0L,
+        s"k-core peel did not stabilize within $maxRounds rounds; raise maxRounds")
+      nodes.join(alive.withColumn("in_core", lit(true)), Seq("node"), "left")
+        .select(col("node"), coalesce(col("in_core"), lit(false)).as("in_core"))
+    } finally {
+      e.unpersist()
+      nodes.unpersist()
     }
-    require(removed == 0L,
-      s"k-core peel did not stabilize within $maxRounds rounds; raise maxRounds")
-    val out = nodes.join(alive.withColumn("in_core", lit(true)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("in_core"), lit(false)).as("in_core"))
-      .localCheckpoint()
-    e.unpersist()
-    nodes.unpersist()
-    tmpDir.foreach { dir =>
-      // the result is localCheckpoint-materialized off the checkpoint
-      // files above, so the per-call directory can go
-      val fs = new org.apache.hadoop.fs.Path(dir.toString)
-        .getFileSystem(edges.sparkSession.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir.toString), true)
-    }
-    out
   }
 }

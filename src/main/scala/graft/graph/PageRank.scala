@@ -3,13 +3,15 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixpoint
+
 /** Fixed-point PageRank over a directed edge list — the graph-authority
   * primitive of LLM-era corpus curation (domain-authority weighting for
   * crawl corpora, citation ranking of source documents). The reference
   * has no rank operator beyond label propagation
-  * (`/root/reference/etl_textreuse/assets/chinese_label_propagation.py`);
-  * this is the extension counterpart, built on the same
-  * iterated-equi-join shape as `graft.cluster.Clustering`.
+  * (`chinese_label_propagation.py`); this is the extension
+  * counterpart, built on the same iterated-equi-join shape as Chinese
+  * Whispers.
   *
   * All arithmetic is INTEGER (ranks in `scale`-units, floor division),
   * so results are exact and identical on any engine, partitioning, or
@@ -222,41 +224,24 @@ object PageRank {
     out
   }
 
-  /** Observed-convergence twin of [[run]] (same pattern as
-    * `Dedup.dedupGroupsConverged` / `Clustering.propagate`): iterate
-    * until the LARGEST per-node rank change is at most `tolS`
-    * scale-units. The fixed-iteration variant stays the
-    * oracle-checkable face (its result is re-derivable as unrolled
-    * CTEs); this is the production face — damping makes the iteration a
-    * contraction, so ~log(scale/tolS)/log(100/dampingPct) rounds
+  /** Observed-convergence twin of [[run]]: iterate until the LARGEST
+    * per-node rank change is at most `tolS` scale-units. The
+    * fixed-iteration variant stays the oracle-checkable face (its
+    * result is re-derivable as unrolled CTEs); this is the production
+    * face — damping makes the iteration a contraction, so
+    * ~log(scale/tolS)/log(100/dampingPct) rounds converge, usually
+    * within the local prefix of the hybrid checkpointing
+    * ([[graft.core.Fixpoint]]). Throws when `maxIters` rounds do not
     * converge.
-    *
-    * The max-delta observation piggybacks on each round's checkpoint
-    * action (Observation API — one job per round, no second scan).
-    * Checkpointing is the pluggable Clustering.Checkpointer; the
-    * default is the HYBRID scheme (r13, the KCore.peelConverged
-    * rationale): local truncation for the first 8 rounds — the damping
-    * contraction usually converges within them, and a parquet
-    * write+read per round is the dominant cost of the whole loop — then
-    * the durable parquet round-trip exactly where localCheckpoint's
-    * origin-plan statistics compounding would start to matter.
-    * Checkpointing never changes the ranks (integer arithmetic, no
-    * randomness), so both schemes produce identical output.
     */
   def runConverged(edges: DataFrame, tolS: Long = 1000L, dampingPct: Int = 85,
-      scale: Long = 1000000L, maxIters: Int = 100,
-      checkpointer: Option[graft.cluster.Clustering.Checkpointer] = None): DataFrame = {
+      scale: Long = 1000000L, maxIters: Int = 100): DataFrame = {
     require(tolS >= 0, s"tolS must be >= 0, got $tolS")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
-    val tmpDir = if (checkpointer.isEmpty)
-      Some(java.nio.file.Files.createTempDirectory("graft-pagerank-conv")) else None
-    val checkpoint = checkpointer.getOrElse(
-      graft.cluster.Clustering.hybridCheckpointer(tmpDir.get.toString))
-
     val e = edges.select(col("src"), col("dst"))
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // pre-partitioned caches — the run() r14 note
+    // pre-partitioned caches, as in run()
     val withDeg = e.join(deg, Seq("src"))
       .repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -264,46 +249,37 @@ object PageRank {
       .unionAll(e.select(col("dst").as("node"))).distinct()
       .repartition(col("node"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     val baseTerm = (100L - dampingPct) * scale / 100L
-    var ranks = nodes.select(col("node"), lit(scale).as("rank_s"))
-    var maxDelta = Long.MaxValue
-    var i = 0
-    while (maxDelta > tolS && i < maxIters) {
-      i += 1
-      val contrib = withDeg
-        .join(ranks.select(col("node").as("src"), col("rank_s")), Seq("src"))
-        .select(col("dst"), expr("rank_s div deg").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("s"))
-      val next = ranks
-        .join(contrib.select(col("dst").as("node"), col("s")), Seq("node"), "left")
-        .select(col("node"), col("rank_s").as("prev_s"),
-          (lit(baseTerm) +
-            expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("new_s"))
-      val obs = org.apache.spark.sql.Observation(s"graft_pagerank_conv_$i")
-      val observed = next
-        .observe(obs, max(abs(col("new_s") - col("prev_s"))).as("max_delta"))
-        .select(col("node"), col("new_s").as("rank_s"))
-      ranks = checkpoint(observed, i)
-      // max over zero rows is null — an empty graph is converged
-      maxDelta = Option(obs.get("max_delta")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    }
-    // a partially-converged rank table is indistinguishable from a
-    // converged one downstream — fail loudly; the caller raises maxIters
-    require(maxDelta <= tolS,
-      s"PageRank did not converge within $maxIters iterations " +
-        s"(max rank delta $maxDelta > tolS=$tolS); raise maxIters")
-    withDeg.unpersist()
-    nodes.unpersist()
-    tmpDir match {
-      case Some(dir) =>
-        // pull the result off the checkpoint files, then delete them
-        val materialized = ranks.localCheckpoint()
-        val fs = new org.apache.hadoop.fs.Path(dir.toString)
-          .getFileSystem(edges.sparkSession.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(dir.toString), true)
-        materialized
-      case None => ranks
+    try Fixpoint.scratch(edges.sparkSession, "graft-pagerank-conv",
+        Fixpoint.hybridCheckpointer) { checkpoint =>
+      var ranks = nodes.select(col("node"), lit(scale).as("rank_s"))
+      var maxDelta = Long.MaxValue
+      var i = 0
+      while (maxDelta > tolS && i < maxIters) {
+        i += 1
+        val contrib = withDeg
+          .join(ranks.select(col("node").as("src"), col("rank_s")), Seq("src"))
+          .select(col("dst"), expr("rank_s div deg").as("c"))
+          .groupBy("dst").agg(sum(col("c")).as("s"))
+        val next = ranks
+          .join(contrib.select(col("dst").as("node"), col("s")), Seq("node"), "left")
+          .select(col("node"), col("rank_s").as("prev_s"),
+            (lit(baseTerm) +
+              expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("new_s"))
+        val (r, d) = Fixpoint.observedRound(checkpoint, "graft_pagerank_conv", i, next,
+          max(abs(col("new_s") - col("prev_s"))), col("node"), col("new_s").as("rank_s"))
+        ranks = r
+        maxDelta = d
+      }
+      // a partially-converged rank table is indistinguishable from a
+      // converged one downstream — fail loudly; the caller raises maxIters
+      require(maxDelta <= tolS,
+        s"PageRank did not converge within $maxIters iterations " +
+          s"(max rank delta $maxDelta > tolS=$tolS); raise maxIters")
+      ranks
+    } finally {
+      withDeg.unpersist()
+      nodes.unpersist()
     }
   }
 }

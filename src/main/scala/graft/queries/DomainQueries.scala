@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.analytics.Reception
 import graft.cluster.Clustering
+import graft.core.Fixpoint
 import graft.defrag.Defrag
 import graft.ids.Ids
 import graft.textreuse.TextReuse
@@ -494,16 +495,12 @@ object DomainQueries {
           col("a.trs_id") === col("b.trs_id") && col("a.piece_id") < col("b.piece_id") &&
             col("b.piece_id") <= col("a.piece_id") + 600)
         .select(col("a.piece_id").as("piece1_id"), col("b.piece_id").as("piece2_id"))
-      // r13: the bench face runs a BOUNDED 3 iterations, so the local
-      // checkpointer is safe (the stats-compounding hazard its Scaladoc
-      // names is multiplicative in round count) and removes a full
-      // parquet write+read of the map-heavy vote state per round — the
-      // face's dominant cost (measured 5.9 s → see OPTIMIZATION_r13.md).
-      // The checkpoint scheme never changes the labels: every draw is a
-      // pure hash of (piece_id, seed, iteration). Production/unbounded
-      // runs (TextReuseAssets) keep the durable parquet default.
+      // the face runs a BOUNDED 3 iterations, so local checkpoints are
+      // safe (see Fixpoint) and skip a parquet write+read of
+      // the map-heavy vote state per round, the face's dominant cost;
+      // unbounded runs (TextReuseAssets) keep the durable default
       Clustering.propagate(Clustering.adjacencyList(edges), seed = 42L, maxIter = 3,
-        checkpointer = Some(Clustering.localCheckpointer))
+        checkpointer = Some(Fixpoint.localCheckpointer))
     }),
 
     // W4+P5 earliest-manifestation-per-cluster

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.cluster.Clustering
+import graft.core.Fixpoint
 
 /** Chinese Whispers clustering (SURVEY.md §2.10, FIXTURES.md §4):
   * disjoint cliques converge to one cluster per clique for any seed.
@@ -60,7 +61,7 @@ class ClusteringSpec extends SparkTestBase {
   private def referencePropagate(adjacency: DataFrame, seed: Long,
       maxIters: Seq[Int]): Map[Int, Set[(Long, Long)]] = {
     val dir = Files.createTempDirectory("graft-cw-reference").toString
-    val checkpoint = Clustering.parquetCheckpointer(dir)
+    val checkpoint = Fixpoint.parquetCheckpointer(dir)
     val adj = adjacency.repartition(col("piece_id")).cache()
     var state = checkpoint(adj.select(
       col("piece_id"),
@@ -181,20 +182,20 @@ class ClusteringSpec extends SparkTestBase {
     def tmp(p: String) = Files.createTempDirectory(p).toString
     val (dirFull, dirKilled) = (tmp("graft-ckpt-full"), tmp("graft-ckpt-killed"))
     val full = Clustering.propagate(adj, seed = 11L, maxIter = 6,
-        checkpointer = Some(Clustering.parquetCheckpointer(dirFull)))
+        checkpointer = Some(Fixpoint.parquetCheckpointer(dirFull)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     // "crashed" run: dies after completing iteration 2
     Clustering.propagate(adj, seed = 11L, maxIter = 2,
-      checkpointer = Some(Clustering.parquetCheckpointer(dirKilled)))
+      checkpointer = Some(Fixpoint.parquetCheckpointer(dirKilled)))
       .collect()
-    val resume = Clustering.latestCheckpoint(spark, dirKilled)
+    val resume = Fixpoint.latestCheckpoint(spark, dirKilled)
     assert(resume.map(_._2) === Some(2), "dir scan must find iteration 2")
     val resumed = Clustering.propagate(adj, seed = 11L, maxIter = 6,
-        checkpointer = Some(Clustering.parquetCheckpointer(dirKilled)),
+        checkpointer = Some(Fixpoint.parquetCheckpointer(dirKilled)),
         resumeFrom = resume)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     assert(resumed === full)
-    assert(Clustering.latestCheckpoint(spark, tmp("graft-ckpt-empty")).isEmpty)
+    assert(Fixpoint.latestCheckpoint(spark, tmp("graft-ckpt-empty")).isEmpty)
   }
 
   test("propagation is deterministic for a fixed seed") {
@@ -265,12 +266,12 @@ class ClusteringSpec extends SparkTestBase {
       .toDF("piece_id", "cluster_id", "cluster_counts", "active")
       .write.parquet(s"$dir/clusters_counts_0")
     Files.write(Paths.get(s"$dir/LATEST_ITER"), "2".getBytes)
-    val resume = Clustering.latestCheckpoint(spark, dir)
+    val resume = Fixpoint.latestCheckpoint(spark, dir)
     assert(resume.map(_._2) === Some(2))
     val adj = Clustering.adjacencyList(edges(Seq((1L, 2L))))
     val e = intercept[IllegalArgumentException](
       Clustering.propagate(adj, seed = 11L, maxIter = 6,
-        checkpointer = Some(Clustering.parquetCheckpointer(dir)), resumeFrom = resume))
+        checkpointer = Some(Fixpoint.parquetCheckpointer(dir)), resumeFrom = resume))
     assert(e.getMessage.contains("other_piece_ids"), e.getMessage)
   }
 }

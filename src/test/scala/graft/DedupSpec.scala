@@ -118,10 +118,14 @@ class DedupSpec extends SparkTestBase {
     // one downstream — exhausting maxRounds must throw, not return
     val d = docs((1L to 4L).map(i => i -> s"t$i"): _*)
     val p = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("doc_id_a", "doc_id_b")
+    val (dirs, cached) = (scratchDirs("graft-dedup-conv"), cachedRdds)
     val e = intercept[IllegalArgumentException] {
       Dedup.dedupGroupsConverged(d, p, maxRounds = 1)
     }
     assert(e.getMessage.contains("did not converge"))
+    // the throw still releases the call's caches and scratch dir
+    assert(scratchDirs("graft-dedup-conv") === dirs)
+    assert((cachedRdds -- cached).isEmpty)
   }
 
   test("minhash hot-bucket cap drops degenerate bands") {

@@ -37,6 +37,17 @@ class KCoreSpec extends SparkTestBase {
     assert(out.values.forall(_ == false))
   }
 
+  test("converged peel fails loudly at its round cap and cleans up") {
+    // one round removes node 6 only; the tendril needs a second
+    val (dirs, cached) = (scratchDirs("graft-kcore"), cachedRdds)
+    val e = intercept[IllegalArgumentException] {
+      KCore.peelConverged(fixture, k = 2, maxRounds = 1)
+    }
+    assert(e.getMessage.contains("did not stabilize"))
+    assert(scratchDirs("graft-kcore") === dirs)
+    assert((cachedRdds -- cached).isEmpty)
+  }
+
   test("k=1 keeps every connected node") {
     val out = cores(KCore.peelConverged(fixture, k = 1))
     assert(out.values.forall(_ == true))

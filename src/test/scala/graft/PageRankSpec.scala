@@ -73,10 +73,14 @@ class PageRankSpec extends SparkTestBase {
 
   test("converged face fails loudly when maxIters is too low") {
     val e = edges(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 1L)
+    val (dirs, cached) = (scratchDirs("graft-pagerank-conv"), cachedRdds)
     val ex = intercept[IllegalArgumentException] {
       PageRank.runConverged(e, tolS = 0L, maxIters = 1)
     }
     assert(ex.getMessage.contains("did not converge"))
+    // the throw still releases the call's caches and scratch dir
+    assert(scratchDirs("graft-pagerank-conv") === dirs)
+    assert((cachedRdds -- cached).isEmpty)
   }
 
   test("weighted ranks split contributions proportionally (hand-computed)") {

@@ -20,6 +20,18 @@ trait SparkTestBase extends AnyFunSuite {
 
   def sc = spark.sparkContext
 
+  /** Names under `java.io.tmpdir` that start with `prefix`. */
+  def scratchDirs(prefix: String): Set[String] =
+    new java.io.File(System.getProperty("java.io.tmpdir")).list()
+      .filter(_.startsWith(prefix)).toSet
+
+  /** Ids of the persisted RDDs that are not checkpoints: the computed
+    * partitions of cached Datasets, without the local checkpoints a
+    * loop's rounds leave for the context cleaner.
+    */
+  def cachedRdds: Set[Int] =
+    sc.getPersistentRDDs.collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
+
   /** `body`'s result and the Spark jobs it submitted (see [[Profile.measure]]). */
   def jobsOf[T](body: => T): (T, Int) = {
     val (out, s) = Profile.measure(spark)(body)
