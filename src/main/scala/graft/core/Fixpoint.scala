@@ -4,13 +4,15 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 
-/** What the converged DataFrame loops (`Clustering.propagate`,
-  * `KCore.peelConverged`, `PageRank.runConverged`,
-  * `Dedup.dedupGroupsConverged`) share: how a round cuts its lineage,
-  * how it reads its convergence value, and who owns the directory its
-  * checkpoints go to. Each loop keeps its own step, `while` and stop
-  * test.
+/** What the engine's iterative DataFrame loops share. The converged
+  * loops (`Clustering.propagate`, `KCore.peelConverged`,
+  * `PageRank.runConverged`, `Dedup.dedupGroupsConverged`) take from it
+  * how a round cuts its lineage, how it reads its convergence value, and
+  * who owns the directory its checkpoints go to; each keeps its own
+  * step, `while` and stop test. The label-correcting loops run whole in
+  * [[relax]] and keep only their step.
   *
   * Invariants:
   *  - a [[Checkpointer]] runs an action on the frame it is given, and
@@ -110,6 +112,63 @@ object Fixpoint {
     val observed = df.observe(obs, value.as("value"))
     val out = checkpoint(if (keep.isEmpty) observed else observed.select(keep: _*), i)
     (out, Option(obs.get("value")).fold(0L)(_.asInstanceOf[Long]))
+  }
+
+  /** The frontier-limited label-correcting loop behind
+    * `Scc.stronglyConnected`'s coloring, `Scc.dagLongestPath`,
+    * `Bfs.shortestPaths` and `Bfs.earliestArrival`. `seeds` is
+    * (node, label), its two column names are the result's; each round,
+    * `step(frontier, frontierRows)` relaxes the last round's improved
+    * rows and returns one candidate (node, label) row per node it
+    * reaches, and a candidate is kept if the node has no label yet or
+    * `better(candidate, label)`.
+    *
+    * Invariants:
+    *  - a round costs the jobs of its exchanges (the step's, the
+    *    improvement join's, the merge's) and one more: the improved
+    *    frontier is cut by [[observedRound]] with [[localCheckpointer]],
+    *    whose job also counts it, so no round pays a separate count;
+    *  - the label merge (anti-join the improved nodes out, union them
+    *    in) is a lazy checkpoint: its rows are computed inside the job
+    *    of the next round, whose improvement join reads them, and the
+    *    terminal round builds no merge;
+    *  - the cap is loud: a loop still improving after `maxRounds`
+    *    rounds throws, naming `name`, instead of returning labels that
+    *    are not a fixpoint;
+    *  - for a monotone `better` the fixpoint does not depend on the
+    *    schedule: a step may relax several hops per round (the callers'
+    *    strides) and every candidate it relays is a genuine label, so
+    *    the result is the one the DuckDB recursive-CTE oracles derive.
+    *
+    * `seedRows` is the row count of `seeds` when the caller already
+    * knows it; then `seeds` is read as given. Otherwise the seeds are
+    * cut like a round, and that job counts them.
+    */
+  def relax(name: String, seeds: DataFrame, maxRounds: Int, better: (Column, Column) => Column,
+      seedRows: Option[Long] = None)(step: (DataFrame, Long) => DataFrame): DataFrame = {
+    val Array(node, label) = seeds.columns
+    var (labels, frontierRows) = seedRows match {
+      case Some(n) => (seeds, n)
+      case None => observedRound(localCheckpointer, name, 0, seeds, count(lit(1)))
+    }
+    var frontier = labels
+    var r = 0
+    while (frontierRows > 0) {
+      r += 1
+      require(r <= maxRounds, s"$name still improving after $maxRounds rounds; raise " +
+        "maxRounds, unless its labels cannot settle (a longest path on a cyclic input never does)")
+      val improved = step(frontier, frontierRows).toDF("cand", "cand_label")
+        .join(labels, col("cand") === col(node), "left")
+        .where(col(label).isNull || better(col("cand_label"), col(label)))
+        .select(col("cand").as(node), col("cand_label").as(label))
+      val (next, n) = observedRound(localCheckpointer, name, r, improved, count(lit(1)))
+      if (n > 0)
+        labels = labels.join(next.select(node), Seq(node), "left_anti").unionAll(next)
+          .localCheckpoint(false)
+      frontier = next
+      frontierRows = n
+    }
+    labels
   }
 
   /** Runs `body` with a checkpointer over a fresh per-call directory

@@ -78,9 +78,9 @@ object Defrag {
     * never calls merge (load-bearing; see spec).
     */
   object GetPieceIdMapping extends Aggregator[Row, Buf, Long] {
-    def zero: Buf = ArrayBuffer()
+    override def zero: Buf = ArrayBuffer()
 
-    def reduce(buf: Buf, row: Row): Buf = {
+    override def reduce(buf: Buf, row: Row): Buf = {
       val s = row.getInt(0)
       val idx = buf.indexWhere(_._1 >= s - 180)
       if (idx < 0) buf.clear() else buf.remove(0, idx)
@@ -88,14 +88,14 @@ object Defrag {
       buf
     }
 
-    def merge(b1: Buf, b2: Buf): Buf =
+    override def merge(b1: Buf, b2: Buf): Buf =
       throw new UnsupportedOperationException(
         "defrag aggregator is a running window scan; merge must never run")
 
-    def finish(buf: Buf): Long = firstMatch(buf.toSeq)
+    override def finish(buf: Buf): Long = firstMatch(buf.toSeq)
 
-    def bufferEncoder: Encoder[Buf] = ExpressionEncoder()
-    def outputEncoder: Encoder[Long] = Encoders.scalaLong
+    override def bufferEncoder: Encoder[Buf] = ExpressionEncoder()
+    override def outputEncoder: Encoder[Long] = Encoders.scalaLong
   }
 
   /** Register `get_piece_id_mapping` for SQL use. Idempotent. */

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Fixpoint
+
 /** Multi-source breadth-first search: minimum hop distance from a seed
   * set over an undirected edge list — the reachability primitive the
   * graph family was missing (PageRank ranks, k-core filters, CC labels;
@@ -76,9 +78,9 @@ object Bfs {
     // under the maxHops cap falls back to a single-level round, so the
     // capped output equals the one-level loop's (the oracle caps at the
     // same hop count).
-    var frontierRows = 1L
+    var waveRows = 1L
     var hop = 0L
-    while (hop < maxHops && frontierRows > 0) {
+    while (hop < maxHops && waveRows > 0) {
       def level(f: DataFrame, seen: Seq[DataFrame], h: Long): DataFrame = {
         val nbrs = f.join(adj, col("node") === col("src"))
           .select(carried :+ col("dst").as("node"): _*)
@@ -92,7 +94,7 @@ object Bfs {
         val h2 = level(h1, Seq(labels, h1), hop + 2)
         // one gating count: h2's plan reads h1, so the count
         // materializes both lazy checkpoints
-        frontierRows = h2.count()
+        waveRows = h2.count()
         // merge BOTH levels (h1 may be non-empty when h2 is empty); the
         // merge is LAZY — the next round's count (or the caller's
         // action) materializes it from cached leaves only
@@ -101,8 +103,8 @@ object Bfs {
         hop += 2
       } else {
         val next = level(frontier, Seq(labels), hop + 1)
-        frontierRows = next.count()
-        if (frontierRows > 0)
+        waveRows = next.count()
+        if (waveRows > 0)
           labels = labels.unionAll(next).localCheckpoint(false)
         frontier = next
         hop += 1
@@ -135,57 +137,20 @@ object Bfs {
       .where(col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(min("cost").as("cost"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // try/finally: the loud maxRounds require below must not leak the
-    // persisted adjacency (ADVICE r9)
     try {
       require(adj.where(col("cost") < 0).isEmpty,
         "shortestPaths requires non-negative costs")
-      var dist = seeds.select(col("node").cast("long").as("node")).distinct()
+      val seeded = seeds.select(col("node").cast("long").as("node")).distinct()
         .withColumn("dist", lit(0L))
-        .localCheckpoint()
-      var frontier = dist
-      var frontierRows = frontier.count()
-      var r = 0
-      while (r < maxRounds && frontierRows > 0) {
-        r += 1
-        // STRIDE-2 relaxation (r13, the Scc coloring trick): min-
-        // relaxation is monotone, every relayed candidate is a valid
-        // path cost (never below the true distance), and improvements
-        // still re-relay from their settled value next round — so
-        // pushing the wave TWO hops per scheduled round converges to
-        // the same schedule-independent fixpoint in half the rounds.
-        val hop1 = frontier.join(adj, col("node") === col("src"))
-          .groupBy(col("dst").as("cand"))
-          .agg(min(col("dist") + col("cost")).as("cand_dist"))
-        val hop2 = hop1.join(adj, col("cand") === col("src"))
-          .groupBy(col("dst").as("c2"))
-          .agg(min(col("cand_dist") + col("cost")).as("d2"))
-          .select(col("c2").as("cand"), col("d2").as("cand_dist"))
-        val relaxed = hop1.unionAll(hop2)
-          .groupBy(col("cand"))
-          .agg(min(col("cand_dist")).as("cand_dist"))
-        // improvements only: strictly better than the current label (or
-        // first label) — these are the next frontier. LAZY checkpoint
-        // materialized by the termination count (the Scc 2-job round
-        // fusion): write + count share one job, and the dist merge —
-        // skipped on the terminal round — is the only other one.
-        val improved = relaxed.join(dist, col("cand") === col("node"), "left")
-          .where(col("dist").isNull || col("cand_dist") < col("dist"))
-          .select(col("cand").as("node"), col("cand_dist").as("dist"))
-          .localCheckpoint(false)
-        frontierRows = improved.count()
-        // lazy merge (the hopWave note): the next round's
-        // gating count materializes it — one fewer job per round
-        if (frontierRows > 0) {
-          dist = dist.join(improved.select(col("node")), Seq("node"), "left_anti")
-            .unionAll(improved)
-            .localCheckpoint(false)
-        }
-        frontier = improved
+      def hop(f: DataFrame): DataFrame = f.join(adj, col("node") === col("src"))
+        .groupBy(col("dst").as("node"))
+        .agg(min(col("dist") + col("cost")).as("dist"))
+      // stride 2: two hops per round (see Fixpoint.relax for why any
+      // stride reaches the same distances)
+      Fixpoint.relax("shortestPaths", seeded, maxRounds, _ < _) { (frontier, _) =>
+        val hop1 = hop(frontier)
+        hop1.unionAll(hop(hop1)).groupBy("node").agg(min(col("dist")).as("dist"))
       }
-      require(frontierRows == 0,
-        s"shortestPaths still improving after $maxRounds rounds; raise maxRounds")
-      dist
     } finally adj.unpersist()
   }
 
@@ -237,76 +202,25 @@ object Bfs {
       .where(col("src") =!= col("dst"))
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // try/finally: the loud maxRounds require below must not leak the
-    // persisted contact multiset (ADVICE r9)
     try {
       require(ct.where(col("t") < 0).isEmpty,
         "earliestArrival requires non-negative contact times")
-      var arrival = seeds.select(col("node").cast("long").as("node")).distinct()
+      val seeded = seeds.select(col("node").cast("long").as("node")).distinct()
         .withColumn("arrival_s", lit(0L))
-        .localCheckpoint()
-      var frontier = arrival
-      // counted, not isEmpty: the count is the same one job on the
-      // checkpointed frontier, and the SIZE is what gates the broadcast
-      var frontierRows = frontier.count()
-      var r = 0
-      while (r < maxRounds && frontierRows > 0) {
-        r += 1
-        // SIZE-GATED broadcast (VERDICT r9): a temporal frontier grows
-        // with the REACHABLE set, not the seed set — one hot wave on a
-        // 100 TB contact graph can put 10^7–10^8 nodes in `improved`,
-        // and an unconditional broadcast hint there OOMs the driver.
-        // Small frontiers (the common case, and every local fixture)
-        // keep the broadcast win; big waves take the co-partitioned
-        // shuffle-hash join, where the frontier is still the only
-        // moving side (ct is cached src-partitioned) and the frontier
-        // is still the hash-relation build side.
+      Fixpoint.relax("earliestArrival", seeded, maxRounds, _ < _) { (frontier, frontierRows) =>
+        // SIZE-GATED broadcast: a temporal frontier grows with the
+        // REACHABLE set, not the seed set — one hot wave on a 100 TB
+        // contact graph can put 10^7–10^8 nodes in it, and an
+        // unconditional broadcast hint there OOMs the driver. Big waves
+        // take the co-partitioned shuffle-hash join, where the frontier
+        // is still the only moving side (ct is cached src-partitioned)
+        // and still the hash-relation build side.
         val fr = if (frontierRows <= broadcastRowLimit) broadcast(frontier)
                  else frontier.hint("shuffle_hash")
-        val relaxed = ct.join(fr,
-            col("node") === col("src") && col("t") >= col("arrival_s"))
-          .groupBy(col("dst").as("cand"))
-          .agg(min(col("t")).as("cand_arr"))
-        // LAZY checkpoint whose materializing action IS the gating
-        // count (the Scc.stronglyConnected 2-job round fusion,
-        // Scc.scala coloring loop): the checkpoint write and the
-        // size-gate count share one scheduled job, and the arrival
-        // merge below — skipped entirely on the terminal round — is
-        // the round's only other job. The eager-checkpoint + separate
-        // count shape this replaces cost a third job per round, which
-        // at local round-latency-bound scale was the whole
-        // q_events_temporal_reach regression (VERDICT r10).
-        //
-        // Measured floor (r12; `graft.Profile` prints the job floor and
-        // per-face job counts): the sf0.1 face schedules 54 jobs total — the
-        // fused ≈2.2 jobs/round over ~24 live rounds — and its wall
-        // time is jobs × the HOST's per-job latency (62 ms mean in-job
-        // + gaps on an epoch whose trivial-job floor measured
-        // 95.6 ms/job; the r10-quiet artifact's epoch floors ~5× lower,
-        // which alone explains the 1.5 s ↔ 4 s swing with zero plan
-        // change). The job count is already at the fused minimum;
-        // below it the algorithm stops being a per-hop fixpoint. Scale
-        // verdict: the floor term is local-only — on a cluster the
-        // per-round VOLUME (frontier-adjacent contacts) dwarfs
-        // scheduler latency, and the round count is the temporal hop
-        // diameter, a data property.
-        val improved = relaxed.join(arrival, col("cand") === col("node"), "left")
-          .where(col("arrival_s").isNull || col("cand_arr") < col("arrival_s"))
-          .select(col("cand").as("node"), col("cand_arr").as("arrival_s"))
-          .localCheckpoint(false)
-        frontierRows = improved.count()
-        // lazy merge (the hopWave note): the next round's
-        // gating count materializes it — one fewer job per round
-        if (frontierRows > 0) {
-          arrival = arrival.join(improved.select(col("node")), Seq("node"), "left_anti")
-            .unionAll(improved)
-            .localCheckpoint(false)
-        }
-        frontier = improved
+        ct.join(fr, col("node") === col("src") && col("t") >= col("arrival_s"))
+          .groupBy(col("dst").as("node"))
+          .agg(min(col("t")).as("arrival_s"))
       }
-      require(frontierRows == 0,
-        s"earliestArrival still improving after $maxRounds rounds; raise maxRounds")
-      arrival
     } finally ct.unpersist()
   }
 

@@ -37,7 +37,7 @@ import org.apache.spark.storage.StorageLevel
   * mins downstream are duplicate-insensitive, so only row COUNT, never
   * the label values, is affected before the closing distinct.
   *
-  * Round economy (r14, the Scc playbook): both stars are IDEMPOTENT on
+  * Round economy (the stride of Fixpoint.relax's steps): both stars are IDEMPOTENT on
   * a star forest (a child's only neighbour is its parent, a parent's
   * minimum is itself), so running an extra alternation past the
   * fixpoint is a no-op on the cheapest possible edge set — after the

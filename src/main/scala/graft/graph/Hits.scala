@@ -64,7 +64,7 @@ object Hits {
     // normalize to L∞=scale: the max is a 1-row designed broadcast;
     // greatest(.,1) guards the all-zero column (possible only when the
     // edge list is empty, where every score is already 0). The raw
-    // scores take a LAZY localCheckpoint (r14 — the Scc playbook): the
+    // scores take a LAZY localCheckpoint (Fixpoint.relax's merge): the
     // max aggregate's broadcast-build job materializes the partitions,
     // the rescale re-reads them; the eager variant paid one extra
     // scheduled job per half-step for the same bytes. Unmaterialized

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Fixpoint
+
 /** Strongly connected components of a DIRECTED edge list — the directed
   * dual of [[ConnectedComponents]]: mutual reachability, not shared
   * membership. The undirected CC label is wrong on directed data (a
@@ -82,7 +84,7 @@ object Scc {
     // cost no isEmpty probe jobs; labelled batches are DEFERRED to one
     // final union instead of an eager checkpointed merge per batch; and
     // every in-loop merge/update takes a LAZY checkpoint that the next
-    // pass's gating count materializes (the coloring-loop fusion,
+    // pass's gating count materializes (Fixpoint.relax's lazy merge,
     // applied everywhere).
     var remainingCount = remaining.count()
     val batches = scala.collection.mutable.ListBuffer[DataFrame]()
@@ -172,63 +174,23 @@ object Scc {
         var byDst: DataFrame = null
         try {
           // ---- forward max-coloring to fixpoint (frontier-limited).
-          // Round latency, not data volume, is the local cost of a
-          // tiny-frontier loop (every joined side auto-broadcasts), so
-          // each round is fused to TWO scheduled jobs: the improved
-          // frontier takes a LAZY localCheckpoint whose first action is
-          // the count that also decides convergence (one job,
-          // truncated lineage), and the colors rebuild keeps its eager
-          // checkpoint (it feeds two branches next round).
-          var colors = remaining.select(col("node"), col("node").as("color"))
-            .localCheckpoint(false)
-          var frontier = colors
-          var frontierRows = 1L
-          var r = 0
-          while (frontierRows > 0) {
-            r += 1
-            require(r <= maxRounds,
-              s"stronglyConnected coloring still moving after $maxRounds rounds; raise maxRounds")
-            // STRIDE-3 relaxation (r14; r13 ran stride-2): max-
-            // propagation is monotone and idempotent — every hop-k
-            // candidate is a genuine reaching color, so pushing the
-            // wave THREE hops per scheduled round is always safe and
-            // cuts the round count to ⌈depth/3⌉. Round latency, not
-            // data volume, is what prices this loop (the extra tiny
-            // hash join in the same job is nearly free; the waves are
-            // frontier-limited, so a past-the-fixpoint hop is a no-op
-            // join of an empty-ish frontier, not a full-graph pass)
-            // each hop is REFERENCED TWICE (the next hop + the cand
-            // union) — the lazy checkpoints make those references read
-            // one cached computation instead of re-executing the hop's
-            // join+agg as extra AQE stage jobs when exchange reuse
-            // misses (measured: stride without the barriers ADDED jobs)
-            val hop1 = frontier.join(bySrc, col("node") === col("src"))
-              .groupBy(col("dst").as("node"))
-              .agg(max(col("color")).as("color"))
-              .localCheckpoint(false)
-            val hop2 = hop1.join(bySrc, col("node") === col("src"))
-              .groupBy(col("dst").as("node"))
-              .agg(max(col("color")).as("color"))
-              .localCheckpoint(false)
-            val hop3 = hop2.join(bySrc, col("node") === col("src"))
-              .groupBy(col("dst").as("node"))
-              .agg(max(col("color")).as("color"))
-            val cand = hop1.unionAll(hop2).unionAll(hop3)
-              .groupBy(col("node").as("cnode"))
-              .agg(max(col("color")).as("cand_color"))
-            val improved = cand.join(colors, col("cnode") === col("node"))
-              .where(col("cand_color") > col("color"))
-              .select(col("cnode").as("node"), col("cand_color").as("color"))
-              .localCheckpoint(false)
-            frontierRows = improved.count()
-            // lazy merge — materialized by the next round's gating
-            // count (improved reads colors), one fewer job per round
-            if (frontierRows > 0) {
-              colors = colors.join(improved.select("node"), Seq("node"), "left_anti")
-                .unionAll(improved)
-                .localCheckpoint(false)
-            }
-            frontier = improved
+          // Stride 3: max-propagation is monotone and idempotent, so
+          // three hops per round reach the same colors in ⌈depth/3⌉
+          // rounds; round latency, not data volume, prices this loop.
+          // hop1 and hop2 are each read twice (the next hop and the
+          // union), so lazy checkpoints make both reads share one
+          // computation instead of re-running the hop as extra AQE
+          // stage jobs when exchange reuse misses.
+          def hop(f: DataFrame): DataFrame = f.join(bySrc, col("node") === col("src"))
+            .groupBy(col("dst").as("node"))
+            .agg(max(col("color")).as("color"))
+          val colors = Fixpoint.relax("stronglyConnected coloring",
+              remaining.select(col("node"), col("node").as("color")).localCheckpoint(false),
+              maxRounds, _ > _, Some(remainingCount)) { (frontier, _) =>
+            val hop1 = hop(frontier).localCheckpoint(false)
+            val hop2 = hop(hop1).localCheckpoint(false)
+            hop1.unionAll(hop2).unionAll(hop(hop2))
+              .groupBy("node").agg(max(col("color")).as("color"))
           }
 
           // ---- same-color edge gate, applied ONCE per outer round
@@ -281,15 +243,14 @@ object Scc {
             .select(col("src").as("node"), col("color").as("color"))
           var mfront = members
           var mfrontRows = 1L
-          r = 0
+          var r = 0
           while (mfrontRows > 0) {
             r += 1
             require(r <= maxRounds,
               s"stronglyConnected membership still moving after $maxRounds rounds; raise maxRounds")
-            // stride-3 + the 2-job round fusion, as in the coloring
-            // loop (the class gate re-applies inside back() at every
-            // hop, so any stride is exact); lazy barriers on the
-            // double-referenced sweeps, the coloring-loop note
+            // stride 3, as in the coloring (the class gate re-applies
+            // inside back() at every hop, so any stride is exact); lazy
+            // barriers on the double-referenced sweeps, as in its step
             val s1 = ckpt(back(mfront))
             val s2 = ckpt(back(s1))
             val s3 = back(s2)
@@ -456,14 +417,14 @@ object Scc {
           what: String): DataFrame = {
         val perLength = scala.collection.mutable.ListBuffer[DataFrame](seed)
         var frontier = seed
-        var frontierRows = 1L
+        var waveRows = 1L
         var r = 0
         def hop(f: DataFrame): DataFrame = f
           .join(adj, col("node") === col(from))
           .groupBy(col(to).as("nnode"))
           .agg(sum(col("cnt")).as("ncnt"))
           .select(col("nnode").as("node"), col("ncnt").as("cnt"))
-        while (frontierRows > 0) {
+        while (waveRows > 0) {
           r += 1
           require(2 * r <= maxRounds + 1,
             s"dagPathCentrality $what wave still flowing after $maxRounds " +
@@ -474,9 +435,9 @@ object Scc {
           // materializes both checkpoints. h2 empty with h1 non-empty
           // just means length L+1 only reached sinks — h1 is already
           // retained; the loop may stop either way.
-          frontierRows = h2.count()
+          waveRows = h2.count()
           perLength += h1
-          if (frontierRows > 0) perLength += h2
+          if (waveRows > 0) perLength += h2
           frontier = h2
         }
         perLength.reduce(_ unionAll _)
@@ -581,49 +542,18 @@ object Scc {
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var depth = e.select(col("src").as("node"))
+      val nodes = e.select(col("src").as("node"))
         .unionAll(e.select(col("dst").as("node")))
         .distinct()
         .withColumn("depth", lit(0L))
-        .localCheckpoint()
-      var frontier = depth
-      var frontierRows = 1L
-      var r = 0
-      while (frontierRows > 0) {
-        r += 1
-        require(r <= maxRounds,
-          s"dagLongestPath still relaxing after $maxRounds rounds — " +
-            "cyclic input or raise maxRounds (run stronglyConnected/condensation first)")
-        // STRIDE-2 relaxation (r13, the coloring-loop trick): max-
-        // relaxation is monotone and idempotent, so pushing the wave TWO
-        // hops per scheduled round is always safe, halves the round
-        // count, and converges to the same schedule-independent fixpoint
-        // the recursive-CTE oracle derives. Round fusion: the improved
-        // frontier takes a LAZY checkpoint whose first action is the
-        // gating count, and the depth merge — exchange-free over two
-        // cached sides — materializes inside the NEXT round's count.
-        val hop1 = frontier.join(e, col("node") === col("src"))
-          .groupBy(col("dst").as("cnode"))
-          .agg(max(col("depth") + 1L).as("cand_depth"))
-        val hop2 = hop1.join(e, col("cnode") === col("src"))
-          .groupBy(col("dst").as("c2"))
-          .agg(max(col("cand_depth") + 1L).as("d2"))
-          .select(col("c2").as("cnode"), col("d2").as("cand_depth"))
-        val cand = hop1.unionAll(hop2)
-          .groupBy(col("cnode"))
-          .agg(max(col("cand_depth")).as("cand_depth"))
-        val improved = cand.join(depth, col("cnode") === col("node"))
-          .where(col("cand_depth") > col("depth"))
-          .select(col("cnode").as("node"), col("cand_depth").as("depth"))
-          .localCheckpoint(false)
-        frontierRows = improved.count()
-        if (frontierRows > 0)
-          depth = depth.join(improved.select("node"), Seq("node"), "left_anti")
-            .unionAll(improved)
-            .localCheckpoint(false)
-        frontier = improved
+      def hop(f: DataFrame): DataFrame = f.join(e, col("node") === col("src"))
+        .groupBy(col("dst").as("node"))
+        .agg(max(col("depth") + 1L).as("depth"))
+      // stride 2: two hops per round (see Fixpoint.relax)
+      Fixpoint.relax("dagLongestPath", nodes, maxRounds, _ > _) { (frontier, _) =>
+        val hop1 = hop(frontier)
+        hop1.unionAll(hop(hop1)).groupBy("node").agg(max(col("depth")).as("depth"))
       }
-      depth
     } finally e.unpersist()
   }
 }

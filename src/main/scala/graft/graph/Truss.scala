@@ -77,8 +77,8 @@ object Truss {
         .localCheckpoint(false)
       // survivor count carried across rounds: this round's next.count()
       // is the next round's alive count, so convergence needs ONE
-      // scheduled job per round (the lazy-checkpoint counted drain —
-      // the Scc playbook), not checkpoint + next.count + alive.count
+      // scheduled job per round (one job checkpoints and counts, as in
+      // Fixpoint.relax), not checkpoint + next.count + alive.count
       var aliveCount = alive.count()
       var converged = false
       var r = 0

@@ -145,8 +145,7 @@ class AsOfSpec extends SparkTestBase {
   }
 
   test("left-column filters push through the native as-of node; value filters stay above") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-asof-pd").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft-asof-pd").toFile
     Seq((1L, 1L, ts(5)), (2L, 2L, ts(6)))
       .toDF("event_id", "user_id", "ts").write.parquet(s"$dir/l.parquet")
     Seq((1L, ts(1), 1.0)).toDF("user_id", "ts", "v").write.parquet(s"$dir/r.parquet")

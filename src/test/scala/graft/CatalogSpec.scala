@@ -27,7 +27,7 @@ class NoRenameOutsideStagingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 class CatalogSpec extends SparkTestBase {
 
   private def newCatalog(): Catalog =
-    new Catalog(spark, Files.createTempDirectory("graft-catalog").toString)
+    new Catalog(spark, tempDir("graft-catalog").toString)
 
   test("materializeAtomic bounds version history to current + predecessor") {
     val cat = newCatalog()
@@ -50,7 +50,7 @@ class CatalogSpec extends SparkTestBase {
     // renames a published path.
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.norename.impl", classOf[NoRenameOutsideStagingFs].getName)
-    val base = Files.createTempDirectory("graft-norename").toString
+    val base = tempDir("graft-norename").toString
     val cat = new Catalog(spark, s"norename://$base")
     import spark.implicits._
     cat.materializeAtomic("nr", Seq(1L, 2L).toDF("id"))
@@ -109,7 +109,7 @@ class CatalogSpec extends SparkTestBase {
 
   test("get of a published table submits no Spark job and keeps the " +
       "inferred schema") {
-    val dir = Files.createTempDirectory("graft-catalog").toString
+    val dir = tempDir("graft-catalog").toString
     import spark.implicits._
     val df = Seq((1L, Map("a" -> Seq(1, 2)), ("x", 2.0)),
       (2L, Map.empty[String, Seq[Int]], ("y", 3.0))).toDF("id", "m", "s")

@@ -60,7 +60,7 @@ class ClusteringSpec extends SparkTestBase {
     */
   private def referencePropagate(adjacency: DataFrame, seed: Long,
       maxIters: Seq[Int]): Map[Int, Set[(Long, Long)]] = {
-    val dir = Files.createTempDirectory("graft-cw-reference").toString
+    val dir = tempDir("graft-cw-reference").toString
     val checkpoint = Fixpoint.parquetCheckpointer(dir)
     val adj = adjacency.repartition(col("piece_id")).cache()
     var state = checkpoint(adj.select(
@@ -179,7 +179,7 @@ class ClusteringSpec extends SparkTestBase {
     // the bridge keeps one node tied-active forever, so the loop always
     // runs to maxIter — the resume path is genuinely exercised.
     val adj = Clustering.adjacencyList(edges(bridgeGraph)).cache()
-    def tmp(p: String) = Files.createTempDirectory(p).toString
+    def tmp(p: String) = tempDir(p).toString
     val (dirFull, dirKilled) = (tmp("graft-ckpt-full"), tmp("graft-ckpt-killed"))
     val full = Clustering.propagate(adj, seed = 11L, maxIter = 6,
         checkpointer = Some(Fixpoint.parquetCheckpointer(dirFull)))
@@ -261,7 +261,7 @@ class ClusteringSpec extends SparkTestBase {
   test("resume refuses a checkpoint without the adjacency column") {
     // the state row before it carried other_piece_ids; resuming it would
     // send no messages and silently freeze every label
-    val dir = Files.createTempDirectory("graft-ckpt-old").toString
+    val dir = tempDir("graft-ckpt-old").toString
     Seq((1L, 1L, Map(2L -> 1L), true), (2L, 2L, Map(1L -> 1L), true))
       .toDF("piece_id", "cluster_id", "cluster_counts", "active")
       .write.parquet(s"$dir/clusters_counts_0")

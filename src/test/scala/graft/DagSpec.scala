@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 
 import graft.core.{AssetDag, Catalog, Dag}
@@ -62,7 +60,7 @@ class DagSpec extends SparkTestBase {
   // ---------------------------------------------------------------------
 
   private def newCatalog(): Catalog =
-    new Catalog(spark, Files.createTempDirectory("graft-dag").toString)
+    new Catalog(spark, tempDir("graft-dag").toString)
 
   /** Diamond a → {b, c} → d plus unrelated sibling e; every builder
     * counts its invocations so skip-vs-rebuild is directly observable.
@@ -162,7 +160,7 @@ class DagSpec extends SparkTestBase {
       "next materialize on either driver is a no-op (single-writer " +
       "contract, converged not prevented)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dag-race").toString
+    val dir = tempDir("graft-dag-race").toString
     val catA = new Catalog(spark, dir)
     val catB = new Catalog(spark, dir)
     var aX = 0; var aY = 0; var bX = 0; var bY = 0

@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Fixpoint
 
 class FixpointSpec extends SparkTestBase {
+  import spark.implicits._
 
   test("observedRound reads its aggregate in the checkpoint's job, null as 0") {
     val df = spark.range(10).toDF("id")
@@ -34,5 +36,61 @@ class FixpointSpec extends SparkTestBase {
     }
     assert(e.getMessage === "cap")
     assert(scratchDirs(prefix) === before)
+  }
+
+  /** Hop distance from node 0 along the path 0 → 1 → … → `n`, one hop a
+    * round: `n` improving rounds and one that finds nothing. The step is
+    * narrow over the implicit path, or joins a broadcast edge list, which
+    * costs it one job a round.
+    */
+  private def pathDepth(n: Long, maxRounds: Int, viaEdges: Boolean = false): DataFrame = {
+    val edges = spark.range(n).select(col("id").as("src"), (col("id") + 1).as("dst"))
+    Fixpoint.relax("spec path", Seq((0L, 0L)).toDF("node", "d"), maxRounds, _ < _) { (frontier, _) =>
+      if (viaEdges) frontier.join(broadcast(edges), col("node") === col("src"))
+        .select(col("dst").as("node"), (col("d") + 1).as("d"))
+      else frontier.where(col("node") < n)
+        .select((col("node") + 1).as("node"), (col("d") + 1).as("d"))
+    }
+  }
+
+  test("relax: a path longer than maxRounds x stride fails loudly, naming the loop") {
+    assert(pathDepth(3, 4).as[(Long, Long)].collect().toMap ===
+      Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L))
+    val e = intercept[IllegalArgumentException](pathDepth(10, 4))
+    assert(e.getMessage.contains("spec path still improving after 4 rounds"))
+  }
+
+  test("relax: a round costs one job beyond its step's own") {
+    // Adaptive execution submits each exchange as a job of its own and
+    // picks join strategies from runtime sizes, which makes the count
+    // vary by a job from run to run; without it, and without size-based
+    // broadcasts, every exchange runs inside the job that reads it. The
+    // checkpoint that also counts the frontier is then a round's only
+    // job besides the step's broadcast
+    val conf = spark.conf
+    val settings = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val saved = settings.map { case (k, _) => k -> conf.getOption(k) }
+    settings.foreach { case (k, v) => conf.set(k, v) }
+    try {
+      def perRound(viaEdges: Boolean): Int = {
+        val Seq(a, b) = Seq(6L, 7L).map(n => jobsOf(pathDepth(n, 10, viaEdges).count())._2)
+        b - a
+      }
+      assert(perRound(viaEdges = false) === 1)
+      assert(perRound(viaEdges = true) === 2)
+    } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
+  test("relax: an empty seed set returns an empty frame with the seeds' schema") {
+    var steps = 0
+    val seeds = Seq.empty[(Long, Long)].toDF("node", "d")
+    val out = Fixpoint.relax("spec empty", seeds, 5, _ < _) { (frontier, _) =>
+      steps += 1
+      frontier
+    }
+    assert(out.schema === seeds.schema)
+    assert(out.count() === 0L)
+    assert(steps === 0)
   }
 }

@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Catalog, GraftSession}
 
@@ -19,7 +16,7 @@ import graft.core.{Catalog, GraftSession}
   * run sequentially in the forked test JVM, and every other suite
   * getOrCreates lazily, so the handoff is safe.
   */
-class HiveCatalogSpec extends AnyFunSuite {
+class HiveCatalogSpec extends SparkTestBase {
 
   private def resetSessions(): Unit = {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
@@ -29,7 +26,7 @@ class HiveCatalogSpec extends AnyFunSuite {
   }
 
   test("bucketed table survives a session restart and still joins shuffle-free") {
-    val dir = Files.createTempDirectory("graft-hive").toString
+    val dir = tempDir("graft-hive").toString
     def hiveSession(): SparkSession = GraftSession.local(cores = 4,
       shufflePartitions = 4, appName = "graft-hive-test",
       hive = true, warehouse = Some(dir))

@@ -134,8 +134,7 @@ class IngestSpec extends SparkTestBase {
   test("JSONL round-trip through writeJsonl/readJsonl preserves rows") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft-jsonl").toFile
     val path = s"${dir.getAbsolutePath}/d.jsonl"
     val src = Seq((1L, "a \"quoted\" line", 1.5), (2L, "unicode ü 九", -0.5))
       .toDF("id", "s", "v")
@@ -149,8 +148,7 @@ class IngestSpec extends SparkTestBase {
 
   test("permissive JSONL quarantines corrupt lines without dropping or failing") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-bad").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft-jsonl-bad").toFile
     val path = s"${dir.getAbsolutePath}/mixed.jsonl"
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       ("""{"id": 1, "s": "good"}""" + "\n" +
@@ -177,8 +175,7 @@ class IngestSpec extends SparkTestBase {
 
   test("ORC round-trip preserves schema and rows, zstd-compressed") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-orc").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft-orc").toFile
     val path = s"${dir.getAbsolutePath}/t.orc"
     val src = Seq((1L, "a", 1.5), (2L, "b", -0.5), (3L, null, 0.0))
       .toDF("id", "s", "v")
@@ -194,8 +191,7 @@ class IngestSpec extends SparkTestBase {
 
   test("CSV round-trip: header + RFC-4180 quoting survives hostile text") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft-csv").toFile
     val path = s"${dir.getAbsolutePath}/t.csv"
     val src = Seq(
       (1L, "plain"),
@@ -215,8 +211,7 @@ class IngestSpec extends SparkTestBase {
 
   test("XML round-trip via Spark 4's native xml source") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-xml").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft-xml").toFile
     val path = s"${dir.getAbsolutePath}/t.xml"
     val src = Seq((1L, "alpha & <beta>", 1.5), (2L, "ü 九", -0.5))
       .toDF("id", "s", "v")
@@ -229,8 +224,7 @@ class IngestSpec extends SparkTestBase {
 
   test("readParquetMerged unions evolved schemas; absent columns read null") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-evolve").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft-evolve").toFile
     val d1 = s"${dir.getAbsolutePath}/drop1"
     val d2 = s"${dir.getAbsolutePath}/drop2"
     // month 1 had (doc_id, text); month 2 added a lang column

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sink.Jdbc
 
 /** JDBC bulk sink against embedded Derby (the JDBC engine that ships
@@ -12,7 +10,7 @@ class JdbcSpec extends SparkTestBase {
   import spark.implicits._
 
   test("loadTable creates, bulk-loads, verifies parity and indexes") {
-    val dir = Files.createTempDirectory("graft-derby").resolve("db")
+    val dir = tempDir("graft-derby").resolve("db")
     val url = s"jdbc:derby:$dir;create=true"
     val df = (1L to 500L).map(i => (i, s"name_$i", i * 1.5)).toDF("id", "name", "score")
     val result = Jdbc.loadTable(df, url, "t_load",
@@ -28,7 +26,7 @@ class JdbcSpec extends SparkTestBase {
   }
 
   test("readTable splits the scan into range-partitioned parallel reads") {
-    val dir = Files.createTempDirectory("graft-derby").resolve("db")
+    val dir = tempDir("graft-derby").resolve("db")
     val url = s"jdbc:derby:$dir;create=true"
     val df = (1L to 1000L).map(i => (i, s"v_$i")).toDF("id", "v")
     Jdbc.loadTable(df, url, "t_read",
@@ -49,7 +47,7 @@ class JdbcSpec extends SparkTestBase {
   }
 
   test("narrow32Ids loads ids inside the unsigned-32 contract and indexes them") {
-    val dir = Files.createTempDirectory("graft-derby3").resolve("db")
+    val dir = tempDir("graft-derby3").resolve("db")
     val url = s"jdbc:derby:$dir;create=true"
     // 2^31 < id < 2^32 is VALID under the MariaDB `int(11) unsigned`
     // contract — the DDL must use a 64-bit db type outside MariaDB
@@ -62,7 +60,7 @@ class JdbcSpec extends SparkTestBase {
   }
 
   test("an id outside the unsigned-32 contract fails the load loudly") {
-    val dir = Files.createTempDirectory("graft-derby4").resolve("db")
+    val dir = tempDir("graft-derby4").resolve("db")
     val url = s"jdbc:derby:$dir;create=true"
     for (bad <- Seq(1L << 32, -1L)) {
       val df = Seq((1L, 1L), (bad, 2L)).toDF("trs_id", "piece_id")
@@ -79,7 +77,7 @@ class JdbcSpec extends SparkTestBase {
   }
 
   test("loadTable replaces an existing table") {
-    val dir = Files.createTempDirectory("graft-derby2").resolve("db")
+    val dir = tempDir("graft-derby2").resolve("db")
     val url = s"jdbc:derby:$dir;create=true"
     val ddl = "CREATE TABLE t_re (id BIGINT)"
     Jdbc.loadTable((1L to 10L).toDF("id"), url, "t_re", ddl)

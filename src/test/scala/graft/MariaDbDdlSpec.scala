@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sink.MariaDbDdl
 
 /** The reference's database schema as a spec: the MariaDB renderer must
@@ -111,7 +109,7 @@ class MariaDbDdlSpec extends SparkTestBase {
   }
 
   test("ansi dialect loads reference-shaped tables on Derby end to end") {
-    val dir = Files.createTempDirectory("graft-derby-ddl").resolve("db")
+    val dir = tempDir("graft-derby-ddl").resolve("db")
     val url = s"jdbc:derby:$dir;create=true"
 
     // clustered_defrag_pieces: 64-bit piece_id beyond the signed-32 range

@@ -76,7 +76,7 @@ class ProfileSpec extends SparkTestBase {
 
   test("ScaleSmoke.ensure reuses a dataset with its stamp and regenerates a gen-less one") {
     assume(have, s"$dir not present on this machine")
-    val out = java.nio.file.Files.createTempDirectory("graft-scale-ensure").resolve("x2")
+    val out = tempDir("graft-scale-ensure").resolve("x2")
     val marker = out.resolve("_GENERATED")
     try {
       assert(ScaleSmoke.ensure(spark, dir, out.toString, 2, "scale"))

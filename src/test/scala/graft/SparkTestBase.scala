@@ -1,12 +1,17 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (getOrCreate reuses one JVM
   * session across suites; Test/fork uses a single forked JVM).
   */
-trait SparkTestBase extends AnyFunSuite {
+trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
@@ -19,6 +24,27 @@ trait SparkTestBase extends AnyFunSuite {
     .getOrCreate()
 
   def sc = spark.sparkContext
+
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
+
+  /** A new directory under `java.io.tmpdir` whose name starts with
+    * `prefix`; it is deleted, with all it holds, when the suite ends.
+    */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally tempDirs.forEach { dir =>
+      if (Files.exists(dir)) {
+        val paths = Files.walk(dir)
+        try paths.sorted(Comparator.reverseOrder[Path]()).forEach(Files.deleteIfExists(_))
+        finally paths.close()
+      }
+    }
 
   /** Names under `java.io.tmpdir` that start with `prefix`. */
   def scratchDirs(prefix: String): Set[String] =

@@ -541,7 +541,7 @@ class StreamingSpec extends SparkTestBase {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files.createTempDirectory("tws_ckpt").toString
+    val ckpt = tempDir("tws_ckpt").toString
     val input = MemoryStream[Event]
     // memory sink cannot recover from a checkpoint; foreachBatch can
     val sunk = scala.collection.mutable.ArrayBuffer[(Long, Timestamp, Timestamp, Long, Double)]()

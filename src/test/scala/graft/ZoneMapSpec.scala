@@ -13,7 +13,7 @@ import graft.core.ZoneMap
 class ZoneMapSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val dir = Files.createTempDirectory("graft_zonemap").toString + "/t"
+  private val dir = tempDir("graft_zonemap").toString + "/t"
 
   private val rows = (0L until 10000L).map(i => (i, s"v$i"))
 
