@@ -17,7 +17,14 @@ import org.apache.spark.sql.functions.{col, count, lit}
   * Invariants:
   *  - a [[Checkpointer]] runs an action on the frame it is given, and
   *    [[observedRound]] collects the round's value during that action:
-  *    one job per round, never a write plus a second count scan;
+  *    one job per round, never a write plus a second count scan. A cut
+  *    that also needs its row count is a [[countedCut]], never a lazy
+  *    checkpoint and a `count()`, whose single-partition final stage is
+  *    one more job. Its callers: [[relax]]'s rounds and seeds, the truss
+  *    peel (`Truss.edges`), `Bfs.hopWave`'s waves, and in `Scc` the
+  *    remaining, trim, active and peel sets of `stronglyConnected` and
+  *    the seed sets and waves of `dagPathCentrality`; `KCore.peelConverged`
+  *    counts its node set as round 0 of its own checkpointer;
   *  - `localCheckpoint` carries the origin plan's statistics forward, so
   *    size estimates compound multiplicatively with the round count
   *    until Catalyst's BigInt stats overflow ("BigInteger would overflow
@@ -114,9 +121,17 @@ object Fixpoint {
     (out, Option(obs.get("value")).fold(0L)(_.asInstanceOf[Long]))
   }
 
+  /** Cuts `df` with [[localCheckpointer]] as round `i` of `name`, counting
+    * its rows in the same job: (cut frame, row count).
+    */
+  def countedCut(name: String, i: Int, df: DataFrame): (DataFrame, Long) =
+    observedRound(localCheckpointer, name, i, df, count(lit(1)))
+
   /** The frontier-limited label-correcting loop behind
-    * `Scc.stronglyConnected`'s coloring, `Scc.dagLongestPath`,
-    * `Bfs.shortestPaths` and `Bfs.earliestArrival`. `seeds` is
+    * `Scc.stronglyConnected`'s coloring and membership sweep,
+    * `Scc.dagLongestPath`, `Bfs.shortestPaths` and `Bfs.earliestArrival`.
+    * A `better` that is never true makes it a first-visit wave: each
+    * node keeps the label of the round that first reaches it. `seeds` is
     * (node, label), its two column names are the result's; each round,
     * `step(frontier, frontierRows)` relaxes the last round's improved
     * rows and returns one candidate (node, label) row per node it
@@ -126,12 +141,13 @@ object Fixpoint {
     * Invariants:
     *  - a round costs the jobs of its exchanges (the step's, the
     *    improvement join's, the merge's) and one more: the improved
-    *    frontier is cut by [[observedRound]] with [[localCheckpointer]],
-    *    whose job also counts it, so no round pays a separate count;
+    *    frontier is a [[countedCut]], so no round pays a separate count;
     *  - the label merge (anti-join the improved nodes out, union them
     *    in) is a lazy checkpoint: its rows are computed inside the job
     *    of the next round, whose improvement join reads them, and the
-    *    terminal round builds no merge;
+    *    terminal round builds no merge. The cut's job also counts the
+    *    improved nodes that had a label; when there are none (every
+    *    round of a first-visit wave), the merge is the union alone;
     *  - the cap is loud: a loop still improving after `maxRounds`
     *    rounds throws, naming `name`, instead of returning labels that
     *    are not a fixpoint;
@@ -140,16 +156,17 @@ object Fixpoint {
     *    strides) and every candidate it relays is a genuine label, so
     *    the result is the one the DuckDB recursive-CTE oracles derive.
     *
-    * `seedRows` is the row count of `seeds` when the caller already
-    * knows it; then `seeds` is read as given. Otherwise the seeds are
-    * cut like a round, and that job counts them.
+    * `seedRows` is the row count of `seeds`, or a positive bound on it,
+    * when the caller already knows one; then `seeds` is read as given and
+    * the first step is told that bound. Otherwise the seeds are cut like
+    * a round, and that job counts them.
     */
   def relax(name: String, seeds: DataFrame, maxRounds: Int, better: (Column, Column) => Column,
       seedRows: Option[Long] = None)(step: (DataFrame, Long) => DataFrame): DataFrame = {
     val Array(node, label) = seeds.columns
     var (labels, frontierRows) = seedRows match {
       case Some(n) => (seeds, n)
-      case None => observedRound(localCheckpointer, name, 0, seeds, count(lit(1)))
+      case None => countedCut(name, 0, seeds)
     }
     var frontier = labels
     var r = 0
@@ -157,14 +174,18 @@ object Fixpoint {
       r += 1
       require(r <= maxRounds, s"$name still improving after $maxRounds rounds; raise " +
         "maxRounds, unless its labels cannot settle (a longest path on a cyclic input never does)")
+      val relabelled = Observation(s"${name}_relabelled_$r")
       val improved = step(frontier, frontierRows).toDF("cand", "cand_label")
         .join(labels, col("cand") === col(node), "left")
         .where(col(label).isNull || better(col("cand_label"), col(label)))
+        .observe(relabelled, count(col(label)).as("value"))
         .select(col("cand").as(node), col("cand_label").as(label))
-      val (next, n) = observedRound(localCheckpointer, name, r, improved, count(lit(1)))
-      if (n > 0)
-        labels = labels.join(next.select(node), Seq(node), "left_anti").unionAll(next)
-          .localCheckpoint(false)
+      val (next, n) = countedCut(name, r, improved)
+      if (n > 0) {
+        val kept = if (relabelled.get("value") == 0L) labels
+          else labels.join(next.select(node), Seq(node), "left_anti")
+        labels = kept.unionAll(next).localCheckpoint(false)
+      }
       frontier = next
       frontierRows = n
     }

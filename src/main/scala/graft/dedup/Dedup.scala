@@ -467,6 +467,38 @@ object Dedup {
         sum(floor(col("jaccard") * 1000000.0).cast("long")).as("sum_jaccard_s"))
   }
 
+  /** The near-dup pair graph as a symmetric (doc_id, nbr) edge list,
+    * persisted so the (often expensive) pair generation upstream runs
+    * once, not once per round; callers unpersist it. Cached
+    * PRE-PARTITIONED on the round join key (guide §2.4): every round's
+    * join clusters on `nbr`, so the cached layout satisfies the join's
+    * distribution and only the (narrow) label side ever reshuffles —
+    * unpartitioned, the full edge list would be re-exchanged every round
+    * once the label side outgrows the broadcast threshold (always, at
+    * corpus node counts). Locally AQE broadcasts the labels either way;
+    * the repartition costs one extra exchange at cache build.
+    */
+  private def symmetricEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_id_a").as("doc_id"), col("doc_id_b").as("nbr"))
+      .unionAll(pairs.select(col("doc_id_b").as("doc_id"), col("doc_id_a").as("nbr")))
+      .repartition(col("nbr"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** One min-label round over [[symmetricEdges]]: (doc_id, group_id,
+    * new_group), new_group the least of the doc's label and its
+    * neighbours'.
+    */
+  private def minLabelRound(edges: DataFrame, labels: DataFrame): DataFrame = {
+    val nbrMin = edges
+      .join(labels.select(col("doc_id").as("nbr"), col("group_id").as("nbr_group")),
+        Seq("nbr"))
+      .groupBy("doc_id")
+      .agg(min("nbr_group").as("nbr_min"))
+    labels.join(nbrMin, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("group_id"),
+        least(col("group_id"), coalesce(col("nbr_min"), col("group_id"))).as("new_group"))
+  }
+
   /** Connected dedup groups from near-dup pairs by k rounds of MIN-LABEL
     * propagation: every doc starts as its own label; each round, a doc
     * adopts the minimum label among itself and its neighbours. After
@@ -490,33 +522,13 @@ object Dedup {
     * bounded-round component sketch.
     */
   def dedupGroups(docs: DataFrame, pairs: DataFrame, rounds: Int = 4): DataFrame = {
-    // every round joins the edge list: persist it so the (often
-    // expensive) pair-generation upstream runs once, not once per round;
-    // the final labels are materialized below so this cache can be
-    // released before returning instead of pinning memory per call.
-    // Cached PRE-PARTITIONED on the round join key (r14, guide §2.4):
-    // every round's join clusters on `nbr`, so the cached layout
-    // satisfies the join's distribution and only the (narrow) label
-    // side ever reshuffles — at 100 TB the r13 shape re-exchanged the
-    // full symmetrized edge list once per round whenever the label
-    // side outgrew the broadcast threshold (always, at corpus node
-    // counts). Locally AQE broadcasts the labels either way; the
-    // repartition costs one extra exchange at cache build.
-    val edges = pairs.select(col("doc_id_a").as("doc_id"), col("doc_id_b").as("nbr"))
-      .unionAll(pairs.select(col("doc_id_b").as("doc_id"), col("doc_id_a").as("nbr")))
-      .repartition(col("nbr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the final labels are materialized below so the edge cache can be
+    // released before returning instead of pinning memory per call
+    val edges = symmetricEdges(pairs)
     var labels = docs.select(col("doc_id"), col("doc_id").as("group_id"))
     for (r <- 1 to rounds) {
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("nbr"), col("group_id").as("nbr_group")),
-          Seq("nbr"))
-        .groupBy("doc_id")
-        .agg(min("nbr_group").as("nbr_min"))
-      labels = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("group_id"), coalesce(col("nbr_min"), col("group_id")))
-            .as("group_id"))
+      labels = minLabelRound(edges, labels)
+        .select(col("doc_id"), col("new_group").as("group_id"))
       // each round's plan references the previous labels TWICE (the
       // neighbour-min derivation and the join-back), so the lazy plan
       // doubles per round — 2^r subtree copies. Exchange reuse USUALLY
@@ -555,11 +567,7 @@ object Dedup {
     */
   def dedupGroupsConverged(docs: DataFrame, pairs: DataFrame,
       maxRounds: Int = 100): DataFrame = {
-    // pre-partitioned on the round join key, as in dedupGroups
-    val edges = pairs.select(col("doc_id_a").as("doc_id"), col("doc_id_b").as("nbr"))
-      .unionAll(pairs.select(col("doc_id_b").as("doc_id"), col("doc_id_a").as("nbr")))
-      .repartition(col("nbr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = symmetricEdges(pairs)
     try Fixpoint.scratch(docs.sparkSession, "graft-dedup-conv",
         Fixpoint.hybridCheckpointer) { checkpoint =>
       var labels = docs.select(col("doc_id"), col("doc_id").as("group_id"))
@@ -567,16 +575,8 @@ object Dedup {
       var r = 0
       while (changed > 0L && r < maxRounds) {
         r += 1
-        val nbrMin = edges
-          .join(labels.select(col("doc_id").as("nbr"), col("group_id").as("nbr_group")),
-            Seq("nbr"))
-          .groupBy("doc_id")
-          .agg(min("nbr_group").as("nbr_min"))
-        val next = labels.join(nbrMin, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("group_id"),
-            least(col("group_id"), coalesce(col("nbr_min"), col("group_id")))
-              .as("new_group"))
-        val (l, c) = Fixpoint.observedRound(checkpoint, "graft_dedup_conv", r, next,
+        val (l, c) = Fixpoint.observedRound(checkpoint, "graft_dedup_conv", r,
+          minLabelRound(edges, labels),
           sum(when(col("new_group") =!= col("group_id"), 1L).otherwise(0L)),
           col("doc_id"), col("new_group").as("group_id"))
         labels = l
@@ -629,11 +629,7 @@ object Dedup {
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy("label")).cast("long"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // pre-partitioned on the round join key — the dedupGroups r14 note
-    val edges = pairs.select(col("doc_id_a").as("doc_id"), col("doc_id_b").as("nbr"))
-      .unionAll(pairs.select(col("doc_id_b").as("doc_id"), col("doc_id_a").as("nbr")))
-      .repartition(col("nbr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = symmetricEdges(pairs)
     var lab = nodes.select(col("doc_id"))
       .join(seeds.join(broadcast(dict), "label")
           .select(col("doc_id"), col("lid"), lit(true).as("is_seed")),

@@ -73,40 +73,40 @@ object Bfs {
     // however the wave is scheduled, so expanding TWO levels inside one
     // scheduled round (level hop+1, then level hop+2 excluding both the
     // labels and the first expansion) assigns the same hops and halves
-    // the per-round fixed cost (gating count, merge, driver round-trip);
+    // the per-round fixed cost (counted cut, merge, driver round-trip);
     // the per-level exchanges are the algorithm and stay. The odd tail
     // under the maxHops cap falls back to a single-level round, so the
     // capped output equals the one-level loop's (the oracle caps at the
     // same hop count).
     var waveRows = 1L
-    var hop = 0L
+    var hop = 0
     while (hop < maxHops && waveRows > 0) {
-      def level(f: DataFrame, seen: Seq[DataFrame], h: Long): DataFrame = {
+      def level(f: DataFrame, seen: Seq[DataFrame], h: Int): DataFrame = {
         val nbrs = f.join(adj, col("node") === col("src"))
           .select(carried :+ col("dst").as("node"): _*)
           .distinct()
         seen.foldLeft(nbrs)((d, s) => d.join(s, key, "left_anti"))
-          .withColumn("hops", lit(h))
-          .localCheckpoint(false)
+          .withColumn("hops", lit(h.toLong))
       }
+      // the counted cut of the round's last level also materializes the
+      // lazy cut of the first; the merge takes BOTH levels (h1 may be
+      // non-empty when h2 is empty) and stays lazy until the next round
+      // (or the caller's action) reads it
       if (hop + 2 <= maxHops) {
-        val h1 = level(frontier, Seq(labels), hop + 1)
-        val h2 = level(h1, Seq(labels, h1), hop + 2)
-        // one gating count: h2's plan reads h1, so the count
-        // materializes both lazy checkpoints
-        waveRows = h2.count()
-        // merge BOTH levels (h1 may be non-empty when h2 is empty); the
-        // merge is LAZY — the next round's count (or the caller's
-        // action) materializes it from cached leaves only
+        val h1 = level(frontier, Seq(labels), hop + 1).localCheckpoint(false)
+        val (h2, n) = Fixpoint.countedCut("graft_bfs_wave", hop + 2,
+          level(h1, Seq(labels, h1), hop + 2))
         labels = labels.unionAll(h1).unionAll(h2).localCheckpoint(false)
         frontier = h2
+        waveRows = n
         hop += 2
       } else {
-        val next = level(frontier, Seq(labels), hop + 1)
-        waveRows = next.count()
-        if (waveRows > 0)
+        val (next, n) = Fixpoint.countedCut("graft_bfs_wave", hop + 1,
+          level(frontier, Seq(labels), hop + 1))
+        if (n > 0)
           labels = labels.unionAll(next).localCheckpoint(false)
         frontier = next
+        waveRows = n
         hop += 1
       }
     }

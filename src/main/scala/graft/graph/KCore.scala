@@ -69,11 +69,10 @@ object KCore {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try Fixpoint.scratch(edges.sparkSession, "graft-kcore",
         Fixpoint.hybridCheckpointer) { checkpoint =>
-      var alive = nodes
-      // previous round's survivor count; each later round's count rides
-      // that round's Observation, so only this bootstrap count is a
-      // dedicated job (bounded metadata over the persisted node set)
-      var lastAlive = nodes.count()
+      // round 0 cuts and counts the node set; each round's count is the
+      // next round's survivor baseline
+      var (alive, lastAlive) =
+        Fixpoint.observedRound(checkpoint, "graft_kcore", 0, nodes, count(lit(1)))
       var removed = 1L
       var r = 0
       while (removed > 0L && r < maxRounds) {

@@ -75,18 +75,14 @@ object Scc {
       .where(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint(false)
-    var remaining = raw.select(col("src").as("node"))
-      .unionAll(raw.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(false)
-    // r13 round economy: the remaining-set size is TRACKED arithmetically
-    // (every batch that leaves it is counted anyway), so the loop guards
-    // cost no isEmpty probe jobs; labelled batches are DEFERRED to one
-    // final union instead of an eager checkpointed merge per batch; and
-    // every in-loop merge/update takes a LAZY checkpoint that the next
-    // pass's gating count materializes (Fixpoint.relax's lazy merge,
-    // applied everywhere).
-    var remainingCount = remaining.count()
+    // the remaining-set size is tracked arithmetically (every batch that
+    // leaves it is a counted cut), so the loop guards probe nothing;
+    // labelled batches are deferred to one final union; and every
+    // in-loop shrink is a lazy cut that the next counted cut materializes
+    var (remaining, remainingCount) = Fixpoint.countedCut("graft_scc_remaining", 0,
+      raw.select(col("src").as("node"))
+        .unionAll(raw.select(col("dst").as("node")))
+        .distinct())
     val batches = scala.collection.mutable.ListBuffer[DataFrame]()
     // typed empty seed so an edge-free input returns an empty (node, scc)
     // frame instead of null
@@ -101,7 +97,7 @@ object Scc {
       // ---- trim TO FIXPOINT: a node with no in-edge or no out-edge
       // (or no edge at all) is on no cycle → singleton SCC, and its
       // removal can expose more. Draining the whole DAG fringe here,
-      // pass by 2-job pass, is what keeps the EXPENSIVE phases off
+      // pass by pass, is what keeps the EXPENSIVE phases off
       // acyclic regions: without the fixpoint, a depth-L inter-SCC
       // chain erodes one layer per OUTER round and pays a full
       // coloring + membership sweep of the surviving graph each time
@@ -113,15 +109,14 @@ object Scc {
         trimPass += 1
         require(trimPass <= maxRounds,
           s"stronglyConnected trim still eroding after $maxRounds passes; raise maxRounds")
-        // STRIDE-2 erosion (r13): the trim step is a deterministic
-        // downward closure (drop nodes lacking an in- or out-edge in the
-        // induced subgraph), so applying it TWICE inside one scheduled
-        // pass reaches the same fixpoint in half the driver rounds; the
-        // union of trimmed batches — all labelled (node, node) — is
-        // identical however the erosion is batched.
-        // r14: the survivor set is ONE role-count aggregate (node keeps
-        // both an out- and an in-edge) instead of two distinct exchanges
-        // + a join — same set, one exchange per erosion.
+        // STRIDE-2 erosion: the trim step is a deterministic downward
+        // closure (drop nodes lacking an in- or out-edge in the induced
+        // subgraph), so applying it TWICE inside one scheduled pass
+        // reaches the same fixpoint in half the driver rounds; the union
+        // of trimmed batches — all labelled (node, node) — is identical
+        // however the erosion is batched. The survivor set is ONE
+        // role-count aggregate (node keeps both an out- and an in-edge),
+        // one exchange per erosion.
         def erode(act: DataFrame): DataFrame = act
           .select(col("src").as("node"), lit(1L).as("o"), lit(0L).as("i"))
           .unionAll(act.select(col("dst").as("node"), lit(0L).as("o"), lit(1L).as("i")))
@@ -133,14 +128,13 @@ object Scc {
           .join(core1.select(col("node").as("src")), Seq("src"), "left_semi")
           .join(core1.select(col("node").as("dst")), Seq("dst"), "left_semi")
         val core = erode(act1).localCheckpoint(false)
-        // 1-job pass: the trimmed count materializes core AND trimmed
-        // (core rides inside trimmed's plan); the labelled batch joins
-        // the deferred union, the remaining size updates by arithmetic,
-        // and the active-set shrink is lazy until the next pass reads it
-        val trimmed = remaining.join(core, Seq("node"), "left_anti")
-          .select(col("node"), col("node").as("scc"))
-          .localCheckpoint(false)
-        val nTrimmed = trimmed.count()
+        // the trimmed batch's counted cut materializes core too (core
+        // rides inside its plan); the labelled batch joins the deferred
+        // union, the remaining size updates by arithmetic, and the
+        // active-set shrink is lazy until the next pass reads it
+        val (trimmed, nTrimmed) = Fixpoint.countedCut("graft_scc_trim", trimPass,
+          remaining.join(core, Seq("node"), "left_anti")
+            .select(col("node"), col("node").as("scc")))
         if (nTrimmed == 0) trimming = false
         else {
           batches += trimmed
@@ -165,7 +159,8 @@ object Scc {
         // rounds at full 32-task scheduling latency for kilobytes of
         // work — the dominant cost of this loop measured locally. At
         // cluster scale the cap restores full parallelism.
-        val activeRows = active.count()
+        val (cut, activeRows) = Fixpoint.countedCut("graft_scc_active", outer, active)
+        active = cut
         val parts = math.max(1, math.min(
           active.sparkSession.sessionState.conf.numShufflePartitions,
           (activeRows / 20000L).toInt))
@@ -193,16 +188,16 @@ object Scc {
               .groupBy("node").agg(max(col("color")).as("color"))
           }
 
-          // ---- same-color edge gate, applied ONCE per outer round
-          // (r14): an SCC lies entirely inside one color class
-          // (mutually-reachable nodes see the same ancestor set, hence
-          // the same max), so cross-color edges sit on no cycle. Gating
-          // the active set here (a) turns the backward hop into a plain
-          // join — stepping along a same-color edge preserves the class,
-          // so the per-hop colors re-join the r13 sweep paid is implied —
-          // and (b) lets the NEXT outer round drop the cross-class edges
-          // outright, which is what hands the acyclic residue to the
-          // cheap trim fixpoint instead of another full coloring wave.
+          // ---- same-color edge gate, applied ONCE per outer round: an
+          // SCC lies entirely inside one color class (mutually-reachable
+          // nodes see the same ancestor set, hence the same max), so
+          // cross-color edges sit on no cycle. Gating the active set
+          // here (a) turns the backward hop into a plain join — stepping
+          // along a same-color edge preserves the class, so no per-hop
+          // colors re-join is needed — and (b) lets the NEXT outer round
+          // drop the cross-class edges outright, which is what hands the
+          // acyclic residue to the cheap trim fixpoint instead of another
+          // full coloring wave.
           // NOT localCheckpoint'ed: its lineage roots in the already-
           // checkpointed active/colors, byDst's persist below gives the
           // sweeps their reuse, and the lazy-checkpoint LogicalRDD here
@@ -219,61 +214,39 @@ object Scc {
           byDst = sameColor.repartition(parts, col("dst"))
             .persist(StorageLevel.MEMORY_AND_DISK)
 
-          // ---- backward membership sweep within each color class.
-          // All sweep checkpoints run through `ckpt`, which strips the
-          // LogicalRDD origin-constraint snapshot — the pivot seed's
-          // `node === color` equality constraint otherwise leaks a stale
-          // attribute reference into the checkpoints' constraint sets
-          // and the s1∪s2∪s3 union dies in Catalyst's constraint rewrite
-          // (see Shim.dropOriginConstraints)
-          def ckpt(df: DataFrame): DataFrame =
-            org.apache.spark.sql.graftshim.Shim
-              .dropOriginConstraints(df.localCheckpoint(false))
-          var members = ckpt(colors.where(col("node") === col("color"))
-            .select(col("node"), col("color")))
-          // one backward hop over the same-color edge set: the class
+          // ---- backward membership sweep within each color class: a
+          // first-visit wave from the pivots (a `better` that is never
+          // true keeps each member's first label).
+          // One backward hop over the same-color edge set: the class
           // gate holds by construction (color(src) = color(dst) on every
           // gated edge, and every frontier row's color IS its node's
           // color, by induction from the pivots). No per-hop distinct:
-          // the stride's single distinct in `fresh` dedupes the union
-          // (multiplicity within one stride is bounded by 3 hops over
-          // the gated edge set).
+          // the stride's single distinct dedupes the union (multiplicity
+          // within one stride is bounded by 3 hops over the gated edge set).
           def back(f: DataFrame): DataFrame = f
             .join(byDst, col("node") === col("dst"))
             .select(col("src").as("node"), col("color").as("color"))
-          var mfront = members
-          var mfrontRows = 1L
-          var r = 0
-          while (mfrontRows > 0) {
-            r += 1
-            require(r <= maxRounds,
-              s"stronglyConnected membership still moving after $maxRounds rounds; raise maxRounds")
-            // stride 3, as in the coloring (the class gate re-applies
-            // inside back() at every hop, so any stride is exact); lazy
-            // barriers on the double-referenced sweeps, as in its step
-            val s1 = ckpt(back(mfront))
-            val s2 = ckpt(back(s1))
-            val s3 = back(s2)
-            val fresh = ckpt(s1.unionAll(s2).unionAll(s3).distinct()
-              .join(members, Seq("node"), "left_anti"))
-            mfrontRows = fresh.count()
-            // lazy merge — the next round's anti-join count reads it
-            if (mfrontRows > 0)
-              members = ckpt(members.unionAll(fresh))
-            mfront = fresh
+          // the pivots are a non-empty subset of the remaining nodes, so
+          // remainingCount bounds the seed rows without a seed job
+          val members = Fixpoint.relax("stronglyConnected membership",
+              colors.where(col("node") === col("color")).select(col("node"), col("color"))
+                .localCheckpoint(false),
+              maxRounds, (_, _) => lit(false), Some(remainingCount)) { (frontier, _) =>
+            // stride 3, as in the coloring; lazy barriers on the
+            // double-referenced sweeps, as in its step
+            val s1 = back(frontier).localCheckpoint(false)
+            val s2 = back(s1).localCheckpoint(false)
+            s1.unionAll(s2).unionAll(back(s2)).distinct()
           }
 
           // relabel each peeled class to its minimum member id; the
-          // peel count is the round's ONE dedicated job — it
-          // materializes the batch, keeps the remaining-size arithmetic
-          // exact, and the remaining/active shrinks stay lazy until the
-          // next outer round's trim count reads them
+          // peel's counted cut keeps the remaining-size arithmetic exact,
+          // and the remaining/active shrinks stay lazy until the next
+          // outer round's trim cut reads them
           val mins = members.groupBy(col("color"))
             .agg(min(col("node")).as("scc"))
-          val peeled = members.join(mins, Seq("color"))
-            .select(col("node"), col("scc"))
-            .localCheckpoint(false)
-          val nPeeled = peeled.count()
+          val (peeled, nPeeled) = Fixpoint.countedCut("graft_scc_peel", outer,
+            members.join(mins, Seq("color")).select(col("node"), col("scc")))
           batches += peeled
           remainingCount -= nPeeled
           remaining = remaining
@@ -400,19 +373,19 @@ object Scc {
 
       // one sum-propagation wave: seeds carry count 1; each round joins
       // the frontier to its outgoing edges and sums arrivals per target.
-      // r13 round economy, three changes that leave every count exact:
+      // Every count stays exact:
       //  - STRIDE-2: round r's frontier carries the exact count of
       //    length-L paths, so relaying it one MORE hop inside the same
       //    scheduled round yields the exact length-(L+1) counts — two
       //    per-length deliveries per round, half the rounds. Both hops
       //    are per-length-exact, so summing them later is unchanged.
-      //  - DEFERRED accumulation: no per-round acc rebuild (which paid
-      //    an exchange + a checkpoint job per round) — every per-length
-      //    frontier is retained (each one a cached checkpoint) and ONE
-      //    final groupBy sums them; addition is associative, the total
-      //    per node is identical.
-      //  - the gating count materializes both hops' lazy checkpoints in
-      //    one job (hop1 rides inside hop2's plan).
+      //  - DEFERRED accumulation: every per-length frontier is retained
+      //    (each one a cached checkpoint) and ONE final groupBy sums
+      //    them; addition is associative, the total per node is
+      //    identical to a per-round running sum.
+      //  - the second hop's counted cut materializes the first hop's
+      //    lazy cut in the same job (hop1 rides inside hop2's plan).
+      // The waves run concurrently, so each names its own observations.
       def wave(seed: DataFrame, adj: DataFrame, from: String, to: String,
           what: String): DataFrame = {
         val perLength = scala.collection.mutable.ListBuffer[DataFrame](seed)
@@ -430,12 +403,11 @@ object Scc {
             s"dagPathCentrality $what wave still flowing after $maxRounds " +
               "hops — cyclic input or raise maxRounds")
           val h1 = hop(frontier).localCheckpoint(false)
-          val h2 = hop(h1).localCheckpoint(false)
-          // one gating count: h2's plan reads h1, so the count
-          // materializes both checkpoints. h2 empty with h1 non-empty
-          // just means length L+1 only reached sinks — h1 is already
-          // retained; the loop may stop either way.
-          waveRows = h2.count()
+          // h2 empty with h1 non-empty just means length L+1 only
+          // reached sinks — h1 is already retained; the loop may stop
+          // either way.
+          val (h2, n) = Fixpoint.countedCut(s"graft_dag_paths_$what", r, hop(h1))
+          waveRows = n
           perLength += h1
           if (waveRows > 0) perLength += h2
           frontier = h2
@@ -444,16 +416,14 @@ object Scc {
           .groupBy("node").agg(sum(col("cnt")).as("cnt"))
       }
 
-      // seed sets are checkpointed ONCE and reused by both the guard
-      // and the waves (the eager pre-r13 shape computed each anti-join
-      // twice: once for the isEmpty probe, once inside the wave)
-      def seedOf(anti: String): DataFrame = nodes
-        .join(e.select(col(anti).as("node")).distinct(), Seq("node"), "left_anti")
-        .select(col("node"), lit(1).cast("decimal(38,0)").as("cnt"))
-        .localCheckpoint(false)
-      val sources = seedOf("dst")
-      val sinks = seedOf("src")
-      val (nSources, nSinks) = (sources.count(), sinks.count())
+      // seed sets are cut and counted ONCE and reused by both the guard
+      // and the waves
+      def seedOf(what: String, anti: String): (DataFrame, Long) =
+        Fixpoint.countedCut(s"graft_dag_paths_$what", 0, nodes
+          .join(e.select(col(anti).as("node")).distinct(), Seq("node"), "left_anti")
+          .select(col("node"), lit(1).cast("decimal(38,0)").as("cnt")))
+      val (sources, nSources) = seedOf("forward", "dst")
+      val (sinks, nSinks) = seedOf("backward", "src")
       // a non-empty DAG has ≥1 source and ≥1 sink; a sourceless input
       // (pure cycle) would otherwise return EMPTY silently — the
       // maxRounds trip only catches cycles reachable from a source

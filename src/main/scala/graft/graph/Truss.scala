@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Fixpoint
+
 /** k-truss decomposition — the EDGE-level density filter beside the
   * node-level k-core: the k-truss is the maximal subgraph in which
   * every edge closes at least k−2 triangles WITHIN the subgraph.
@@ -27,16 +29,17 @@ import org.apache.spark.storage.StorageLevel
   * the canonical survivor list, and credited to all three canonical
   * edges through one partial-agged support count. Orienting by degree
   * bounds every node's wedge fan-out by its oriented OUT-degree = O(√m)
-  * — orienting by id (the r9 shape) made a low-id hub enumerate
-  * deg²/2 wedges per round, ~5·10¹¹ for one deg-10⁶ hub on a 100 TB
-  * graph (VERDICT r9). Orientation is fixed ONCE from the initial
-  * degrees (r14): membership is orientation-independent, each node's
+  * — orienting by id would make a low-id hub enumerate deg²/2 wedges
+  * per round, ~5·10¹¹ for one deg-10⁶ hub on a 100 TB graph.
+  * Orientation is fixed ONCE from the initial degrees: membership is
+  * orientation-independent, each node's
   * oriented out-edge set only shrinks as the peel removes edges (so
   * the O(√m) bound persists), and freezing it keeps the per-round
   * degree groupBy + both orientation joins out of the loop (guide
   * §2.4). Edges are id pairs only. Round count is bounded by the peel
-  * depth (graph-dependent, loudly capped); each round localCheckpoints
-  * the survivor list to truncate the iteration lineage.
+  * depth (graph-dependent, loudly capped); each round's counted cut
+  * ([[graft.core.Fixpoint.countedCut]]) truncates the survivor list's
+  * lineage and counts it in one job.
   */
 object Truss {
 
@@ -68,18 +71,14 @@ object Truss {
       val deg = canon.select(col("x").as("node"))
         .unionAll(canon.select(col("y").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-      var alive = canon
+      // survivor count carried across rounds: a round's counted cut is
+      // the next round's alive count
+      var (alive, aliveCount) = Fixpoint.countedCut("graft_ktruss", 0, canon
         .join(deg.select(col("node").as("x"), col("deg").as("dx")), Seq("x"))
         .join(deg.select(col("node").as("y"), col("deg").as("dy")), Seq("y"))
         .select(col("x"), col("y"),
           when(col("dx") <= col("dy"), col("x")).otherwise(col("y")).as("src"),
-          when(col("dx") <= col("dy"), col("y")).otherwise(col("x")).as("dst"))
-        .localCheckpoint(false)
-      // survivor count carried across rounds: this round's next.count()
-      // is the next round's alive count, so convergence needs ONE
-      // scheduled job per round (one job checkpoints and counts, as in
-      // Fixpoint.relax), not checkpoint + next.count + alive.count
-      var aliveCount = alive.count()
+          when(col("dx") <= col("dy"), col("y")).otherwise(col("x")).as("dst")))
       var converged = false
       var r = 0
       while (!converged && r < maxRounds) {
@@ -101,11 +100,10 @@ object Truss {
             greatest(col("a"), col("c")).as("y")))
           .unionAll(tris.select(col("b").as("x"), col("c").as("y")))
           .groupBy("x", "y").agg(count(lit(1)).as("sup"))
-        val next = alive.join(support, Seq("x", "y"), "left")
-          .where(coalesce(col("sup"), lit(0L)) >= (k - 2).toLong)
-          .select(col("x"), col("y"), col("src"), col("dst"))
-          .localCheckpoint(false)
-        val nextCount = next.count()
+        val (next, nextCount) = Fixpoint.countedCut("graft_ktruss", r,
+          alive.join(support, Seq("x", "y"), "left")
+            .where(coalesce(col("sup"), lit(0L)) >= (k - 2).toLong)
+            .select(col("x"), col("y"), col("src"), col("dst")))
         converged = nextCount == aliveCount
         alive = next
         aliveCount = nextCount

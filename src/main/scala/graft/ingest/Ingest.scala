@@ -1,7 +1,5 @@
 package graft.ingest
 
-import java.util.zip.ZipInputStream
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -149,24 +147,6 @@ object Ingest {
       try_to_timestamp(c, lit("yyyy-MM-dd")),
       try_to_timestamp(c, lit("LLLL d, yyyy")),
       try_to_timestamp(c, lit("yyyy"))).cast("date")
-
-  /** List the entry names of a zip archive via a streamed pass over its
-    * headers (driver side, metadata only).
-    */
-  def listZipEntries(spark: SparkSession, zipPath: String): Seq[String] = {
-    val p = new Path(zipPath)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val zin = new ZipInputStream(fs.open(p))
-    try {
-      val names = ArrayBuffer[String]()
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory) names += e.getName
-        e = zin.getNextEntry
-      }
-      names.toSeq
-    } finally zin.close()
-  }
 
   /** Zip-of-JSONL ingest: the driver parses the archive's CENTRAL
     * DIRECTORY once (ZipIndex — one tail read + one directory read,

@@ -42,47 +42,6 @@ object Shim {
       exp.extraOptimizations = exp.extraOptimizations :+ r
   }
 
-  /** Drop the origin-constraint capture from a (local)checkpointed
-    * Dataset's LogicalRDD leaf. `Dataset.checkpoint` snapshots the
-    * ORIGIN plan's constraint set onto the LogicalRDD
-    * (SPARK-39748-style stats/constraint carry-over), but that set can
-    * reference attributes that are not in the leaf's output (observed
-    * with equality-constraint chains like `where(a === b)` upstream of
-    * alias projections); a Union over such leaves then dies in
-    * Catalyst's constraint rewrite with `key not found: <attr>` during
-    * analysis or InferFiltersFromConstraints. Dropping the snapshot is
-    * sound — constraints are an optimizer hint, never a correctness
-    * input — and costs at most an inferred filter. Stats carry-over is
-    * kept. No-op on non-LogicalRDD plans.
-    */
-  def dropOriginConstraints(df: DataFrame): DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[_]]
-    ds.logicalPlan match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        // originStats/originConstraints live in the case class's second
-        // (curried) parameter list — no public accessor, so read them
-        // reflectively; stats carry-over is PRESERVED (dropping it would
-        // reset sizeInBytes to defaultSizeInBytes and kill auto-broadcast
-        // of checkpointed frames)
-        val cls = classOf[org.apache.spark.sql.execution.LogicalRDD]
-        val fCons = cls.getDeclaredField("originConstraints")
-        fCons.setAccessible(true)
-        if (fCons.get(l).asInstanceOf[Option[_]].isEmpty) df
-        else {
-          val fStats = cls.getDeclaredField("originStats")
-          fStats.setAccessible(true)
-          val stats = fStats.get(l)
-            .asInstanceOf[Option[org.apache.spark.sql.catalyst.plans.logical.Statistics]]
-          val rebuilt = new org.apache.spark.sql.execution.LogicalRDD(
-            l.output, l.rdd, l.outputPartitioning, l.outputOrdering,
-            l.isStreaming, l.getStream)(
-            df.sparkSession.asInstanceOf[classic.SparkSession], stats, None)
-          ofRows(df.sparkSession, rebuilt)
-        }
-      case _ => df
-    }
-  }
-
   /** Runtime SQL-function registration on a live session (the
     * counterpart of `SparkSessionExtensions.injectFunction` for
     * sessions built without graft's extensions). registerFunction

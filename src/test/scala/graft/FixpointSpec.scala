@@ -82,6 +82,27 @@ class FixpointSpec extends SparkTestBase {
     } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
   }
 
+  test("relax: a better that is never true is a first-visit wave") {
+    // 0 → 2 and 0 → 1 → 2 reach node 2 in waves 1 and 2, 2 → 3 → 0 closes
+    // a cycle, and 9 → 0 leaves node 9 unreachable. The label falls by
+    // one a wave, so under `_ < _` every later visit would relabel a node
+    // and the cycle would never settle
+    val edges = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 3L), (3L, 0L), (9L, 0L))
+      .toDF("src", "dst")
+    var steps = 0
+    val out = Fixpoint.relax("spec first visit", Seq((0L, 0L)).toDF("node", "d"), 10,
+        (_, _) => lit(false)) { (frontier, _) =>
+      steps += 1
+      frontier.join(edges, col("node") === col("src"))
+        .groupBy(col("dst").as("node")).agg(max(col("d") - 1).as("d"))
+    }.as[(Long, Long)].collect()
+    assert(out.length === 4)
+    assert(out.toMap === Map(0L -> 0L, 1L -> -1L, 2L -> -1L, 3L -> -2L))
+    assert(!out.exists(_._1 == 9L))
+    // wave 3 reaches only node 0, already labelled, and the loop stops
+    assert(steps === 3)
+  }
+
   test("relax: an empty seed set returns an empty frame with the seeds' schema") {
     var steps = 0
     val seeds = Seq.empty[(Long, Long)].toDF("node", "d")

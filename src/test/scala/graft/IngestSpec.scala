@@ -34,7 +34,9 @@ class IngestSpec extends SparkTestBase {
         """{"id":2,"name":"y","score":2.5}"""),
       "b.jsonl" -> Seq("""{"id":3,"name":"z","score":3.5}"""),
       "dir/c.jsonl" -> Seq("""{"id":4,"name":"w","score":4.5}"""))
-    assert(Ingest.listZipEntries(spark, zip).toSet ===
+    val p = new org.apache.hadoop.fs.Path(zip)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(graft.ingest.ZipIndex.entries(fs, p).map(_.name).toSet ===
       Set("a.jsonl", "b.jsonl", "dir/c.jsonl"))
     val df = Ingest.readZippedJsonl(spark, zip, schema, numPartitions = 2)
     assert(df.schema === schema)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
@@ -451,6 +453,18 @@ class PlanAuditSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
     }
   }
 
+  /** (file name, line, code) for every line of graft/graph's sources;
+    * code is the line with its line comment stripped.
+    */
+  private def graphSourceLines: Seq[(String, String, String)] = {
+    val graphDir = new java.io.File("src/main/scala/graft/graph")
+    assert(graphDir.isDirectory, s"missing ${graphDir.getPath}")
+    for {
+      f <- graphDir.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
+      line <- java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq
+    } yield (f.getName, line, line.takeWhile(_ != '/'))
+  }
+
   test("graph family: every broadcast() call site is audited bounded (lint)") {
     // the r9 hazard class: Bfs.earliestArrival broadcast an iteration
     // FRONTIER unconditionally — a set that grows with the reachable
@@ -471,26 +485,27 @@ class PlanAuditSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
       "Hits.scala" -> Set("broadcast(mx)"),
       // 1-row total edge count m
       "Modularity.scala" -> Set("broadcast(m)"))
-    val graphDir = new java.io.File("src/main/scala/graft/graph")
-    assert(graphDir.isDirectory, s"missing ${graphDir.getPath}")
-    for (f <- graphDir.listFiles().toSeq.filter(_.getName.endsWith(".scala"))) {
-      val lines = java.nio.file.Files.readAllLines(f.toPath)
-      lines.forEach { line =>
-        val code = line.takeWhile(_ != '/') // strip line comments
-        if (code.contains("broadcast(")) {
-          val ok = allowed.getOrElse(f.getName, Set.empty)
-            .exists(code.contains)
-          assert(ok, s"${f.getName}: unaudited broadcast() call site " +
-            s"'${line.trim}' — prove the broadcast side is bounded " +
-            "(1-row aggregate or size-gated) and add it to the allowlist")
-        }
-      }
+    for ((file, line, code) <- graphSourceLines if code.contains("broadcast(")) {
+      val ok = allowed.getOrElse(file, Set.empty).exists(code.contains)
+      assert(ok, s"$file: unaudited broadcast() call site " +
+        s"'${line.trim}' — prove the broadcast side is bounded " +
+        "(1-row aggregate or size-gated) and add it to the allowlist")
     }
     // and the one frontier broadcast must STAY behind its size gate
     val bfs = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/main/scala/graft/graph/Bfs.scala")))
     assert(bfs.contains("frontierRows <= broadcastRowLimit"),
       "earliestArrival's frontier broadcast lost its size gate")
+  }
+
+  test("graph family: no count() call, rounds cut and count in core.Fixpoint (lint)") {
+    // a lazy checkpoint read by count() costs one job more than
+    // Fixpoint.countedCut, whose checkpoint job also counts the rows
+    // (count()'s single-partition final stage is a job of its own under
+    // adaptive execution); the graph loops cut and count through it
+    for ((file, line, code) <- graphSourceLines)
+      assert(!code.contains(".count()"), s"$file: '${line.trim}' counts on its own; " +
+        "cut and count the frame with Fixpoint.countedCut or Fixpoint.observedRound")
   }
 
   test("prefix-filter join: equi-joins only, windows partition per-doc") {
