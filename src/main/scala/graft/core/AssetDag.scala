@@ -29,7 +29,7 @@ import org.apache.spark.sql.DataFrame
   * is an order-independent hash of the data directory's recursive file
   * listing (path + length + mtime per file), so re-dropping an input
   * marks its consumers stale on the next materialize. A directory-status
-  * mtime would NOT do (ADVICE r11): s3a-style object stores report 0
+  * mtime would NOT do: s3a-style object stores report 0
   * for implicit prefixes, and coarse filesystem ticks let two drops
   * share a timestamp — both read as "unchanged" and silently skip the
   * cone. The listing hash changes whenever any file is added, removed,
@@ -52,7 +52,7 @@ import org.apache.spark.sql.DataFrame
   * upstream re-published mid-build leaves the manifest recording the
   * pre-build token, which differs from current and also reads as
   * "stale" (capturing after the build would record the NEWER token and
-  * silently skip — ADVICE r11). A torn/garbled manifest parses to a
+  * silently skip). A torn/garbled manifest parses to a
   * partial map whose missing or mismatched entries read as "stale".
   * In every case the worst outcome is one redundant rebuild, never a
   * silently-skipped one.
@@ -99,12 +99,11 @@ final class AssetDag(val catalog: Catalog) {
 
   private val contentDigestDeps = scala.collection.mutable.Set.empty[String]
 
-  /** Opt EXTERNAL dependencies into content-digest version tokens
-    * (VERDICT r12 item 5): their per-file hash folds in the first and
-    * last 64 KiB of file bytes on top of path+length+mtime, closing
-    * the listing token's same-tick same-length in-place-rewrite
-    * residue at a bounded I/O cost (two windows per file, never a full
-    * read). No effect on dag-published deps — their pointer version is
+  /** Opt EXTERNAL dependencies into content-digest version tokens:
+    * their per-file hash folds in the first and last 64 KiB of file
+    * bytes on top of path+length+mtime, closing the listing token's
+    * same-tick same-length in-place-rewrite residue at a bounded I/O
+    * cost (two windows per file, never a full read). No effect on dag-published deps — their pointer version is
     * already the token. Returns `this` for chaining.
     */
   def externalContentDigest(deps: String*): this.type = {
@@ -140,7 +139,7 @@ final class AssetDag(val catalog: Catalog) {
     * version for dag-published tables, else an order-independent hash
     * of the data directory's recursive file listing for external
     * inputs (see class doc — a directory mtime is 0 on object-store
-    * implicit prefixes and tick-coarse locally, ADVICE r11). Missing
+    * implicit prefixes and tick-coarse locally). Missing
     * deps are loud — a silent None would read as "fresh forever".
     */
   private def token(dep: String): Long =
@@ -250,7 +249,7 @@ final class AssetDag(val catalog: Catalog) {
       throw new IllegalArgumentException(
         s"dependency '$d' of asset '${node.name}' is neither a registered " +
           "asset nor an existing catalog table")
-    // capture dependency tokens BEFORE resolving inputs (ADVICE r11):
+    // capture dependency tokens BEFORE resolving inputs:
     // recording token(d) after the build races a concurrent upstream
     // re-publish — the build reads version N but the manifest would
     // record N+1 and the asset would read as fresh despite being built

@@ -9,8 +9,8 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
   * s3a:// — all expose seekable streams / ranged reads).
   *
   * A `ZipInputStream` can only reach entry k by streaming-and-discarding
-  * entries 0..k−1, so a 200-partition ingest of one archive reads the
-  * archive ~200 times. The zip format's own index — the central
+  * entries 0..k−1, so an N-partition ingest of one archive reads the
+  * archive ~N times. The zip format's own index — the central
   * directory at the end of the file — gives every entry's byte offset;
   * parsing it once (driver side, one tail read + one directory read) and
   * SEEKING to each entry inside tasks makes total I/O O(archive size)

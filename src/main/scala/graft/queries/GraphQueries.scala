@@ -416,17 +416,18 @@ object GraphQueries {
   private def kcoreConvOracle(k: Int, depth: Int): String = {
     val rounds = (1 to depth).map { r =>
       s""",
-         |i$r AS (
+         |i$r AS MATERIALIZED (
          |  SELECT e.src, e.dst FROM e
          |  JOIN a${r - 1} x ON x.node = e.src
          |  JOIN a${r - 1} y ON y.node = e.dst),
-         |a$r AS (SELECT src AS node FROM i$r GROUP BY 1 HAVING count(*) >= $k)"""
+         |a$r AS MATERIALIZED (
+         |  SELECT src AS node FROM i$r GROUP BY 1 HAVING count(*) >= $k)"""
         .stripMargin
     }.mkString
-    // MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, so the
-    // unrolled rounds would otherwise re-expand `e` (and its parquet
-    // scan) twice per round — at depth 12 that exhausts the open-file
-    // limit before it exhausts patience
+    // MATERIALIZED is load-bearing on every CTE: DuckDB inlines plain
+    // CTEs, and round r+1 reads a$r twice, so plain rounds would
+    // re-expand the first round 2^depth times — at depth 12 that
+    // exhausts memory, as plain `e` would exhaust the open-file limit
     s"""WITH sp AS MATERIALIZED (
        |  SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk
        |  FROM lineitem WHERE l_quantity >= 49.0),

@@ -38,10 +38,10 @@ class IngestSpec extends SparkTestBase {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(graft.ingest.ZipIndex.entries(fs, p).map(_.name).toSet ===
       Set("a.jsonl", "b.jsonl", "dir/c.jsonl"))
-    val df = Ingest.readZippedJsonl(spark, zip, schema, numPartitions = 2)
+    val df = Ingest.readZippedJsonl(spark, zip, schema)
     assert(df.schema === schema)
-    val rows = df.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    assert(rows === Set((1L, "x", 1.5), (2L, "y", 2.5), (3L, "z", 3.5), (4L, "w", 4.5)))
+    val rows = df.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
+    assert(rows.sorted === Seq((1L, "x", 1.5), (2L, "y", 2.5), (3L, "z", 3.5), (4L, "w", 4.5)))
   }
 
   test("ZipIndex: central directory parse + seek-based entry reads") {
@@ -104,13 +104,71 @@ class IngestSpec extends SparkTestBase {
     } finally raw.close()
   }
 
+  /** `body` with the two file-scan sizing confs set to `maxBytes` and
+    * `openCost`, restored afterwards.
+    */
+  private def withSplitConf[T](maxBytes: Long, openCost: Long)(body: => T): T = {
+    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    keys.zip(Seq(maxBytes, openCost)).foreach { case (k, v) => spark.conf.set(k, v.toString) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** One byte per split: every entry gets a partition to itself. */
+  private def entryPerSplit[T](body: => T): T = withSplitConf(1L, 0L)(body)
+
+  private def idRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+    df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+
   test("readZippedJsonl reads each entry exactly once across many partitions") {
     val entries = (0 until 23).map(i =>
-      s"part_$i.jsonl" -> Seq(s"""{"id":$i,"name":"n$i","score":$i.5}"""))
+      s"part_$i.jsonl" -> Seq(s"""{"id":$i,"name":"n$i","score":$i.5}""",
+        s"""{"id":$i,"name":"m$i","score":$i.5}"""))
     val zip = writeZip(entries: _*)
-    val df = Ingest.readZippedJsonl(spark, zip, schema, numPartitions = 8)
-    val rows = df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(rows === (0 until 23).map(i => (i.toLong, s"n$i")).toSet)
+    val expected = (0 until 23).flatMap(i => Seq((i.toLong, s"n$i"), (i.toLong, s"m$i"))).sorted
+    // a sorted Seq is a multiset: an entry read twice adds rows
+    assert(idRows(Ingest.readZippedJsonl(spark, zip, schema)) === expected)
+    entryPerSplit {
+      val df = Ingest.readZippedJsonl(spark, zip, schema)
+      assert(df.rdd.getNumPartitions === 23)
+      assert(idRows(df) === expected)
+    }
+  }
+
+  test("zip splits follow Spark's file-scan sizing rule") {
+    def lines(i: Int, n: Int) =
+      (0 until n).map(j => s"""{"id":$i,"name":"n${i}_$j","score":$j.5}""")
+    val zip = writeZip((0 until 50).map(i => s"e_$i.jsonl" -> lines(i, 20)): _*)
+    val p = new org.apache.hadoop.fs.Path(zip)
+    val entries = graft.ingest.ZipIndex.entries(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    // small entries pack to about one split per core, in archive order
+    val splits = Ingest.zipSplits(spark, entries)
+    assert(splits.size <= spark.sparkContext.defaultParallelism + 1)
+    assert(splits.flatten === entries)
+    val df = Ingest.readZippedJsonl(spark, zip, schema)
+    val (rows, sample) = Profile.measure(spark)(idRows(df))
+    assert(sample.jobs === 1 && sample.tasks === splits.size)
+    assert(rows.size === 50 * 20)
+    assert(rows === entryPerSplit(idRows(Ingest.readZippedJsonl(spark, zip, schema))))
+
+    // an entry larger than maxPartitionBytes gets a partition to itself,
+    // while entries below it still share one
+    val mixed = writeZip((0 until 12).map(i =>
+      s"e_$i.jsonl" -> lines(i, if (i == 5) 200 else 20)): _*)
+    val small = entries.head.uncompressedSize
+    withSplitConf(maxBytes = 4 * small, openCost = 0L) {
+      val byPartition = Ingest.readZippedJsonl(spark, mixed, schema)
+        .select(spark_partition_id(), col("id")).collect()
+        .groupBy(_.getInt(0)).values.map(_.map(_.getLong(1)).toSet).toSeq
+      assert(byPartition.flatten.sorted === (0L until 12L))
+      assert(byPartition.filter(_.contains(5L)) === Seq(Set(5L)))
+      assert(byPartition.exists(_.size > 1))
+    }
   }
 
   test("normalizeDate parses the reference's three formats") {
