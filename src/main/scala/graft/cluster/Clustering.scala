@@ -197,7 +197,7 @@ object Clustering {
       def round(df: DataFrame, i: Int): (DataFrame, Long) =
         Fixpoint.observedRound(checkpoint, "graft_cw_active", i, df,
           sum(when(col("active"), 1L).otherwise(0L)))
-      var (state, active, iter) = resumeFrom match {
+      val (start, active, k) = resumeFrom match {
         case Some((st, k)) =>
           // a checkpoint written before the state carried its adjacency
           // would resume with no messages to send: refuse it by name
@@ -210,14 +210,13 @@ object Clustering {
           val (st, act) = round(initialState(adjacency), 0)
           (st, act, 0)
       }
-      while (active > 0 && iter < maxIter) {
-        val next = step(state, seed, iter, updateProbability)
-        iter += 1
-        val (st, act) = round(next, iter)
-        state = st
-        active = act
-      }
-      state.select("piece_id", "cluster_id")
+      // bounded: iteration maxIter stops the loop, it does not throw
+      Fixpoint.iterate("Chinese Whispers", maxIter - k, (start, active > 0 && k < maxIter)) {
+        (state, r) =>
+          val iter = k + r
+          val (st, act) = round(step(state, seed, iter - 1, updateProbability), iter)
+          (st, act > 0 && iter < maxIter)
+      }.select("piece_id", "cluster_id")
     }
     // a caller-supplied checkpointer owns its directory, the only one
     // latestCheckpoint can find; otherwise this call owns a scratch one

@@ -2,17 +2,22 @@ package graft.core
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.annotation.tailrec
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 
-/** What the engine's iterative DataFrame loops share. The converged
-  * loops (`Clustering.propagate`, `KCore.peelConverged`,
-  * `PageRank.runConverged`, `Dedup.dedupGroupsConverged`) take from it
-  * how a round cuts its lineage, how it reads its convergence value, and
-  * who owns the directory its checkpoints go to; each keeps its own
-  * step, `while` and stop test. The label-correcting loops run whole in
-  * [[relax]] and keep only their step.
+/** What the engine's iterative DataFrame loops share. Every round loop
+  * in `graph`, `cluster` and `dedup` runs on [[iterate]], which owns the
+  * round counter, the cap check and the cap message; each caller keeps
+  * its step, its stop value and its caches. The converged loops
+  * (`Clustering.propagate`, `KCore.peelConverged`,
+  * `PageRank.runConverged`, `Dedup.dedupGroupsConverged`) also take from
+  * it how a round cuts its lineage, how it reads its convergence value,
+  * and who owns the directory its checkpoints go to. The
+  * label-correcting loops run whole in [[relax]] and keep only their
+  * step.
   *
   * Invariants:
   *  - a [[Checkpointer]] runs an action on the frame it is given, and
@@ -127,6 +132,33 @@ object Fixpoint {
   def countedCut(name: String, i: Int, df: DataFrame): (DataFrame, Long) =
     observedRound(localCheckpointer, name, i, df, count(lit(1)))
 
+  /** The one round loop. From `init` = (state, go on?), runs
+    * `round(state, r)` for r = 1, 2, … while the last round said to go on,
+    * and returns the last state; an initial `false` runs no round.
+    *
+    * Invariants:
+    *  - the cap is loud: a loop still going after `maxRounds` rounds
+    *    throws, naming `name`, instead of returning a state that is not
+    *    a fixpoint (a partial result looks like a converged one
+    *    downstream). A loop whose bound is its contract (Chinese
+    *    Whispers' `maxIter`, a BFS wave's `maxHops`) folds the bound into
+    *    its go-on value, so it stops at the bound without throwing;
+    *  - the driver runs no job of its own: a round's jobs are its step's;
+    *  - it holds no state outside the call, so independent loops may run
+    *    it concurrently (`Scc.dagPathCentrality`'s two waves do).
+    */
+  def iterate[S](name: String, maxRounds: Int, init: (S, Boolean))(
+      round: (S, Int) => (S, Boolean)): S = {
+    @tailrec def loop(state: S, goOn: Boolean, r: Int): S =
+      if (!goOn) state
+      else {
+        require(r < maxRounds, s"$name did not converge within $maxRounds rounds; raise maxRounds")
+        val (next, more) = round(state, r + 1)
+        loop(next, more, r + 1)
+      }
+    loop(init._1, init._2, 0)
+  }
+
   /** The frontier-limited label-correcting loop behind
     * `Scc.stronglyConnected`'s coloring and membership sweep,
     * `Scc.dagLongestPath`, `Bfs.shortestPaths` and `Bfs.earliestArrival`.
@@ -148,9 +180,8 @@ object Fixpoint {
     *    terminal round builds no merge. The cut's job also counts the
     *    improved nodes that had a label; when there are none (every
     *    round of a first-visit wave), the merge is the union alone;
-    *  - the cap is loud: a loop still improving after `maxRounds`
-    *    rounds throws, naming `name`, instead of returning labels that
-    *    are not a fixpoint;
+    *  - the loop runs on [[iterate]], so a loop still improving after
+    *    `maxRounds` rounds throws, naming `name`;
     *  - for a monotone `better` the fixpoint does not depend on the
     *    schedule: a step may relax several hops per round (the callers'
     *    strides) and every candidate it relays is a genuine label, so
@@ -164,32 +195,27 @@ object Fixpoint {
   def relax(name: String, seeds: DataFrame, maxRounds: Int, better: (Column, Column) => Column,
       seedRows: Option[Long] = None)(step: (DataFrame, Long) => DataFrame): DataFrame = {
     val Array(node, label) = seeds.columns
-    var (labels, frontierRows) = seedRows match {
+    val (seeded, seedCount) = seedRows match {
       case Some(n) => (seeds, n)
       case None => countedCut(name, 0, seeds)
     }
-    var frontier = labels
-    var r = 0
-    while (frontierRows > 0) {
-      r += 1
-      require(r <= maxRounds, s"$name still improving after $maxRounds rounds; raise " +
-        "maxRounds, unless its labels cannot settle (a longest path on a cyclic input never does)")
-      val relabelled = Observation(s"${name}_relabelled_$r")
-      val improved = step(frontier, frontierRows).toDF("cand", "cand_label")
-        .join(labels, col("cand") === col(node), "left")
-        .where(col(label).isNull || better(col("cand_label"), col(label)))
-        .observe(relabelled, count(col(label)).as("value"))
-        .select(col("cand").as(node), col("cand_label").as(label))
-      val (next, n) = countedCut(name, r, improved)
-      if (n > 0) {
-        val kept = if (relabelled.get("value") == 0L) labels
-          else labels.join(next.select(node), Seq(node), "left_anti")
-        labels = kept.unionAll(next).localCheckpoint(false)
-      }
-      frontier = next
-      frontierRows = n
-    }
-    labels
+    // state: (labels, frontier, frontier rows)
+    iterate(name, maxRounds, ((seeded, seeded, seedCount), seedCount > 0)) {
+      case ((labels, frontier, frontierRows), r) =>
+        val relabelled = Observation(s"${name}_relabelled_$r")
+        val improved = step(frontier, frontierRows).toDF("cand", "cand_label")
+          .join(labels, col("cand") === col(node), "left")
+          .where(col(label).isNull || better(col("cand_label"), col(label)))
+          .observe(relabelled, count(col(label)).as("value"))
+          .select(col("cand").as(node), col("cand_label").as(label))
+        val (next, n) = countedCut(name, r, improved)
+        val merged = if (n == 0) labels else {
+          val kept = if (relabelled.get("value") == 0L) labels
+            else labels.join(next.select(node), Seq(node), "left_anti")
+          kept.unionAll(next).localCheckpoint(false)
+        }
+        ((merged, next, n), n > 0)
+    }._1
   }
 
   /** Runs `body` with a checkpointer over a fresh per-call directory

@@ -93,17 +93,15 @@ object Dedup {
   }
 
   /** Spread candidate id-pairs across the session's full shuffle
-    * parallelism before a CPU-heavy per-pair verify kernel. The r13
-    * spread used a keyed `repartition(cols)` whose partition count AQE
-    * then COALESCES by byte size — and an id-pair exchange is a few MB
-    * however many pairs it holds (~16 B/row), so the O(len·maxDist)
-    * banded DP / O(|hs|) set intersects collapsed back to ONE task
-    * (measured r14: q_dedup_edit_distance 3.7 s in a single save-stage
-    * task at sf0.1). An explicit partition count (REPARTITION_BY_NUM)
-    * is exempt from AQE coalescing, and the count is the session's
-    * configured shuffle parallelism — scale-adaptive via conf, not a
-    * local-mode constant (guide §2.5: AQE's advisory bytes are blind
-    * to CPU-per-row).
+    * parallelism before a CPU-heavy per-pair verify kernel. A keyed
+    * `repartition(cols)` has its partition count COALESCED by AQE by
+    * byte size — and an id-pair exchange is a few MB however many pairs
+    * it holds (~16 B/row), so the O(len·maxDist) banded DP / O(|hs|)
+    * set intersects collapse back to ONE task. An explicit partition
+    * count (REPARTITION_BY_NUM) is exempt from AQE coalescing, and the
+    * count is the session's configured shuffle parallelism —
+    * scale-adaptive via conf, not a local-mode constant (guide §2.5:
+    * AQE's advisory bytes are blind to CPU-per-row).
     */
   private def spreadPairs(candidates: DataFrame): DataFrame =
     candidates.repartition(
@@ -125,7 +123,7 @@ object Dedup {
       .select(col("doc_id"),
         array_distinct(TextAnalysis.shingleHashes(col("th"), n)).as("hs"))
       .select(col("doc_id"), col("hs"), size(col("hs")).cast("long").as("n_sh"))
-    // r13: spread the candidate pairs before the per-pair set
+    // spread the candidate pairs before the per-pair set
     // intersection (the editDistanceVerify rationale — the shingle
     // sides broadcast, so the O(|hs|) intersect otherwise inherits the
     // candidate generator's task count; ids-only exchange)
@@ -164,7 +162,7 @@ object Dedup {
     def contS(num: Column, den: Column): Column =
       when(den === 0L, lit(null).cast("long"))
         .otherwise(graft.ml.Training.floorDivP(num * lit(1000000L), den))
-    // r13: spread candidate pairs before the per-pair intersect (the
+    // spread candidate pairs before the per-pair intersect (the
     // ngramJaccard note)
     spreadPairs(candidates)
       .join(sh.select(col("doc_id").as("doc_id_a"), col("hs").as("hs_a"),
@@ -258,7 +256,7 @@ object Dedup {
     require(maxDist > 0, "maxDist must be positive")
     val t = docs.select(col("doc_id"),
       substring(col("text"), 1, prefixLen).as("p"))
-    // r13 (guide §2.5 unsplittable-input remedy): the banded DP below is
+    // guide §2.5 unsplittable-input remedy: the banded DP below is
     // O(prefixLen·maxDist) CPU per pair, but candidate generators are
     // map-side over the document scan and the text joins broadcast — so
     // without this spread the WHOLE verify inherits the scan's task
@@ -536,7 +534,7 @@ object Dedup {
       // the reuse misses and the recompute goes exponential (observed:
       // the same 4-round run bimodal at 7 s vs 22 s in one bench).
       // Truncate every 2 rounds so at most 4 copies ever exist between
-      // barriers. LAZY (r14): the checkpointed RDD physically computes
+      // barriers. LAZY: the checkpointed RDD physically computes
       // ONCE when the final action first reads it and both consumers
       // then share the cached partitions — same recompute bound as the
       // eager form, minus its dedicated mid-loop job.
@@ -570,24 +568,14 @@ object Dedup {
     val edges = symmetricEdges(pairs)
     try Fixpoint.scratch(docs.sparkSession, "graft-dedup-conv",
         Fixpoint.hybridCheckpointer) { checkpoint =>
-      var labels = docs.select(col("doc_id"), col("doc_id").as("group_id"))
-      var changed = 1L
-      var r = 0
-      while (changed > 0L && r < maxRounds) {
-        r += 1
-        val (l, c) = Fixpoint.observedRound(checkpoint, "graft_dedup_conv", r,
+      Fixpoint.iterate("dedupGroupsConverged", maxRounds,
+          (docs.select(col("doc_id"), col("doc_id").as("group_id")), true)) { (labels, r) =>
+        val (l, changed) = Fixpoint.observedRound(checkpoint, "graft_dedup_conv", r,
           minLabelRound(edges, labels),
           sum(when(col("new_group") =!= col("group_id"), 1L).otherwise(0L)),
           col("doc_id"), col("new_group").as("group_id"))
-        labels = l
-        changed = c
-      }
-      // stopping while labels still change would return a partially
-      // merged result, indistinguishable from a converged one downstream
-      require(changed == 0L,
-        s"dedupGroupsConverged did not converge within $maxRounds rounds " +
-          s"($changed labels still changing); raise maxRounds")
-      labels.select(col("doc_id"), col("group_id"),
+        (l, changed > 0L)
+      }.select(col("doc_id"), col("group_id"),
         (col("doc_id") === col("group_id")).as("is_canonical"))
     } finally edges.unpersist()
   }
@@ -648,7 +636,7 @@ object Dedup {
         .select(col("doc_id"), col("is_seed"),
           when(col("is_seed"), col("lid"))
             .otherwise(coalesce(col("vote"), col("lid"))).as("lid"))
-      // LAZY mid-loop truncation — the dedupGroups r14 note
+      // LAZY mid-loop truncation, as in dedupGroups
       if (r % 2 == 0 && r < rounds) lab = lab.localCheckpoint(false)
     }
     val out = lab.join(broadcast(dict), Seq("lid"), "left")

@@ -67,27 +67,27 @@ object Bfs {
       .repartition(col("src"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = start.distinct().withColumn("hops", lit(0L)).localCheckpoint()
-    var frontier = labels
+    val seeded = start.distinct().withColumn("hops", lit(0L)).localCheckpoint()
+    def level(f: DataFrame, seen: Seq[DataFrame], h: Int): DataFrame = {
+      val nbrs = f.join(adj, col("node") === col("src"))
+        .select(carried :+ col("dst").as("node"): _*)
+        .distinct()
+      seen.foldLeft(nbrs)((d, s) => d.join(s, key, "left_anti"))
+        .withColumn("hops", lit(h.toLong))
+    }
     // STRIDE-2 rounds: a node's hop label is its shortest-path length
     // however the wave is scheduled, so expanding TWO levels inside one
     // scheduled round (level hop+1, then level hop+2 excluding both the
     // labels and the first expansion) assigns the same hops and halves
     // the per-round fixed cost (counted cut, merge, driver round-trip);
-    // the per-level exchanges are the algorithm and stay. The odd tail
-    // under the maxHops cap falls back to a single-level round, so the
-    // capped output equals the one-level loop's (the oracle caps at the
-    // same hop count).
-    var waveRows = 1L
-    var hop = 0
-    while (hop < maxHops && waveRows > 0) {
-      def level(f: DataFrame, seen: Seq[DataFrame], h: Int): DataFrame = {
-        val nbrs = f.join(adj, col("node") === col("src"))
-          .select(carried :+ col("dst").as("node"): _*)
-          .distinct()
-        seen.foldLeft(nbrs)((d, s) => d.join(s, key, "left_anti"))
-          .withColumn("hops", lit(h.toLong))
-      }
+    // the per-level exchanges are the algorithm and stay. Round r starts
+    // at hop 2(r-1). The odd tail under the maxHops cap falls back to a
+    // single-level round, so the capped output equals the one-level
+    // loop's (the oracle caps at the same hop count); the wave is bounded,
+    // and stops at maxHops without throwing. State: (labels, frontier).
+    val (labels, _) = Fixpoint.iterate("hopWave", (maxHops + 1) / 2,
+        ((seeded, seeded), maxHops > 0)) { case ((labels, frontier), r) =>
+      val hop = 2 * (r - 1)
       // the counted cut of the round's last level also materializes the
       // lazy cut of the first; the merge takes BOTH levels (h1 may be
       // non-empty when h2 is empty) and stays lazy until the next round
@@ -96,18 +96,12 @@ object Bfs {
         val h1 = level(frontier, Seq(labels), hop + 1).localCheckpoint(false)
         val (h2, n) = Fixpoint.countedCut("graft_bfs_wave", hop + 2,
           level(h1, Seq(labels, h1), hop + 2))
-        labels = labels.unionAll(h1).unionAll(h2).localCheckpoint(false)
-        frontier = h2
-        waveRows = n
-        hop += 2
+        ((labels.unionAll(h1).unionAll(h2).localCheckpoint(false), h2), n > 0 && hop + 2 < maxHops)
       } else {
+        // hop + 1 == maxHops: the last level
         val (next, n) = Fixpoint.countedCut("graft_bfs_wave", hop + 1,
           level(frontier, Seq(labels), hop + 1))
-        if (n > 0)
-          labels = labels.unionAll(next).localCheckpoint(false)
-        frontier = next
-        waveRows = n
-        hop += 1
+        ((if (n > 0) labels.unionAll(next).localCheckpoint(false) else labels, next), false)
       }
     }
     adj.unpersist()

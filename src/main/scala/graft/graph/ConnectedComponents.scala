@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Fixpoint
+
 /** Connected components by alternating large-star / small-star rounds
   * (Kiveris et al., "Connected Components in MapReduce and Beyond",
   * SoCC 2014) — the O(log n)-round component algorithm.
@@ -19,9 +21,9 @@ import org.apache.spark.storage.StorageLevel
   * (component minimum); ConnectedComponentsSpec proves agreement.
   *
   * Scale shape per round: each star is ONE exchange of the (long, long)
-  * edge rows keyed by node id feeding a whole-partition window min (r14;
-  * the groupBy+join form paid a second full exchange per star to
-  * co-locate the join for the identical per-node value), plus one
+  * edge rows keyed by node id feeding a whole-partition window min (the
+  * groupBy+join form paid a second full exchange per star to co-locate
+  * the join for the identical per-node value), plus one
   * distinct per alternation; no cartesian, no driver-side state beyond
   * the two convergence counters. Edge multiplicity never grows across
   * alternations: every ALTERNATION ends in a `distinct` and the
@@ -53,10 +55,10 @@ object ConnectedComponents {
     * the minimum of its closed neighbourhood. Emitted edges satisfy
     * src > dst (child points to a smaller parent candidate).
     *
-    * r14 shape (guide §2.4): the neighbourhood minimum is a whole-
-    * partition window min over ONE exchange of the symmetric edge set —
-    * the groupBy(src).min + join-back form paid a second full exchange
-    * of `sym` to co-locate the join, for the identical per-src value.
+    * The neighbourhood minimum is a whole-partition window min over ONE
+    * exchange of the symmetric edge set — the groupBy(src).min +
+    * join-back form paid a second full exchange of `sym` to co-locate the
+    * join, for the identical per-src value.
     * The window co-locates each node's rows exactly like the join did
     * (same key, same hub skew), so no new skew is introduced. The
     * output is NOT deduplicated here: [[smallStar]]'s window min is
@@ -99,26 +101,25 @@ object ConnectedComponents {
   }
 
   /** The shared contraction loop: alternate stars until the edge set is
-    * a star forest. Returns the
-    * converged, checkpointed edge set. Stride-2 after the first two
-    * rounds — see the object doc; `r` counts ALTERNATIONS, so maxRounds
-    * bounds the same quantity it always did.
+    * a star forest. Returns the converged, checkpointed edge set.
+    * `maxRounds` bounds ALTERNATIONS: the first two scheduled rounds run
+    * one each, later ones two (see the object doc), and the last stops
+    * at the bound.
     */
   private def contract(edges: DataFrame, maxRounds: Int): DataFrame = {
-    var e = edges.where(col("src") =!= col("dst"))
+    val start = edges.where(col("src") =!= col("dst"))
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var converged = false
-    var r = 0
-    while (!converged && r < maxRounds) {
-      // two alternations per scheduled round once the shape is known to
-      // be deep; both stars are idempotent at the fixpoint, so an odd
-      // convergence depth costs one no-op alternation on the final
-      // forest — the cheapest round of the run — in exchange for half
-      // the checkpoints + convergence tests on every deep graph
-      val stride = math.min(if (r < 2) 1 else 2, maxRounds - r)
-      var n = e
+    // alternations done before scheduled round i; a round runs while some
+    // are left under the bound
+    def done(i: Int): Int = math.min(maxRounds, math.max(i - 1, 2 * i - 4))
+    val rounds = (1 to maxRounds).count(done(_) < maxRounds)
+    Fixpoint.iterate("largeStarSmallStar", rounds, (start, true)) { (e, r) =>
+      // both stars are idempotent at the fixpoint, so an odd convergence
+      // depth costs one no-op alternation on the final forest — the
+      // cheapest round of the run — in exchange for half the checkpoints
+      // + convergence tests on every deep graph.
       // EVERY alternation takes a lazy checkpoint, including the
       // stride's intermediate one: the next alternation references its
       // input several times (sym union + min join), and without the
@@ -126,36 +127,25 @@ object ConnectedComponents {
       // AQE stage jobs when exchange reuse misses (measured: stride-2
       // without the intermediate barrier ADDED jobs, 158 → 161 on the
       // single-link face). Lazy = no scheduled job of its own; the
-      // partitions cache inside the convergence test's job.
-      for (_ <- 1 to stride) n = smallStar(largeStar(n)).localCheckpoint(false)
-      r += stride
-      // n is already lazily checkpointed (per-alternation, above): the
-      // star-forest test below shuffles, so its map side computes —
-      // and the checkpoint persists — every partition inside the
-      // test's own job; an eager variant paid a separate
-      // materialization job per round for the same bytes
-      val next = n
-      val prev = e
-      // the checkpoint materializes next's partitions — a persist on
-      // top would store them a second time for nothing
-      e = next
-      prev.unpersist()
+      // partitions cache inside the star-forest test's job, whose
+      // shuffle map side computes them (an eager variant paid a separate
+      // materialization job per round for the same bytes), so a persist
+      // on top would store them a second time for nothing
+      var next = e
+      for (_ <- done(r) until done(r + 1)) next = smallStar(largeStar(next)).localCheckpoint(false)
+      e.unpersist()
       // star-forest test, both halves load-bearing: a parent that is
       // also a child means a deeper tree remains, and a child with TWO
       // parents means two stars that a further round will merge —
       // either way, not converged. One fused action (see Scaladoc):
       // per-node (child rows, parent rows) over the distinct edge set
-      converged = e.select(col("src").as("n"), lit(1L).as("c"), lit(0L).as("p"))
-        .unionAll(e.select(col("dst").as("n"), lit(0L).as("c"), lit(1L).as("p")))
+      (next, !next.select(col("src").as("n"), lit(1L).as("c"), lit(0L).as("p"))
+        .unionAll(next.select(col("dst").as("n"), lit(0L).as("c"), lit(1L).as("p")))
         .groupBy(col("n"))
         .agg(sum(col("c")).as("nc"), sum(col("p")).as("np"))
         .where((col("nc") > 0 && col("np") > 0) || col("nc") > 1)
-        .isEmpty
+        .isEmpty)
     }
-    require(converged,
-      s"largeStarSmallStar did not reach a star forest within $maxRounds " +
-        "rounds; raise maxRounds")
-    e
   }
 
   /** Labels from a converged star forest: roots label themselves,

@@ -87,13 +87,13 @@ object Hits {
         .select(col("node"), expr(s"($c * $scale) DIV greatest(mx, 1L)").as(c))
     }
 
-    // SPARSE scores through the loop (r14): a node absent from a score
+    // SPARSE scores through the loop: a node absent from a score
     // table scores 0, and zeros are inert everywhere the loop looks —
     // they add nothing to a half-step sum, and they can never carry the
     // L∞ max (the previous max-holder keeps a positive reverse-edge
-    // contribution alive). The r13 shape left-joined `nodes` and
-    // coalesced zeros in EVERY half-step — two joins per iteration
-    // shuffling |V| rows just to carry inert zeros; the dense fill now
+    // contribution alive). A dense table would left-join `nodes` and
+    // coalesce zeros in EVERY half-step — two joins per iteration
+    // shuffling |V| rows just to carry inert zeros; the dense fill
     // happens once, at the end. Half-step 1 is join-free: hub_0 is the
     // constant `scale`, so auth_1's raw sum is scale·indegree — one
     // partial-aggregated groupBy over the edge list.

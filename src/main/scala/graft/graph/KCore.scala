@@ -70,28 +70,22 @@ object KCore {
     try Fixpoint.scratch(edges.sparkSession, "graft-kcore",
         Fixpoint.hybridCheckpointer) { checkpoint =>
       // round 0 cuts and counts the node set; each round's count is the
-      // next round's survivor baseline
-      var (alive, lastAlive) =
-        Fixpoint.observedRound(checkpoint, "graft_kcore", 0, nodes, count(lit(1)))
-      var removed = 1L
-      var r = 0
-      while (removed > 0L && r < maxRounds) {
-        r += 1
-        val induced = e
-          .join(alive.select(col("node").as("src")), Seq("src"))
-          .join(alive.select(col("node").as("dst")), Seq("dst"))
-        val next = induced.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .where(col("deg") >= k)
-          .select(col("node"))
-        val (a, nAlive) =
-          Fixpoint.observedRound(checkpoint, "graft_kcore", r, next, count(lit(1)))
-        alive = a
-        removed = lastAlive - nAlive
-        lastAlive = nAlive
+      // next round's survivor baseline, and a round that removes no node
+      // ends the peel
+      val (alive, _) = Fixpoint.iterate("k-core peel", maxRounds,
+          (Fixpoint.observedRound(checkpoint, "graft_kcore", 0, nodes, count(lit(1))), true)) {
+        case ((alive, lastAlive), r) =>
+          val induced = e
+            .join(alive.select(col("node").as("src")), Seq("src"))
+            .join(alive.select(col("node").as("dst")), Seq("dst"))
+          val next = induced.groupBy(col("src").as("node"))
+            .agg(count(lit(1)).as("deg"))
+            .where(col("deg") >= k)
+            .select(col("node"))
+          val (a, nAlive) =
+            Fixpoint.observedRound(checkpoint, "graft_kcore", r, next, count(lit(1)))
+          ((a, nAlive), nAlive < lastAlive)
       }
-      require(removed == 0L,
-        s"k-core peel did not stabilize within $maxRounds rounds; raise maxRounds")
       nodes.join(alive.withColumn("in_core", lit(true)), Seq("node"), "left")
         .select(col("node"), coalesce(col("in_core"), lit(false)).as("in_core"))
     } finally {

@@ -132,10 +132,9 @@ object PageRank {
     }
     val deg = e.groupBy("src").agg(sum(col("w")).as("sw"))
     // out-weight-annotated edges: joined once, reused every iteration.
-    // Cached PRE-PARTITIONED on the per-iteration join key (r14, the
-    // dedupGroups note): every iteration joins on src, so the cached
-    // layout satisfies the join's distribution and only the (narrow)
-    // rank side ever reshuffles. Same for the node table: the contrib
+    // Cached PRE-PARTITIONED on the per-iteration join key: every
+    // iteration joins on src, so the cached layout satisfies the join's
+    // distribution and only the (narrow) rank side ever reshuffles. Same for the node table: the contrib
     // side arrives hash-partitioned on dst(=node) from its groupBy, so
     // a node-partitioned cache makes the rank rebuild exchange-free.
     val withDeg = e.join(deg, Seq("src"))
@@ -191,7 +190,7 @@ object PageRank {
       s"dampingPct must be in [0,100], got $dampingPct")
     val e = edges.select(col("src"), col("dst"), lit(1L).as("w"))
     val deg = e.groupBy("src").agg(sum(col("w")).as("sw"))
-    // pre-partitioned caches — the run() r14 note
+    // pre-partitioned caches, as in run()
     val withDeg = e.join(deg, Seq("src"))
       .repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -252,31 +251,22 @@ object PageRank {
     val baseTerm = (100L - dampingPct) * scale / 100L
     try Fixpoint.scratch(edges.sparkSession, "graft-pagerank-conv",
         Fixpoint.hybridCheckpointer) { checkpoint =>
-      var ranks = nodes.select(col("node"), lit(scale).as("rank_s"))
-      var maxDelta = Long.MaxValue
-      var i = 0
-      while (maxDelta > tolS && i < maxIters) {
-        i += 1
-        val contrib = withDeg
-          .join(ranks.select(col("node").as("src"), col("rank_s")), Seq("src"))
-          .select(col("dst"), expr("rank_s div deg").as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("s"))
-        val next = ranks
-          .join(contrib.select(col("dst").as("node"), col("s")), Seq("node"), "left")
-          .select(col("node"), col("rank_s").as("prev_s"),
-            (lit(baseTerm) +
-              expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("new_s"))
-        val (r, d) = Fixpoint.observedRound(checkpoint, "graft_pagerank_conv", i, next,
-          max(abs(col("new_s") - col("prev_s"))), col("node"), col("new_s").as("rank_s"))
-        ranks = r
-        maxDelta = d
+      Fixpoint.iterate("PageRank", maxIters,
+          (nodes.select(col("node"), lit(scale).as("rank_s")), tolS < Long.MaxValue)) {
+        (ranks, i) =>
+          val contrib = withDeg
+            .join(ranks.select(col("node").as("src"), col("rank_s")), Seq("src"))
+            .select(col("dst"), expr("rank_s div deg").as("c"))
+            .groupBy("dst").agg(sum(col("c")).as("s"))
+          val next = ranks
+            .join(contrib.select(col("dst").as("node"), col("s")), Seq("node"), "left")
+            .select(col("node"), col("rank_s").as("prev_s"),
+              (lit(baseTerm) +
+                expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("new_s"))
+          val (r, maxDelta) = Fixpoint.observedRound(checkpoint, "graft_pagerank_conv", i, next,
+            max(abs(col("new_s") - col("prev_s"))), col("node"), col("new_s").as("rank_s"))
+          (r, maxDelta > tolS)
       }
-      // a partially-converged rank table is indistinguishable from a
-      // converged one downstream — fail loudly; the caller raises maxIters
-      require(maxDelta <= tolS,
-        s"PageRank did not converge within $maxIters iterations " +
-          s"(max rank delta $maxDelta > tolS=$tolS); raise maxIters")
-      ranks
     } finally {
       withDeg.unpersist()
       nodes.unpersist()

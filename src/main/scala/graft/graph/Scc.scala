@@ -63,15 +63,15 @@ object Scc {
     * scc = minimum member id, the CC label contract. Self-loop EDGES
     * carry no connectivity and are dropped, but their endpoints are
     * kept: a node appearing only in self-loops is its own singleton
-    * SCC, not absent from the output (ADVICE r10 — the node set is
-    * derived from the RAW edge list, before the self-loop filter).
+    * SCC, not absent from the output (the node set is derived from the
+    * RAW edge list, before the self-loop filter).
     * Fails loudly if any propagation loop exceeds `maxRounds` rather
     * than returning a partial labelling.
     */
   def stronglyConnected(edges: DataFrame, maxRounds: Int = 60): DataFrame = {
     val raw = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-    var active = raw
+    val edgeSet = raw
       .where(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint(false)
@@ -79,20 +79,18 @@ object Scc {
     // leaves it is a counted cut), so the loop guards probe nothing;
     // labelled batches are deferred to one final union; and every
     // in-loop shrink is a lazy cut that the next counted cut materializes
-    var (remaining, remainingCount) = Fixpoint.countedCut("graft_scc_remaining", 0,
+    val (nodes, nodeCount) = Fixpoint.countedCut("graft_scc_remaining", 0,
       raw.select(col("src").as("node"))
         .unionAll(raw.select(col("dst").as("node")))
         .distinct())
     val batches = scala.collection.mutable.ListBuffer[DataFrame]()
     // typed empty seed so an edge-free input returns an empty (node, scc)
     // frame instead of null
-    val emptyLabels: DataFrame = remaining
+    val emptyLabels: DataFrame = nodes
       .select(col("node"), col("node").as("scc")).limit(0)
-    var outer = 0
-    while (remainingCount > 0) {
-      outer += 1
-      require(outer <= maxRounds,
-        s"stronglyConnected did not drain within $maxRounds peel rounds; raise maxRounds")
+    // the loops' state: (active edges, remaining nodes, remaining count)
+    Fixpoint.iterate("stronglyConnected", maxRounds,
+        ((edgeSet, nodes, nodeCount), nodeCount > 0)) { case (untrimmed, outer) =>
 
       // ---- trim TO FIXPOINT: a node with no in-edge or no out-edge
       // (or no edge at all) is on no cycle → singleton SCC, and its
@@ -103,50 +101,47 @@ object Scc {
       // coloring + membership sweep of the surviving graph each time
       // (measured 2× on the sf0.1 fixture). Pass count is bounded by
       // the remaining graph's trim depth — same loud cap.
-      var trimming = true
-      var trimPass = 0
-      while (trimming && remainingCount > 0) {
-        trimPass += 1
-        require(trimPass <= maxRounds,
-          s"stronglyConnected trim still eroding after $maxRounds passes; raise maxRounds")
-        // STRIDE-2 erosion: the trim step is a deterministic downward
-        // closure (drop nodes lacking an in- or out-edge in the induced
-        // subgraph), so applying it TWICE inside one scheduled pass
-        // reaches the same fixpoint in half the driver rounds; the union
-        // of trimmed batches — all labelled (node, node) — is identical
-        // however the erosion is batched. The survivor set is ONE
-        // role-count aggregate (node keeps both an out- and an in-edge),
-        // one exchange per erosion.
-        def erode(act: DataFrame): DataFrame = act
-          .select(col("src").as("node"), lit(1L).as("o"), lit(0L).as("i"))
-          .unionAll(act.select(col("dst").as("node"), lit(0L).as("o"), lit(1L).as("i")))
-          .groupBy("node").agg(sum(col("o")).as("o"), sum(col("i")).as("i"))
-          .where(col("o") > 0 && col("i") > 0)
-          .select("node")
-        val core1 = erode(active)
-        val act1 = active
-          .join(core1.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(core1.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        val core = erode(act1).localCheckpoint(false)
-        // the trimmed batch's counted cut materializes core too (core
-        // rides inside its plan); the labelled batch joins the deferred
-        // union, the remaining size updates by arithmetic, and the
-        // active-set shrink is lazy until the next pass reads it
-        val (trimmed, nTrimmed) = Fixpoint.countedCut("graft_scc_trim", trimPass,
-          remaining.join(core, Seq("node"), "left_anti")
-            .select(col("node"), col("node").as("scc")))
-        if (nTrimmed == 0) trimming = false
-        else {
-          batches += trimmed
-          remaining = core
-          remainingCount -= nTrimmed
-          active = active
-            .join(core.select(col("node").as("src")), Seq("src"), "left_semi")
-            .join(core.select(col("node").as("dst")), Seq("dst"), "left_semi")
-            .localCheckpoint(false)
-        }
+      val (trimmedActive, remaining, remainingCount) = Fixpoint.iterate(
+          "stronglyConnected trim", maxRounds, (untrimmed, true)) {
+        case ((active, remaining, remainingCount), trimPass) =>
+          // STRIDE-2 erosion: the trim step is a deterministic downward
+          // closure (drop nodes lacking an in- or out-edge in the induced
+          // subgraph), so applying it TWICE inside one scheduled pass
+          // reaches the same fixpoint in half the driver rounds; the union
+          // of trimmed batches — all labelled (node, node) — is identical
+          // however the erosion is batched. The survivor set is ONE
+          // role-count aggregate (node keeps both an out- and an in-edge),
+          // one exchange per erosion.
+          def erode(act: DataFrame): DataFrame = act
+            .select(col("src").as("node"), lit(1L).as("o"), lit(0L).as("i"))
+            .unionAll(act.select(col("dst").as("node"), lit(0L).as("o"), lit(1L).as("i")))
+            .groupBy("node").agg(sum(col("o")).as("o"), sum(col("i")).as("i"))
+            .where(col("o") > 0 && col("i") > 0)
+            .select("node")
+          val core1 = erode(active)
+          val act1 = active
+            .join(core1.select(col("node").as("src")), Seq("src"), "left_semi")
+            .join(core1.select(col("node").as("dst")), Seq("dst"), "left_semi")
+          val core = erode(act1).localCheckpoint(false)
+          // the trimmed batch's counted cut materializes core too (core
+          // rides inside its plan); the labelled batch joins the deferred
+          // union, the remaining size updates by arithmetic, and the
+          // active-set shrink is lazy until the next pass reads it
+          val (trimmed, nTrimmed) = Fixpoint.countedCut("graft_scc_trim", trimPass,
+            remaining.join(core, Seq("node"), "left_anti")
+              .select(col("node"), col("node").as("scc")))
+          if (nTrimmed == 0) ((active, remaining, remainingCount), false)
+          else {
+            batches += trimmed
+            val shrunk = active
+              .join(core.select(col("node").as("src")), Seq("src"), "left_semi")
+              .join(core.select(col("node").as("dst")), Seq("dst"), "left_semi")
+              .localCheckpoint(false)
+            ((shrunk, core, remainingCount - nTrimmed), remainingCount > nTrimmed)
+          }
       }
-      if (remainingCount > 0) {
+      if (remainingCount == 0) ((trimmedActive, remaining, 0L), false)
+      else {
         // the fully-trimmed edge set, cached once per outer round per
         // join layout (coloring joins on src here; the backward sweep
         // caches the same-color subset on dst after the coloring) so
@@ -159,8 +154,7 @@ object Scc {
         // rounds at full 32-task scheduling latency for kilobytes of
         // work — the dominant cost of this loop measured locally. At
         // cluster scale the cap restores full parallelism.
-        val (cut, activeRows) = Fixpoint.countedCut("graft_scc_active", outer, active)
-        active = cut
+        val (active, activeRows) = Fixpoint.countedCut("graft_scc_active", outer, trimmedActive)
         val parts = math.max(1, math.min(
           active.sparkSession.sessionState.conf.numShufflePartitions,
           (activeRows / 20000L).toInt))
@@ -248,18 +242,18 @@ object Scc {
           val (peeled, nPeeled) = Fixpoint.countedCut("graft_scc_peel", outer,
             members.join(mins, Seq("color")).select(col("node"), col("scc")))
           batches += peeled
-          remainingCount -= nPeeled
-          remaining = remaining
+          val left = remaining
             .join(peeled.select("node"), Seq("node"), "left_anti")
             .localCheckpoint(false)
           // next round's graph: the SAME-COLOR edges minus the peeled
           // class members — cross-color edges are on no cycle (gate
           // note above), so dropping them preserves every remaining SCC
           // and feeds the acyclic residue to the trim fixpoint
-          active = sameColor
+          val nextActive = sameColor
             .join(peeled.select(col("node").as("src")), Seq("src"), "left_anti")
             .join(peeled.select(col("node").as("dst")), Seq("dst"), "left_anti")
             .localCheckpoint(false)
+          ((nextActive, left, remainingCount - nPeeled), remainingCount > nPeeled)
         } finally {
           bySrc.unpersist()
           if (byDst != null) byDst.unpersist()
@@ -385,32 +379,25 @@ object Scc {
       //    identical to a per-round running sum.
       //  - the second hop's counted cut materializes the first hop's
       //    lazy cut in the same job (hop1 rides inside hop2's plan).
-      // The waves run concurrently, so each names its own observations.
+      // Round r delivers path lengths 2r - 1 and 2r, so `maxRounds` hops
+      // allow (maxRounds + 1) / 2 rounds. The waves run concurrently, so
+      // each names its own observations.
       def wave(seed: DataFrame, adj: DataFrame, from: String, to: String,
           what: String): DataFrame = {
-        val perLength = scala.collection.mutable.ListBuffer[DataFrame](seed)
-        var frontier = seed
-        var waveRows = 1L
-        var r = 0
         def hop(f: DataFrame): DataFrame = f
           .join(adj, col("node") === col(from))
           .groupBy(col(to).as("nnode"))
           .agg(sum(col("cnt")).as("ncnt"))
           .select(col("nnode").as("node"), col("ncnt").as("cnt"))
-        while (waveRows > 0) {
-          r += 1
-          require(2 * r <= maxRounds + 1,
-            s"dagPathCentrality $what wave still flowing after $maxRounds " +
-              "hops — cyclic input or raise maxRounds")
+        // state: (frontier, per-length frontiers so far)
+        val (_, perLength) = Fixpoint.iterate(s"dagPathCentrality $what wave (cyclic input?)",
+            (maxRounds + 1) / 2, ((seed, Vector(seed)), true)) { case ((frontier, perLength), r) =>
           val h1 = hop(frontier).localCheckpoint(false)
           // h2 empty with h1 non-empty just means length L+1 only
           // reached sinks — h1 is already retained; the loop may stop
           // either way.
           val (h2, n) = Fixpoint.countedCut(s"graft_dag_paths_$what", r, hop(h1))
-          waveRows = n
-          perLength += h1
-          if (waveRows > 0) perLength += h2
-          frontier = h2
+          ((h2, if (n > 0) perLength :+ h1 :+ h2 else perLength :+ h1), n > 0)
         }
         perLength.reduce(_ unionAll _)
           .groupBy("node").agg(sum(col("cnt")).as("cnt"))
@@ -450,7 +437,7 @@ object Scc {
           col("f0").cast("long").as("f_paths"),
           col("g0").cast("long").as("g_paths"),
           (col("f0") * col("g0")).cast("long").as("through_paths"))
-      // loud coverage check (ADVICE r10): a cycle component DISCONNECTED
+      // loud coverage check: a cycle component DISCONNECTED
       // from every source and sink enters neither wave — the maxRounds
       // trip only sees source-reachable cycles — and the inner join
       // would silently drop its nodes. Full coverage or fail.
@@ -520,7 +507,7 @@ object Scc {
         .groupBy(col("dst").as("node"))
         .agg(max(col("depth") + 1L).as("depth"))
       // stride 2: two hops per round (see Fixpoint.relax)
-      Fixpoint.relax("dagLongestPath", nodes, maxRounds, _ > _) { (frontier, _) =>
+      Fixpoint.relax("dagLongestPath (cyclic input?)", nodes, maxRounds, _ > _) { (frontier, _) =>
         val hop1 = hop(frontier)
         hop1.unionAll(hop(hop1)).groupBy("node").agg(max(col("depth")).as("depth"))
       }

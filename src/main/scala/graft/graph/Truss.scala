@@ -56,8 +56,8 @@ object Truss {
       .where(col("x") =!= col("y"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // try/finally: the loud maxRounds require below must not leak the
-    // persisted canonical edge list (ADVICE r9)
+    // try/finally: the loud round cap must not leak the persisted
+    // canonical edge list
     try {
       // degree-orient ONCE, before the loop: u→v iff (deg u, u) <
       // (deg v, v) on the INITIAL degrees. Truss membership is
@@ -71,45 +71,41 @@ object Truss {
       val deg = canon.select(col("x").as("node"))
         .unionAll(canon.select(col("y").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-      // survivor count carried across rounds: a round's counted cut is
-      // the next round's alive count
-      var (alive, aliveCount) = Fixpoint.countedCut("graft_ktruss", 0, canon
+      val orientedCanon = canon
         .join(deg.select(col("node").as("x"), col("deg").as("dx")), Seq("x"))
         .join(deg.select(col("node").as("y"), col("deg").as("dy")), Seq("y"))
         .select(col("x"), col("y"),
           when(col("dx") <= col("dy"), col("x")).otherwise(col("y")).as("src"),
-          when(col("dx") <= col("dy"), col("y")).otherwise(col("x")).as("dst")))
-      var converged = false
-      var r = 0
-      while (!converged && r < maxRounds) {
-        r += 1
-        // wedges from a shared oriented source (b < c fixes the pair
-        // order), closed iff the canonical edge (b, c) is itself alive;
-        // each triangle is found exactly once — at its unique
-        // out-degree-2 corner — and credits all three canonical edges
-        val oriented = alive.select("src", "dst")
-        val wedges = oriented.as("e1").join(oriented.as("e2"),
-            col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
-          .select(col("e1.src").as("a"),
-            col("e1.dst").as("b"), col("e2.dst").as("c"))
-        val tris = wedges.join(alive.select(col("x").as("b"), col("y").as("c")),
-          Seq("b", "c"), "left_semi")
-        val support = tris.select(least(col("a"), col("b")).as("x"),
-            greatest(col("a"), col("b")).as("y"))
-          .unionAll(tris.select(least(col("a"), col("c")).as("x"),
-            greatest(col("a"), col("c")).as("y")))
-          .unionAll(tris.select(col("b").as("x"), col("c").as("y")))
-          .groupBy("x", "y").agg(count(lit(1)).as("sup"))
-        val (next, nextCount) = Fixpoint.countedCut("graft_ktruss", r,
-          alive.join(support, Seq("x", "y"), "left")
-            .where(coalesce(col("sup"), lit(0L)) >= (k - 2).toLong)
-            .select(col("x"), col("y"), col("src"), col("dst")))
-        converged = nextCount == aliveCount
-        alive = next
-        aliveCount = nextCount
+          when(col("dx") <= col("dy"), col("y")).otherwise(col("x")).as("dst"))
+      // survivor count carried across rounds: a round's counted cut is
+      // the next round's alive count, and a round that removes no edge
+      // ends the peel
+      val (alive, _) = Fixpoint.iterate("k-truss peel", maxRounds,
+          (Fixpoint.countedCut("graft_ktruss", 0, orientedCanon), true)) {
+        case ((alive, aliveCount), r) =>
+          // wedges from a shared oriented source (b < c fixes the pair
+          // order), closed iff the canonical edge (b, c) is itself alive;
+          // each triangle is found exactly once — at its unique
+          // out-degree-2 corner — and credits all three canonical edges
+          val oriented = alive.select("src", "dst")
+          val wedges = oriented.as("e1").join(oriented.as("e2"),
+              col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
+            .select(col("e1.src").as("a"),
+              col("e1.dst").as("b"), col("e2.dst").as("c"))
+          val tris = wedges.join(alive.select(col("x").as("b"), col("y").as("c")),
+            Seq("b", "c"), "left_semi")
+          val support = tris.select(least(col("a"), col("b")).as("x"),
+              greatest(col("a"), col("b")).as("y"))
+            .unionAll(tris.select(least(col("a"), col("c")).as("x"),
+              greatest(col("a"), col("c")).as("y")))
+            .unionAll(tris.select(col("b").as("x"), col("c").as("y")))
+            .groupBy("x", "y").agg(count(lit(1)).as("sup"))
+          val (next, nextCount) = Fixpoint.countedCut("graft_ktruss", r,
+            alive.join(support, Seq("x", "y"), "left")
+              .where(coalesce(col("sup"), lit(0L)) >= (k - 2).toLong)
+              .select(col("x"), col("y"), col("src"), col("dst")))
+          ((next, nextCount), nextCount != aliveCount)
       }
-      require(converged,
-        s"k-truss peel still cascading after $maxRounds rounds; raise maxRounds")
       canon
         .join(alive.withColumn("in_truss", lit(true)), Seq("x", "y"), "left")
         .select(col("x").as("src"), col("y").as("dst"),

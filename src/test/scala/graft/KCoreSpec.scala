@@ -43,7 +43,7 @@ class KCoreSpec extends SparkTestBase {
     val e = intercept[IllegalArgumentException] {
       KCore.peelConverged(fixture, k = 2, maxRounds = 1)
     }
-    assert(e.getMessage.contains("did not stabilize"))
+    assert(e.getMessage.contains("k-core peel did not converge"))
     assert(scratchDirs("graft-kcore") === dirs)
     assert((cachedRdds -- cached).isEmpty)
   }

@@ -453,17 +453,20 @@ class PlanAuditSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
     }
   }
 
-  /** (file name, line, code) for every line of graft/graph's sources;
-    * code is the line with its line comment stripped.
+  /** (file name, line, code) for every line of the sources of the given
+    * `graft` packages; code is the line with its comment stripped (empty
+    * on a Scaladoc or block-comment line).
     */
-  private def graphSourceLines: Seq[(String, String, String)] = {
-    val graphDir = new java.io.File("src/main/scala/graft/graph")
-    assert(graphDir.isDirectory, s"missing ${graphDir.getPath}")
-    for {
-      f <- graphDir.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
-      line <- java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq
-    } yield (f.getName, line, line.takeWhile(_ != '/'))
-  }
+  private def sourceLines(packages: String*): Seq[(String, String, String)] =
+    packages.flatMap { pkg =>
+      val dir = new java.io.File(s"src/main/scala/graft/$pkg")
+      assert(dir.isDirectory, s"missing ${dir.getPath}")
+      for {
+        f <- dir.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
+        line <- java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq
+        comment = line.trim.startsWith("*") || line.trim.startsWith("/*")
+      } yield (f.getName, line, if (comment) "" else line.takeWhile(_ != '/'))
+    }
 
   test("graph family: every broadcast() call site is audited bounded (lint)") {
     // the r9 hazard class: Bfs.earliestArrival broadcast an iteration
@@ -485,7 +488,7 @@ class PlanAuditSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
       "Hits.scala" -> Set("broadcast(mx)"),
       // 1-row total edge count m
       "Modularity.scala" -> Set("broadcast(m)"))
-    for ((file, line, code) <- graphSourceLines if code.contains("broadcast(")) {
+    for ((file, line, code) <- sourceLines("graph") if code.contains("broadcast(")) {
       val ok = allowed.getOrElse(file, Set.empty).exists(code.contains)
       assert(ok, s"$file: unaudited broadcast() call site " +
         s"'${line.trim}' — prove the broadcast side is bounded " +
@@ -503,9 +506,17 @@ class PlanAuditSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
     // Fixpoint.countedCut, whose checkpoint job also counts the rows
     // (count()'s single-partition final stage is a job of its own under
     // adaptive execution); the graph loops cut and count through it
-    for ((file, line, code) <- graphSourceLines)
+    for ((file, line, code) <- sourceLines("graph"))
       assert(!code.contains(".count()"), s"$file: '${line.trim}' counts on its own; " +
         "cut and count the frame with Fixpoint.countedCut or Fixpoint.observedRound")
+  }
+
+  test("iterative families: no hand-written while loop, rounds run on Fixpoint.iterate (lint)") {
+    // the round counter, the cap check and the cap message live once, in
+    // the driver; a hand-written loop brings back its own copies
+    for ((file, line, code) <- sourceLines("graph", "cluster", "dedup"))
+      assert(!code.contains("while ("), s"$file: '${line.trim}' loops by hand; " +
+        "run the rounds on Fixpoint.iterate")
   }
 
   test("prefix-filter join: equi-joins only, windows partition per-doc") {
