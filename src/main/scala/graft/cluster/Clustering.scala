@@ -24,13 +24,14 @@ import graft.core.{Fixpoint, Schemas}
   *    Spark's rand — even seeded — derives its stream from the partition
   *    index, so AQE re-coalescing, task retry, or any row-placement
   *    change redraws every node's tie-break and the "same seed" run
-  *    clusters differently (observed as round-to-round artifact drift
-  *    before round 9). A per-node hash is partition-layout-independent:
-  *    same seed → same clustering, on any cluster, after any retry.
-  *    Pass a different seed per run for production parity.
-  *  - lineage truncation is a [[graft.core.Fixpoint.Checkpointer]]: the
-  *    durable parquet round-trip by default (the reference's alternating
-  *    Hive checkpoint tables).
+  *    clusters differently (observed as run-to-run artifact drift). A
+  *    per-node hash is partition-layout-independent: same seed → same
+  *    clustering, on any cluster, after any retry. Pass a different
+  *    seed per run for production parity.
+  *  - lineage truncation is a [[graft.core.Fixpoint.Checkpointer]]: a
+  *    local checkpoint by default, or, for a caller that owns a
+  *    directory to resume from, the durable parquet round-trip (the
+  *    reference's alternating Hive checkpoint tables).
   *  - vote deltas are built with explode + sum instead of a nested
   *    map_concat fold — same result, but the aggregation stays in
   *    whole-stage codegen instead of a per-row O(k²) map rebuild.
@@ -193,37 +194,29 @@ object Clustering {
       updateProbability: Double = 0.9,
       checkpointer: Option[Fixpoint.Checkpointer] = None,
       resumeFrom: Option[(DataFrame, Int)] = None): DataFrame = {
-    def run(checkpoint: Fixpoint.Checkpointer): DataFrame = {
-      def round(df: DataFrame, i: Int): (DataFrame, Long) =
-        Fixpoint.observedRound(checkpoint, "graft_cw_active", i, df,
-          sum(when(col("active"), 1L).otherwise(0L)))
-      val (start, active, k) = resumeFrom match {
-        case Some((st, k)) =>
-          // a checkpoint written before the state carried its adjacency
-          // would resume with no messages to send: refuse it by name
-          for (f <- Schemas.clusterState.fieldNames)
-            require(st.columns.contains(f),
-              s"resume state lacks column `$f` (has ${st.columns.mkString(", ")})")
-          // one count over the already-durable checkpoint, once per resume
-          (st, st.filter(col("active")).count(), k)
-        case None =>
-          val (st, act) = round(initialState(adjacency), 0)
-          (st, act, 0)
-      }
-      // bounded: iteration maxIter stops the loop, it does not throw
-      Fixpoint.iterate("Chinese Whispers", maxIter - k, (start, active > 0 && k < maxIter)) {
-        (state, r) =>
-          val iter = k + r
-          val (st, act) = round(step(state, seed, iter - 1, updateProbability), iter)
-          (st, act > 0 && iter < maxIter)
-      }.select("piece_id", "cluster_id")
+    val checkpoint = checkpointer.getOrElse(Fixpoint.localCheckpointer)
+    def round(df: DataFrame, i: Int): (DataFrame, Long) =
+      Fixpoint.observedRound(checkpoint, "graft_cw_active", i, df,
+        sum(when(col("active"), 1L).otherwise(0L)))
+    val (start, active, k) = resumeFrom match {
+      case Some((st, k)) =>
+        // a checkpoint written before the state carried its adjacency
+        // would resume with no messages to send: refuse it by name
+        for (f <- Schemas.clusterState.fieldNames)
+          require(st.columns.contains(f),
+            s"resume state lacks column `$f` (has ${st.columns.mkString(", ")})")
+        // one count over the already-durable checkpoint, once per resume
+        (st, st.filter(col("active")).count(), k)
+      case None =>
+        val (st, act) = round(initialState(adjacency), 0)
+        (st, act, 0)
     }
-    // a caller-supplied checkpointer owns its directory, the only one
-    // latestCheckpoint can find; otherwise this call owns a scratch one
-    checkpointer match {
-      case Some(c) => run(c)
-      case None => Fixpoint.scratch(adjacency.sparkSession, "graft-cluster-ckpt",
-        Fixpoint.parquetCheckpointer)(run)
-    }
+    // bounded: iteration maxIter stops the loop, it does not throw
+    Fixpoint.iterate("Chinese Whispers", maxIter - k, (start, active > 0 && k < maxIter)) {
+      (state, r) =>
+        val iter = k + r
+        val (st, act) = round(step(state, seed, iter - 1, updateProbability), iter)
+        (st, act > 0 && iter < maxIter)
+    }.select("piece_id", "cluster_id")
   }
 }

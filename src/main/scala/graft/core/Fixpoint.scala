@@ -7,6 +7,7 @@ import scala.annotation.tailrec
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.graftshim.Shim
 
 /** What the engine's iterative DataFrame loops share. Every round loop
   * in `graph`, `cluster` and `dedup` runs on [[iterate]], which owns the
@@ -14,10 +15,9 @@ import org.apache.spark.sql.functions.{col, count, lit}
   * its step, its stop value and its caches. The converged loops
   * (`Clustering.propagate`, `KCore.peelConverged`,
   * `PageRank.runConverged`, `Dedup.dedupGroupsConverged`) also take from
-  * it how a round cuts its lineage, how it reads its convergence value,
-  * and who owns the directory its checkpoints go to. The
-  * label-correcting loops run whole in [[relax]] and keep only their
-  * step.
+  * it how a round cuts its lineage and how it reads its convergence
+  * value. The label-correcting loops run whole in [[relax]] and keep
+  * only their step.
   *
   * Invariants:
   *  - a [[Checkpointer]] runs an action on the frame it is given, and
@@ -26,24 +26,24 @@ import org.apache.spark.sql.functions.{col, count, lit}
   *    that also needs its row count is a [[countedCut]], never a lazy
   *    checkpoint and a `count()`, whose single-partition final stage is
   *    one more job. Its callers: [[relax]]'s rounds and seeds, the truss
-  *    peel (`Truss.edges`), `Bfs.hopWave`'s waves, and in `Scc` the
-  *    remaining, trim, active and peel sets of `stronglyConnected` and
-  *    the seed sets and waves of `dagPathCentrality`; `KCore.peelConverged`
-  *    counts its node set as round 0 of its own checkpointer;
-  *  - `localCheckpoint` carries the origin plan's statistics forward, so
-  *    size estimates compound multiplicatively with the round count
-  *    until Catalyst's BigInt stats overflow ("BigInteger would overflow
-  *    supported range"); the parquet round-trip resets them to real file
-  *    sizes. A bounded prefix of local rounds is safe
-  *    ([[hybridCheckpointer]]), an unbounded run of them is not;
-  *  - the durable layout is the reference's alternating two-table scheme
-  *    (chinese_label_propagation.py:189-197): round i writes
-  *    `clusters_counts_{i % 2}` and then commits `LATEST_ITER` = i by
-  *    rename, so a crash leaves the previous marker or the new one, and
-  *    the marked table is never the one a crashed write half-overwrote;
-  *  - a [[scratch]] directory belongs to one call: the result is
-  *    materialized off its files before it is deleted, and it is deleted
-  *    on every exit, a throw or a loud cap included;
+  *    peel (`Truss.edges`), `Bfs.hopWave`'s waves, `KCore.peelConverged`'s
+  *    node sets, and in `Scc` the remaining, trim, active and peel sets
+  *    of `stronglyConnected` and the seed sets and waves of
+  *    `dagPathCentrality`;
+  *  - a round's cut carries its observed row count: [[observedRound]]
+  *    counts the rows in the same job and sets the local checkpoint's
+  *    statistics to that count times the row width. `localCheckpoint`
+  *    alone keeps the origin plan's estimate, which for a join is the
+  *    product of its sides, so unstamped rounds would compound it into
+  *    sort-merge joins and, unbounded, past Catalyst's BigInt range;
+  *  - a loop cuts with [[localCheckpointer]] unless its caller owns a
+  *    directory it can resume from, and passes [[parquetCheckpointer]]
+  *    over it. The durable layout is the reference's alternating
+  *    two-table scheme (chinese_label_propagation.py:189-197): round i
+  *    writes `clusters_counts_{i % 2}` and then commits `LATEST_ITER` = i
+  *    by rename, so a crash leaves the previous marker or the new one,
+  *    and the marked table is never the one a crashed write
+  *    half-overwrote;
   *  - the checkpoint scheme never changes a loop's result: the loops are
   *    deterministic in their inputs (Chinese Whispers' draws are hashes
   *    of (piece_id, seed + iteration)), so only cost and crash tolerance
@@ -54,12 +54,7 @@ object Fixpoint {
   /** Cuts the lineage of round `i`'s frame; returns the frame to read on. */
   type Checkpointer = (DataFrame, Int) => DataFrame
 
-  /** Rounds a [[hybridCheckpointer]] cuts locally before it turns durable. */
-  val LocalRounds = 8
-
-  /** `localCheckpoint` every round: no files, no crash tolerance, and only
-    * for a bounded round count (see the statistics invariant above).
-    */
+  /** `localCheckpoint` every round: no files and no crash tolerance. */
   val localCheckpointer: Checkpointer = (df, _) => df.localCheckpoint()
 
   /** The durable alternating checkpoint. The table is read back with the
@@ -80,16 +75,6 @@ object Fixpoint {
     fs.delete(marker, false)
     require(fs.rename(tmp, marker), s"could not commit checkpoint marker $marker")
     spark.read.schema(df.schema).parquet(path)
-  }
-
-  /** Local truncation through round [[LocalRounds]], durable parquet
-    * after: loops that usually converge within the prefix skip the
-    * per-round parquet write and read, and the durable scheme starts
-    * where an unbounded tail would compound local statistics.
-    */
-  def hybridCheckpointer(dir: String): Checkpointer = {
-    val durable = parquetCheckpointer(dir)
-    (df, i) => if (i <= LocalRounds) df.localCheckpoint() else durable(df, i)
   }
 
   /** The last round a [[parquetCheckpointer]] committed in `dir`: (its
@@ -114,16 +99,19 @@ object Fixpoint {
 
   /** Round `i` of a loop: observes the aggregate `value` on `df` as the
     * Observation `<name>_<i>`, keeps the columns `keep` (all of them when
-    * empty), checkpoints, and returns (checkpointed frame, value). An
-    * aggregate over zero rows is null and reads as 0: an empty frame has
-    * nothing left to change.
+    * empty), checkpoints, and returns (checkpointed frame, value). The
+    * same job counts the rows, and a local checkpoint is stamped with
+    * that count. An aggregate over zero rows is null and reads as 0: an
+    * empty frame has nothing left to change.
     */
   def observedRound(checkpoint: Checkpointer, name: String, i: Int,
       df: DataFrame, value: Column, keep: Column*): (DataFrame, Long) = {
     val obs = Observation(s"${name}_$i")
-    val observed = df.observe(obs, value.as("value"))
+    val observed = df.observe(obs, value.as("value"), count(lit(1)).as("rows"))
     val out = checkpoint(if (keep.isEmpty) observed else observed.select(keep: _*), i)
-    (out, Option(obs.get("value")).fold(0L)(_.asInstanceOf[Long]))
+    val metrics = obs.get
+    (Shim.withRowCount(out, metrics("rows").asInstanceOf[Long]),
+      Option(metrics("value")).fold(0L)(_.asInstanceOf[Long]))
   }
 
   /** Cuts `df` with [[localCheckpointer]] as round `i` of `name`, counting
@@ -216,18 +204,5 @@ object Fixpoint {
         }
         ((merged, next, n), n > 0)
     }._1
-  }
-
-  /** Runs `body` with a checkpointer over a fresh per-call directory
-    * under `java.io.tmpdir`, materializes its result off the checkpoint
-    * files with `localCheckpoint`, and deletes the directory, also when
-    * `body` throws. Callers release their own caches in a `finally`
-    * around this call.
-    */
-  def scratch(spark: SparkSession, prefix: String, checkpointer: String => Checkpointer)(
-      body: Checkpointer => DataFrame): DataFrame = {
-    val dir = new Path(java.nio.file.Files.createTempDirectory(prefix).toString)
-    try body(checkpointer(dir.toString)).localCheckpoint()
-    finally dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
   }
 }

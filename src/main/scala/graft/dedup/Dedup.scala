@@ -556,8 +556,8 @@ object Dedup {
     * merge — the fixed-k variant stays the oracle-checkable face (its
     * k-round result is re-derivable as unrolled CTEs), this one is the
     * convergence face. The changed-label count is an observed round
-    * with hybrid checkpointing ([[graft.core.Fixpoint]]). Throws when
-    * `maxRounds` rounds still change labels.
+    * ([[graft.core.Fixpoint]]). Throws when `maxRounds` rounds still
+    * change labels.
     *
     * Scale shape per round is identical to [[dedupGroups]]: one
     * edges-join + partial-aggregated groupBy(doc_id).min shuffling
@@ -566,11 +566,11 @@ object Dedup {
   def dedupGroupsConverged(docs: DataFrame, pairs: DataFrame,
       maxRounds: Int = 100): DataFrame = {
     val edges = symmetricEdges(pairs)
-    try Fixpoint.scratch(docs.sparkSession, "graft-dedup-conv",
-        Fixpoint.hybridCheckpointer) { checkpoint =>
+    try {
       Fixpoint.iterate("dedupGroupsConverged", maxRounds,
           (docs.select(col("doc_id"), col("doc_id").as("group_id")), true)) { (labels, r) =>
-        val (l, changed) = Fixpoint.observedRound(checkpoint, "graft_dedup_conv", r,
+        val (l, changed) = Fixpoint.observedRound(Fixpoint.localCheckpointer,
+          "graft_dedup_conv", r,
           minLabelRound(edges, labels),
           sum(when(col("new_group") =!= col("group_id"), 1L).otherwise(0L)),
           col("doc_id"), col("new_group").as("group_id"))

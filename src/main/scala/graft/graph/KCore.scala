@@ -55,11 +55,10 @@ object KCore {
       .select(col("node"), coalesce(col("in_core"), lit(false)).as("in_core"))
   }
 
-  /** Converged peel: rounds run until one removes zero nodes, counted
-    * by an observed round ([[graft.core.Fixpoint]], hybrid
-    * checkpointing: real graphs peel to their core in a handful of
-    * rounds, a long tendril peels one node per round). Throws when
-    * `maxRounds` rounds still remove nodes.
+  /** Converged peel: rounds run until one removes zero nodes, each a
+    * counted cut ([[graft.core.Fixpoint.countedCut]]: real graphs peel to
+    * their core in a handful of rounds, a long tendril peels one node per
+    * round). Throws when `maxRounds` rounds still remove nodes.
     */
   def peelConverged(edges: DataFrame, k: Int, maxRounds: Int = 1000): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -67,13 +66,12 @@ object KCore {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = e.select(col("src").as("node")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try Fixpoint.scratch(edges.sparkSession, "graft-kcore",
-        Fixpoint.hybridCheckpointer) { checkpoint =>
+    try {
       // round 0 cuts and counts the node set; each round's count is the
       // next round's survivor baseline, and a round that removes no node
       // ends the peel
       val (alive, _) = Fixpoint.iterate("k-core peel", maxRounds,
-          (Fixpoint.observedRound(checkpoint, "graft_kcore", 0, nodes, count(lit(1))), true)) {
+          (Fixpoint.countedCut("graft_kcore", 0, nodes), true)) {
         case ((alive, lastAlive), r) =>
           val induced = e
             .join(alive.select(col("node").as("src")), Seq("src"))
@@ -82,12 +80,13 @@ object KCore {
             .agg(count(lit(1)).as("deg"))
             .where(col("deg") >= k)
             .select(col("node"))
-          val (a, nAlive) =
-            Fixpoint.observedRound(checkpoint, "graft_kcore", r, next, count(lit(1)))
+          val (a, nAlive) = Fixpoint.countedCut("graft_kcore", r, next)
           ((a, nAlive), nAlive < lastAlive)
       }
+      // materialized before the caches it reads are released
       nodes.join(alive.withColumn("in_core", lit(true)), Seq("node"), "left")
         .select(col("node"), coalesce(col("in_core"), lit(false)).as("in_core"))
+        .localCheckpoint()
     } finally {
       e.unpersist()
       nodes.unpersist()

@@ -228,13 +228,12 @@ object PageRank {
     * fixed-iteration variant stays the oracle-checkable face (its
     * result is re-derivable as unrolled CTEs); this is the production
     * face — damping makes the iteration a contraction, so
-    * ~log(scale/tolS)/log(100/dampingPct) rounds converge, usually
-    * within the local prefix of the hybrid checkpointing
-    * ([[graft.core.Fixpoint]]). Throws when `maxIters` rounds do not
-    * converge.
+    * ~log(scale/tolS)/log(100/dampingPct) rounds converge, each an
+    * observed round ([[graft.core.Fixpoint]]). Throws when `maxRounds`
+    * rounds do not converge.
     */
   def runConverged(edges: DataFrame, tolS: Long = 1000L, dampingPct: Int = 85,
-      scale: Long = 1000000L, maxIters: Int = 100): DataFrame = {
+      scale: Long = 1000000L, maxRounds: Int = 100): DataFrame = {
     require(tolS >= 0, s"tolS must be >= 0, got $tolS")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
@@ -249,9 +248,8 @@ object PageRank {
       .repartition(col("node"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val baseTerm = (100L - dampingPct) * scale / 100L
-    try Fixpoint.scratch(edges.sparkSession, "graft-pagerank-conv",
-        Fixpoint.hybridCheckpointer) { checkpoint =>
-      Fixpoint.iterate("PageRank", maxIters,
+    try {
+      Fixpoint.iterate("PageRank", maxRounds,
           (nodes.select(col("node"), lit(scale).as("rank_s")), tolS < Long.MaxValue)) {
         (ranks, i) =>
           val contrib = withDeg
@@ -263,7 +261,8 @@ object PageRank {
             .select(col("node"), col("rank_s").as("prev_s"),
               (lit(baseTerm) +
                 expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("new_s"))
-          val (r, maxDelta) = Fixpoint.observedRound(checkpoint, "graft_pagerank_conv", i, next,
+          val (r, maxDelta) = Fixpoint.observedRound(Fixpoint.localCheckpointer,
+            "graft_pagerank_conv", i, next,
             max(abs(col("new_s") - col("prev_s"))), col("node"), col("new_s").as("rank_s"))
           (r, maxDelta > tolS)
       }

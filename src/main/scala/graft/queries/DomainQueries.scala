@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.analytics.Reception
 import graft.cluster.Clustering
-import graft.core.Fixpoint
 import graft.defrag.Defrag
 import graft.ids.Ids
 import graft.textreuse.TextReuse
@@ -495,12 +494,7 @@ object DomainQueries {
           col("a.trs_id") === col("b.trs_id") && col("a.piece_id") < col("b.piece_id") &&
             col("b.piece_id") <= col("a.piece_id") + 600)
         .select(col("a.piece_id").as("piece1_id"), col("b.piece_id").as("piece2_id"))
-      // the face runs a BOUNDED 3 iterations, so local checkpoints are
-      // safe (see Fixpoint) and skip a parquet write+read of
-      // the map-heavy vote state per round, the face's dominant cost;
-      // unbounded runs (TextReuseAssets) keep the durable default
-      Clustering.propagate(Clustering.adjacencyList(edges), seed = 42L, maxIter = 3,
-        checkpointer = Some(Fixpoint.localCheckpointer))
+      Clustering.propagate(Clustering.adjacencyList(edges), seed = 42L, maxIter = 3)
     }),
 
     // W4+P5 earliest-manifestation-per-cluster

@@ -2,10 +2,11 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.execution.{LogicalRDD, SparkStrategy}
 
 /** Minimal bridge to the classic Column ↔ Expression converters, which
   * are private[sql] in Spark 4 — the standard extension-library shim
@@ -22,6 +23,20 @@ object Shim {
     */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `df` with its checkpoint's statistics set to `rows` rows of the
+    * output's row width, in place of the origin plan's estimate that
+    * `localCheckpoint` keeps. No-op on a plan that is not a `LogicalRDD`,
+    * such as a parquet read-back, which estimates from its files.
+    */
+  def withRowCount(df: DataFrame, rows: Long): DataFrame =
+    df.asInstanceOf[classic.Dataset[_]].logicalPlan match {
+      case l: LogicalRDD =>
+        val stats = Statistics(EstimationUtils.getOutputSize(l.output, rows), Some(rows))
+        ofRows(df.sparkSession, l.copy()(df.sparkSession.asInstanceOf[classic.SparkSession],
+          Some(stats), Some(l.constraints)))
+      case _ => df
+    }
 
   /** Idempotently register a planner strategy on a live session —
     * covers sessions not built through `GraftSession` (whose

@@ -21,24 +21,6 @@ class FixpointSpec extends SparkTestBase {
     assert(empty === 0L)
   }
 
-  test("scratch materializes its result before deleting the dir, and deletes it on a throw") {
-    val prefix = "graft-fixpoint-spec"
-    val before = scratchDirs(prefix)
-    val out = Fixpoint.scratch(spark, prefix, Fixpoint.parquetCheckpointer) { checkpoint =>
-      checkpoint(spark.range(5).toDF("id"), 1)
-    }
-    assert(scratchDirs(prefix) === before)
-    assert(out.collect().map(_.getLong(0)).sorted.toSeq === (0L until 5L))
-    val e = intercept[IllegalStateException] {
-      Fixpoint.scratch(spark, prefix, Fixpoint.parquetCheckpointer) { checkpoint =>
-        checkpoint(spark.range(5).toDF("id"), 1)
-        throw new IllegalStateException("cap")
-      }
-    }
-    assert(e.getMessage === "cap")
-    assert(scratchDirs(prefix) === before)
-  }
-
   test("iterate: a loop still going at its cap throws, naming the loop") {
     var rounds = 0
     val e = intercept[IllegalArgumentException] {
@@ -90,15 +72,13 @@ class FixpointSpec extends SparkTestBase {
   }
 
   test("iterate: the driver runs no job of its own") {
-    withoutAqe {
-      // each round cuts and counts one frame: one job a round, none more
-      val (rows, jobs) = jobsOf(Fixpoint.iterate("spec jobs", 10, (0L, true)) { (total, r) =>
-        val (_, n) = Fixpoint.countedCut("graft_fixpoint_spec_jobs", r, spark.range(r).toDF("id"))
-        (total + n, r < 4)
-      })
-      assert(rows === 10L)
-      assert(jobs === 4)
-    }
+    // each round cuts and counts one frame: one job a round, none more
+    val (rows, jobs) = jobsOf(Fixpoint.iterate("spec jobs", 10, (0L, true)) { (total, r) =>
+      val (_, n) = Fixpoint.countedCut("graft_fixpoint_spec_jobs", r, spark.range(r).toDF("id"))
+      (total + n, r < 4)
+    })
+    assert(rows === 10L)
+    assert(jobs === 4)
   }
 
   /** Hop distance from node 0 along the path 0 → 1 → … → `n`, one hop a
@@ -123,33 +103,31 @@ class FixpointSpec extends SparkTestBase {
     assert(e.getMessage.contains("spec path did not converge within 4 rounds"))
   }
 
-  /** Runs `body` with adaptive execution and size-based broadcasts off.
-    * Adaptive execution submits each exchange as a job of its own and
-    * picks join strategies from runtime sizes, which makes job counts
-    * vary by a job from run to run; without it, every exchange runs
-    * inside the job that reads it.
-    */
-  private def withoutAqe[T](body: => T): T = {
-    val conf = spark.conf
-    val settings = Seq("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = settings.map { case (k, _) => k -> conf.getOption(k) }
-    settings.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  test("a round's cut carries its observed row count, so relax's estimates stay linear") {
+    val (cut, n) = Fixpoint.countedCut("graft_fixpoint_spec_stats", 1, spark.range(37).toDF("id"))
+    val stats = cut.queryExecution.optimizedPlan.stats
+    assert(n === 37L)
+    assert(stats.rowCount === Some(BigInt(37)))
+    // an 8-byte row header and one long a row
+    assert(stats.sizeInBytes === BigInt(37 * 16))
+    // 15 labels of two longs: unstamped, the 14 rounds' joins compound the
+    // estimate to thousands of digits
+    val labels = pathDepth(14, 20).queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(labels <= BigInt(2 * 15 * 24))
   }
 
-  test("relax: a round costs one job beyond its step's own") {
-    // the checkpoint that also counts the frontier is a round's only job
-    // besides the step's broadcast
-    withoutAqe {
-      def perRound(viaEdges: Boolean): Int = {
-        val Seq(a, b) = Seq(6L, 7L).map(n => jobsOf(pathDepth(n, 10, viaEdges).count())._2)
-        b - a
-      }
-      assert(perRound(viaEdges = false) === 1)
-      assert(perRound(viaEdges = true) === 2)
+  test("relax: a round costs one job beyond its exchanges', with AQE on") {
+    // with adaptive execution each exchange is a job of its own: the
+    // improvement join broadcasts the stamped labels, the step may
+    // broadcast its edges, and the cut that counts the frontier is the
+    // one job more. One more hop adds one round's jobs, three more add
+    // three rounds'
+    def extraJobs(viaEdges: Boolean): (Int, Int) = {
+      val Seq(a, b, c) = Seq(6L, 7L, 10L).map(n => jobsOf(pathDepth(n, 20, viaEdges).count())._2)
+      (b - a, c - b)
     }
+    assert(extraJobs(viaEdges = false) === ((2, 6)))
+    assert(extraJobs(viaEdges = true) === ((3, 9)))
   }
 
   test("relax: a better that is never true is a first-visit wave") {

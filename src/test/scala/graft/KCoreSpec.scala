@@ -39,12 +39,11 @@ class KCoreSpec extends SparkTestBase {
 
   test("converged peel fails loudly at its round cap and cleans up") {
     // one round removes node 6 only; the tendril needs a second
-    val (dirs, cached) = (scratchDirs("graft-kcore"), cachedRdds)
+    val cached = cachedRdds
     val e = intercept[IllegalArgumentException] {
       KCore.peelConverged(fixture, k = 2, maxRounds = 1)
     }
     assert(e.getMessage.contains("k-core peel did not converge"))
-    assert(scratchDirs("graft-kcore") === dirs)
     assert((cachedRdds -- cached).isEmpty)
   }
 

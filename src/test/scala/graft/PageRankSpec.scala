@@ -71,15 +71,14 @@ class PageRankSpec extends SparkTestBase {
     assert(out.values.toSet === Set(1000000L))
   }
 
-  test("converged face fails loudly when maxIters is too low") {
+  test("converged face fails loudly when maxRounds is too low") {
     val e = edges(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 1L)
-    val (dirs, cached) = (scratchDirs("graft-pagerank-conv"), cachedRdds)
+    val cached = cachedRdds
     val ex = intercept[IllegalArgumentException] {
-      PageRank.runConverged(e, tolS = 0L, maxIters = 1)
+      PageRank.runConverged(e, tolS = 0L, maxRounds = 1)
     }
-    assert(ex.getMessage.contains("did not converge"))
-    // the throw still releases the call's caches and scratch dir
-    assert(scratchDirs("graft-pagerank-conv") === dirs)
+    assert(ex.getMessage.contains("PageRank did not converge within 1 rounds; raise maxRounds"))
+    // the throw still releases the call's caches
     assert((cachedRdds -- cached).isEmpty)
   }
 

@@ -46,11 +46,6 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
 
-  /** Names under `java.io.tmpdir` that start with `prefix`. */
-  def scratchDirs(prefix: String): Set[String] =
-    new java.io.File(System.getProperty("java.io.tmpdir")).list()
-      .filter(_.startsWith(prefix)).toSet
-
   /** Ids of the persisted RDDs that are not checkpoints: the computed
     * partitions of cached Datasets, without the local checkpoints a
     * loop's rounds leave for the context cleaner.
