@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.graftshim.CoreShim
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
@@ -57,10 +58,13 @@ object Profile extends AdaptiveSparkPlanHelper {
   }
 
   /** One measured region. `operators` (slowest first) and `fingerprint`
-    * describe the last SQL execution the region ran.
+    * describe the last SQL execution the region ran. `compiles` counts
+    * the generated classes Janino compiled during the region, cache
+    * misses of Spark's codegen cache; the counter is JVM-global, so
+    * work that runs concurrently with the region is included.
     */
   final case class Sample(wallS: Double, jobs: Int, inJobS: Double, stages: Seq[Stage],
-      operators: Seq[Operator], fingerprint: Fingerprint) {
+      operators: Seq[Operator], fingerprint: Fingerprint, compiles: Long) {
     def tasks: Int = stages.map(_.tasks).sum
     def taskCpuS: Double = stages.map(_.cpuS).sum
     def gcS: Double = stages.map(_.gcS).sum
@@ -97,10 +101,10 @@ object Profile extends AdaptiveSparkPlanHelper {
       lastPlan.set(qe.executedPlan)
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
 
-    def sample(wallS: Double): Sample = {
+    def sample(wallS: Double, compiles: Long): Sample = {
       val nodes = Option(lastPlan.get).toSeq.flatMap(p => collectWithSubqueries(p) { case n => n })
       Sample(wallS, jobs.get, inJobMs.get / 1e3, stages.asScala.toSeq,
-        operatorTimes(nodes), fingerprint(nodes))
+        operatorTimes(nodes), fingerprint(nodes), compiles)
     }
   }
 
@@ -117,16 +121,20 @@ object Profile extends AdaptiveSparkPlanHelper {
     sc.addSparkListener(rec)
     spark.listenerManager.register(rec)
     try {
+      val c0 = compiledClasses
       val t0 = System.nanoTime()
       val out = body
       val wallS = (System.nanoTime() - t0) / 1e9
+      val compiles = compiledClasses - c0
       CoreShim.drainListenerBus(sc)
-      (out, rec.sample(wallS))
+      (out, rec.sample(wallS, compiles))
     } finally {
       spark.listenerManager.unregister(rec)
       sc.removeSparkListener(rec)
     }
   }
+
+  private def compiledClasses: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Runs a face through the noop sink, which executes every projection;
     * a count() would let Catalyst prune unreferenced expressions and
@@ -189,7 +197,7 @@ object Profile extends AdaptiveSparkPlanHelper {
       runFace(spark, dir, face)
       System.gc()
       val (_, s) = measure(spark)(runFace(spark, dir, face))
-      println(s"[profile] $name wall=${fmt(s.wallS)}s jobs=${s.jobs} " +
+      println(s"[profile] $name wall=${fmt(s.wallS)}s jobs=${s.jobs} compiles=${s.compiles} " +
         s"in-jobs=${fmt(s.inJobS)}s stages=${s.stages.size} tasks=${s.tasks} " +
         s"cpu=${fmt(s.taskCpuS)}s gc=${fmt(s.gcS)}s shuffle-read=${mb(s.shuffleReadBytes)} " +
         s"shuffle-write=${mb(s.shuffleWriteBytes)} spill=${mb(s.spillBytes)}")

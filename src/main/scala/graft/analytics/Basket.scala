@@ -63,11 +63,11 @@ object Basket {
   }
 
   /** The baskets [[frequentItems]]' hot-basket cap EXCLUDES, with their
-    * frequent-item sizes — the no-silent-caps audit face of the family
-    * (VERDICT r10): the cap is a deliberate, deterministic drop, and
-    * this is the one query that makes the drop visible (count it, alert
-    * on it, or raise the cap). Same two shuffles as the prune/cap chain
-    * itself; empty when no basket exceeds the cap.
+    * frequent-item sizes — the no-silent-caps audit face of the family:
+    * the cap is a deliberate, deterministic drop, and this is the one
+    * query that makes the drop visible (count it, alert on it, or raise
+    * the cap). Same two shuffles as the prune/cap chain itself; empty
+    * when no basket exceeds the cap.
     */
   def cappedBaskets(
       baskets: DataFrame, basketCol: String, itemCol: String,
@@ -122,10 +122,10 @@ object Basket {
   /** [[associationRules]] over a precomputed (ideally persisted)
     * [[frequentItems]] stage — everything (supports, pairs, N) derives
     * from the one `fi` scan. Item supports are RECOUNTED over the
-    * capped basket set (ADVICE r10): the pre-cap `item_supp` carried by
-    * `fi` mixes statistical bases with pair_supp/n_baskets whenever the
-    * hot-basket cap actually excludes baskets, biasing confidence and
-    * lift; here all four terms share the one capped base.
+    * capped basket set: the pre-cap `item_supp` carried by `fi` mixes
+    * statistical bases with pair_supp/n_baskets whenever the hot-basket
+    * cap actually excludes baskets, biasing confidence and lift; here
+    * all four terms share the one capped base.
     */
   def associationRules(fi: DataFrame, minSupport: Long): DataFrame = {
     // fi rows are distinct (bk, item), so count(*) per item IS the

@@ -43,14 +43,12 @@ object Coverages {
   /** Merged-interval (island) stats per key group: island count and
     * total covered length (sum over islands of max(end)−min(start)).
     *
-    * r14: ONE partial-aggregated collect per group + the native
-    * [[graft.expressions.IslandStats]] scan replace the
-    * sort + running-max window + aggregate chain — same exchange keys
-    * and bytes, no per-partition full-data sort, no WindowExec per-row
-    * machinery (measured ~40 s of the 52 s final-stage CPU of
-    * q_domain_book_coverage at sf0.1). Values identical: the expression
-    * sorts each group by (start, end) and applies the same telescoping
-    * contributions (CoveragesSpec/PropertySpec brute-force pins).
+    * One partial-aggregated collect per group feeds the native
+    * [[graft.expressions.IslandStats]] scan: one exchange on the keys,
+    * no per-partition full-data sort and no WindowExec. The expression
+    * sorts each group by (start, end) and sums the telescoping
+    * contributions of a running-max sweep (CoveragesSpec/PropertySpec
+    * brute-force pins).
     */
   def islandStats(df: DataFrame, keys: Seq[String], startCol: String,
       endCol: String, nCol: String, lenCol: String): DataFrame =

@@ -13,6 +13,16 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Cap of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). Invariant: the
+    * generated-class working set of one textreuse build must fit the
+    * cache, or every build compiles, class-loads and JIT-warms its code
+    * again. One perfbench `etl_build` pass compiles about 250 classes,
+    * and Guava splits the cap across its 4 segments, each an LRU of
+    * cap / 4; 1000 leaves each segment about 4x a build's share.
+    */
+  val CodegenCacheEntries: Int = 1000
+
   /** Config shared by local test/bench sessions and (unchanged) a real
     * cluster deployment — only master/memory differ at scale.
     */
@@ -31,6 +41,9 @@ object GraftSession {
       // graft planner strategies (native as-of join, …) — see graft.plans
       .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
       .config("spark.ui.enabled", "false")
+      // static: it must be on the builder before the session exists; a
+      // cluster deployment passes it through SparkConf to every executor
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   /** @param hive enable a Hive metastore-backed external catalog
     *   (reference: spark_utils.py:34 `enableHiveSupport()`), so bucketed

@@ -316,8 +316,8 @@ object Profiler {
   def giniOfGroups(df: DataFrame, groupCol: String): DataFrame = {
     val sizes = df.groupBy(col(groupCol)).agg(count(lit(1)).as("x"))
     // rank over group masses via the two-level bucketed rank
-    // (core.Ranks) — the r13 shape was an unpartitioned row_number
-    // window, one task holding every group (VERDICT r13 item 2)
+    // (core.Ranks): an unpartitioned row_number window would hold every
+    // group in one task
     Ranks.rowNumber(sizes, Seq(col("x"), col(groupCol)), out = "i")
       .select(col("x"), col("i"))
       .agg(count(lit(1)).as("n_groups"), sum(col("x")).as("total"),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 
-import graft.core.{AssetDag, Catalog, Dag}
+import graft.core.{AssetDag, Catalog, Dag, GraftSession}
 import graft.textreuse.TextReuseAssets
 
 /** The declarative asset-DAG materializer (VERDICT r10 worklist #1): the
@@ -312,6 +312,22 @@ class DagSpec extends SparkTestBase {
     assert(cat.currentVersion("textreuses").get === vTrs)
     // deterministic builders → the refreshed cone reproduces the data
     assert(cat.get("clustered_defrag_pieces").count() === nodes)
+  }
+
+  test("a warm rebuild of the textreuse graph compiles no generated code: " +
+      "the chain's classes fit the codegen cache") {
+    val raw = rawHits()
+    val Seq(first, second) = Seq.fill(2) {
+      val dag = new AssetDag(newCatalog())
+      dag.asset("raw_textreuses")(_ => raw)
+      TextReuseAssets.register(dag, clusterMaxIter = 4)
+    }
+    first.materialize()
+    val (built, s) = Profile.measure(spark)(second.materialize())
+    assert(built.size === 11)
+    assert(s.compiles === 0L,
+      s"the warm build compiled ${s.compiles} classes; the engine's working set " +
+        s"outgrew spark.sql.codegen.cache.maxEntries = ${GraftSession.CodegenCacheEntries}")
   }
 
   test("every asset of the textreuse graph publishes a schema file that " +

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, col, row_number}
+import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
 
 /** The measurement harness: [[Profile.measure]]'s counters and plan
   * fingerprint, [[Profile.run]] end to end, and its two callers' own
@@ -24,6 +24,14 @@ class ProfileSpec extends SparkTestBase {
     assert(s.shuffleWriteBytes > 0L && s.shuffleReadBytes > 0L)
     assert(s.taskCpuS > 0.0)
     assert(s.inJobS > 0.0)
+  }
+
+  test("measure counts generated-class compiles: a new literal compiles, the same plan again does not") {
+    // a literal inlined into generated code makes the class new to this JVM
+    val df = spark.range(100).select((col("id") * lit(System.nanoTime())).as("x"))
+    def compiles: Long = Profile.measure(spark)(Profile.runFace(spark, dir, (_, _) => df))._2.compiles
+    assert(compiles > 0L)
+    assert(compiles == 0L)
   }
 
   private def fingerprint(df: DataFrame): Profile.Fingerprint =

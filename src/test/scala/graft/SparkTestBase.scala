@@ -8,6 +8,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.GraftSession
+
 /** Shared local SparkSession for all specs (getOrCreate reuses one JVM
   * session across suites; Test/fork uses a single forked JVM).
   */
@@ -21,6 +23,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     // unreadable without this flag (TestdataSmokeSpec reads the real files)
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toString)
     .getOrCreate()
 
   def sc = spark.sparkContext
